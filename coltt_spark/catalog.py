@@ -30,19 +30,19 @@ import math
 import os
 import re
 import shutil
-from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import numpy as np
 
 from coltt_spark.filters import compile_filter, validate_delete_key
+from coltt_spark.functions.memo import memo_columns
 from coltt_spark.functions.quantization import dequantize, quantize, quantize_np
-from coltt_spark.functions.vector import lit_double_array, score as score_expr, vector_distance
+from coltt_spark.functions.vector import score as score_expr, vector_distance
 from coltt_spark.operators.search import _paginate_topk, multi_vector_search
 from coltt_spark.schema import SPARK_TYPES as _SPARK_META
 from coltt_spark.schema import _NULL_DEFAULT, IndexDesign, validate_metadata, validate_vector
@@ -84,6 +84,34 @@ def _link_parts(src: str, dst: str) -> None:
             os.link(s, d)
         except OSError:
             shutil.copy2(s, d)
+
+
+@dataclass(frozen=True)
+class _Packed:
+    """The packed index that serves one read (:meth:`Collection._route`)
+    — every packed read is "score this list of files". ``path`` is a
+    blocks-layout index dir: the scan lists every part file and fails
+    loudly on an empty dir. An ivf/ivfpq index gives its probed lists'
+    ``files`` instead, with ``probes`` (query id → probed lists,
+    nearest first) and ``file_query_ids`` (file → the queries that
+    probe its list, the batch contract). ``adc`` marks PQ code files
+    (ivfpq), ``refine`` their exact-rerank depth (0 = ADC-only)."""
+
+    path: str | None = None
+    ivf_dir: str | None = None
+    files: list[str] | None = None
+    probes: dict[int, list[int]] | None = None
+    file_query_ids: dict[str, list[int]] | None = None
+    adc: bool = False
+    refine: int = 0
+
+
+def _top_per(df: DataFrame, key: str, n: int, pk: str) -> DataFrame:
+    """Each ``key`` value's ``n`` nearest rows by (dist, pk) — ONE
+    window partitioned by ``key`` (a query id or a group value): a
+    keyed shuffle of few rows, never a global sort."""
+    w = Window.partitionBy(key).orderBy(F.col("dist").asc(), F.col(pk).asc())
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")
 
 
 @dataclass
@@ -469,8 +497,6 @@ class Collection:
         m.next_commit += 1 << 45  # block above any partitionId<<33 offset
         pk = design.primary_key
         if dedupe_batch:
-            from pyspark.sql import Window
-
             w = Window.partitionBy(pk).orderBy(F.col(_COMMIT).desc())
             prepared = (
                 prepared.withColumn("_rn", F.row_number().over(w))
@@ -534,12 +560,12 @@ class Collection:
     ) -> DataFrame:
         """Filtered FLAT KNN over the collection (edge Search path).
 
-        ``layout="blocks"`` collections serve searches — filtered or
-        not — from the packed block index written at flush: one BLAS
-        matvec per block file through the node-local mmap spool, k
-        rows per block moved. A metadata filter is evaluated against
-        the per-block packed payload (which carries every metadata
-        column) right before the distance kernel, the same
+        A clean packed collection serves searches — filtered or not —
+        from its index (:meth:`_route`): one BLAS matvec per index
+        file through the node-local mmap spool, k rows per file moved.
+        A metadata filter is evaluated against the per-file packed
+        payload (which carries every metadata column) right before the
+        distance kernel, the same
         scan-the-packed-store-restricted-to-candidates shape as the
         reference's filtered search
         (``edge/none_vectorstore.go:182-253``). Falls back to the row
@@ -557,141 +583,24 @@ class Collection:
         the ADC approximation directly (no vector access at all —
         the M-bytes-per-row cost profile end to end).
         """
-        m = self.manifest
-        qv = validate_vector(m.dim, query)
-        vcols = self._vector_cols()
-        vc = vector_field or (vcols[0] if len(vcols) == 1 else None)
-        if vc is None or vc not in vcols:
-            raise ValueError(f"vector_field must be one of {vcols}")
-        if (
-            m.layout == "blocks"
-            and not self._dirty
-            and os.path.isdir(self._blocks_dir(vc))
-        ):
-            return self._search_blocks(
-                qv, vc, limit=limit, offset=offset, filter_ast=filter_ast
-            )
-        if m.layout == "ivf" and not self._dirty and self._ivf_ready(vc):
-            return self._search_ivf(
-                qv, vc, limit=limit, offset=offset, filter_ast=filter_ast,
-                nprobe=nprobe,
-            )
-        if m.layout == "ivfpq" and not self._dirty and self._ivf_ready(vc):
-            return self._search_ivfpq(
-                qv, vc, limit=limit, offset=offset, filter_ast=filter_ast,
-                nprobe=nprobe, refine=refine,
-            )
-        df = self._dequantized()
-        if filter_ast is not None:
-            df = df.filter(compile_filter(df, filter_ast))
-        if m.distance == "cosine":
-            # stored vectors are unit; |1 - dot| on a normalized query
-            qv = self._normalize_query(qv)
-            dist = F.abs(
-                F.lit(1.0)
-                - F.aggregate(
-                    F.zip_with(
-                        F.col(vc).cast("array<double>"),
-                        lit_double_array(qv),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
+        vc, qvs, src = self._route(vector_field, {0: query}, nprobe=nprobe, refine=refine)
+        qv, pk, n = qvs[0], self.manifest.index_design.primary_key, offset + limit
+        if src is None:
+            scored = self._scored_rows(vc, qv, filter_ast)
         else:
-            dist = vector_distance(m.distance, F.col(vc), qv)
-        scored = df.withColumn("dist", dist)
-        top = _paginate_topk(scored, limit, offset, m.index_design.primary_key)
-        out = top.withColumn("score", score_expr(m.distance, F.col("dist"))).drop(_COMMIT)
-        if m.layout in ("blocks", "ivf", "ivfpq"):
-            # keep the schema identical to the fast path regardless of
-            # which path served the call (dirty state / filter present):
-            # index-served results never carry the stored vector columns
-            out = out.drop(*vcols)
-        return out
-
-    @staticmethod
-    def _normalize_query(qv: list[float]) -> list[float]:
-        """Unit-normalize a cosine query in float64 (zero-norm guard).
-
-        The norm is a SEQUENTIAL left-to-right sum (not numpy pairwise)
-        so a SQL oracle's ``sqrt(list_dot_product(q, q))`` — also a
-        sequential fold — reproduces it bit-for-bit; that exactness is
-        what lets the quantized-KNN oracles replay f16/bf16/f8 rounding
-        on identical inputs."""
-        acc = 0.0
-        for x in qv:
-            acc += float(x) * float(x)
-        n = math.sqrt(acc)
-        return [float(x) / n for x in qv] if n else [float(x) for x in qv]
-
-    def _block_scan_plumbing(self, filter_ast):
-        """Shared plumbing for every packed-index scan: the payload
-        schema (all metadata columns), the compiled block-local mask
-        (or None), and the tombstones argument (or None when no delta
-        has been flushed). One definition so the single, grouped, and
-        batched paths can never drift apart."""
-        payload_schema = T.StructType(
-            [
-                f for f in self._storage_schema()
-                if f.name not in self._vector_cols() and f.name != _COMMIT
-            ]
-        )
-        payload_filter = None
-        if filter_ast is not None:
-            from coltt_spark.filters import compile_filter_mask
-
-            payload_filter = compile_filter_mask(payload_schema, filter_ast)
-        tomb = self._tombstones_dir()
-        return payload_schema, payload_filter, (tomb if os.path.isdir(tomb) else None)
-
-    def _search_blocks(
-        self,
-        qv: list[float],
-        vc: str,
-        *,
-        limit: int,
-        offset: int,
-        filter_ast: dict[str, Any] | None = None,
-    ) -> DataFrame:
-        """Serve a KNN from the written block index: top-(offset+limit)
-        ``(_commit_id, dist)`` from the block scan (only file paths and
-        k rows per task cross any boundary), then a broadcast join of
-        those ≤ offset+limit winners back to the snapshot for metadata
-        — and the winners come back WITH their metadata (packed as a
-        per-block payload), so the whole search is ONE lazy job: scan
-        → per-file top-k rows → TakeOrderedAndProject merge. Results
-        carry metadata + dist + score but not the stored vector, like
-        the reference's search response. A ``filter_ast`` compiles to
-        a vectorized payload mask evaluated block-locally before the
-        top-k (filters.compile_filter_mask) — the fast layout serves
-        filtered searches too."""
-        from coltt_spark.operators.blocks import block_index_scan
-
-        m = self.manifest
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-        payload_schema, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-        # cosine collections normalize at write, so the packed scan
-        # scores |1 - dot| like the row path (stored norms are NOT
-        # re-applied — quantized rows would otherwise drift from the
-        # row path's contract)
-        local = block_index_scan(
-            self.spark,
-            self._blocks_dir(vc),
-            qv,
-            dim=m.dim,
-            k=offset + limit,
-            distance="cosine_unit" if m.distance == "cosine" else m.distance,
-            dtype=m.block_dtype,
-            payload_schema=payload_schema,
-            id_alias=_COMMIT,  # payload may carry a user column named "id"
-            payload_filter=payload_filter,
-            tombstones=tomb,
-        )
-        paged = _paginate_topk(local.drop(_COMMIT), limit, offset, m.index_design.primary_key)
-        return paged.withColumn("score", score_expr(m.distance, F.col("dist")))
+            scored = self._packed_scan(src, qv, filter_ast, k=max(src.refine, n))
+            if src.adc:
+                # ADC funnel cut: deterministic (adc, pk) total order —
+                # pk is unique, so orderBy().limit() (TakeOrderedAndProject,
+                # no global window) is exactly the top-``refine`` the SQL
+                # oracle's row_number() replay produces. Pagination past
+                # the refine budget widens the cut (refine is a floor, not
+                # a truncation of the caller's limit)
+                scored = self._adc_serve(
+                    src, vc, scored, qv,
+                    lambda df: _paginate_topk(df, max(src.refine, n), 0, pk),
+                )
+        return self._finish(_paginate_topk(scored, limit, offset, pk))
 
     def search_grouped(
         self,
@@ -710,11 +619,11 @@ class Collection:
         return the global top-``limit`` of the survivors (so no group
         dominates the page).
 
-        Scale shape: on a clean ``layout="blocks"`` collection the
-        per-GROUP top-``per_group`` is taken inside each packed block
+        Scale shape: on a clean ``blocks`` or ``ivf`` collection the
+        per-GROUP top-``per_group`` is taken inside each packed file
         (group values ride in the payload — one matvec per file, ≤
         groups·per_group rows out per file), then one window keyed by
-        the group merges block-local winners. Other layouts/states
+        the group merges file-local winners. Other layouts/states
         scan the row view: distance + ONE window partitioned by the
         group key (a keyed shuffle — never a global sort; group keys
         are metadata values, far coarser than rows), then a
@@ -730,65 +639,18 @@ class Collection:
         exact semantics applied to the probed subset. Use it when
         group coverage matters less than latency at very large
         ``n_centroids``."""
-        from pyspark.sql import Window
-
-        m = self.manifest
-        qv = validate_vector(m.dim, qv)
-        vcols = self._vector_cols()
-        vc = vector_field or (vcols[0] if len(vcols) == 1 else None)
-        if vc is None or vc not in vcols:
-            raise ValueError(f"vector_field must be one of {vcols}")
-        pk = m.index_design.primary_key
-        meta_names = [
-            f.name for f in self._storage_schema()
-            if f.name not in vcols and f.name != _COMMIT
-        ]
-        if group_by not in meta_names:
+        if group_by not in self._payload_schema().names:
             raise KeyError(f"group_by references unknown metadata column {group_by!r}")
-        if (
-            m.layout == "blocks"
-            and not self._dirty
-            and os.path.isdir(self._blocks_dir(vc))
-        ):
-            return self._search_grouped_blocks(
-                qv, vc, group_by,
-                limit=limit, per_group=per_group, filter_ast=filter_ast,
-            )
-        if m.layout == "ivf" and not self._dirty and self._ivf_ready(vc):
-            from coltt_spark.operators.blocks import ivf_files, ivf_probe_centroids
-
-            if nprobe is None:
-                probes: Sequence[int] = range(m.ivf_centroids)
-            else:
-                Cn = np.load(os.path.join(self._ivf_dir(vc), "centroids.npy"))
-                probes = ivf_probe_centroids(Cn, qv, nprobe)
-            return self._search_grouped_blocks(
-                qv, vc, group_by,
-                limit=limit, per_group=per_group, filter_ast=filter_ast,
-                files=ivf_files(
-                    os.path.join(self._ivf_dir(vc), "blocks"), probes
-                ),
-            )
-        df = self._dequantized()
-        if filter_ast is not None:
-            df = df.filter(compile_filter(df, filter_ast))
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-            dist = vector_distance("cosine_unit", F.col(vc), qv)
+        vc, qvs, src = self._route(vector_field, {0: qv}, nprobe=nprobe, exact=True)
+        if src is None:
+            scored = self._scored_rows(vc, qvs[0], filter_ast)
         else:
-            dist = vector_distance(m.distance, F.col(vc), qv)
-        scored = df.withColumn("dist", dist)
-        w = Window.partitionBy(group_by).orderBy(F.col("dist").asc(), F.col(pk).asc())
-        ranked = (
-            scored.withColumn("_gr", F.row_number().over(w))
-            .filter(F.col("_gr") <= per_group)
-            .drop("_gr")
-        )
-        top = ranked.orderBy(F.col("dist").asc(), F.col(pk).asc()).limit(limit)
-        out = top.withColumn("score", score_expr(m.distance, F.col("dist"))).drop(_COMMIT)
-        if m.layout in ("blocks", "ivf", "ivfpq"):
-            out = out.drop(*vcols)
-        return out
+            scored = self._packed_scan(
+                src, qvs[0], filter_ast, group_col=group_by, per_group=per_group
+            )
+        pk = self.manifest.index_design.primary_key
+        ranked = _top_per(scored, group_by, per_group, pk)
+        return self._finish(_paginate_topk(ranked, limit, 0, pk))
 
     def search_radius(
         self,
@@ -806,83 +668,27 @@ class Collection:
         collections score ``|1 - dot|`` on normalize-at-write vectors
         like every other read path.
 
-        Clean packed layouts serve the radius from the block index:
-        one matvec per file through the spool, only the in-ball rows
-        move. By DEFAULT an ivf collection scans EVERY inverted
-        list's files — a probe subset would silently miss qualifying
-        rows, so radius stays exact and the win is the packed scan,
-        not pruning. Passing ``nprobe`` opts into the APPROXIMATE
-        variant: only the query's ``nprobe`` nearest lists are
-        scanned, so in-ball rows living in unprobed lists are missed
-        — the result is exactly the exact semantics applied to the
-        probed subset (every returned row still genuinely satisfies
-        ``dist ≤ radius``). Use it when the ball is known to be small
-        relative to the list granularity at very large
+        Clean ``blocks`` and ``ivf`` collections serve the radius from
+        the packed index: one matvec per file through the spool, only
+        the in-ball rows move. By DEFAULT an ivf collection scans EVERY
+        inverted list's files — a probe subset would silently miss
+        qualifying rows, so radius stays exact and the win is the
+        packed scan, not pruning. Passing ``nprobe`` opts into the
+        APPROXIMATE variant: only the query's ``nprobe`` nearest lists
+        are scanned, so in-ball rows living in unprobed lists are
+        missed — the result is exactly the exact semantics applied to
+        the probed subset (every returned row still genuinely
+        satisfies ``dist ≤ radius``). Use it when the ball is known to
+        be small relative to the list granularity at very large
         ``n_centroids``."""
-        m = self.manifest
-        qv = validate_vector(m.dim, qv)
-        vcols = self._vector_cols()
-        vc = vector_field or (vcols[0] if len(vcols) == 1 else None)
-        if vc is None or vc not in vcols:
-            raise ValueError(f"vector_field must be one of {vcols}")
-        packed_dir = None
-        if not self._dirty:
-            if m.layout == "blocks" and os.path.isdir(self._blocks_dir(vc)):
-                packed_dir, packed_files = self._blocks_dir(vc), None
-            elif m.layout == "ivf" and self._ivf_ready(vc):
-                from coltt_spark.operators.blocks import ivf_files, ivf_probe_centroids
-
-                if nprobe is None:
-                    probes: Sequence[int] = range(m.ivf_centroids)
-                else:
-                    Cn = np.load(os.path.join(self._ivf_dir(vc), "centroids.npy"))
-                    probes = ivf_probe_centroids(Cn, qv, nprobe)
-                packed_dir = ""
-                packed_files = ivf_files(
-                    os.path.join(self._ivf_dir(vc), "blocks"), probes
-                )
-        if packed_dir is not None:
-            from coltt_spark.operators.blocks import block_index_scan
-
-            if m.distance == "cosine":
-                qv = self._normalize_query(qv)
-            payload_schema, payload_filter, tomb = self._block_scan_plumbing(
-                filter_ast
+        vc, qvs, src = self._route(vector_field, {0: qv}, nprobe=nprobe, exact=True)
+        if src is None:
+            scored = self._scored_rows(vc, qvs[0], filter_ast).filter(
+                F.col("dist") <= F.lit(float(radius))
             )
-            local = block_index_scan(
-                self.spark,
-                packed_dir or None,
-                qv,
-                dim=m.dim,
-                distance="cosine_unit" if m.distance == "cosine" else m.distance,
-                dtype=m.block_dtype,
-                payload_schema=payload_schema,
-                id_alias=_COMMIT,
-                payload_filter=payload_filter,
-                tombstones=tomb,
-                files=packed_files,
-                radius=float(radius),
-            )
-            return local.drop(_COMMIT).withColumn(
-                "score", score_expr(m.distance, F.col("dist"))
-            )
-        df = self._dequantized()
-        if filter_ast is not None:
-            df = df.filter(compile_filter(df, filter_ast))
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-            dist = vector_distance("cosine_unit", F.col(vc), qv)
         else:
-            dist = vector_distance(m.distance, F.col(vc), qv)
-        out = (
-            df.withColumn("dist", dist)
-            .filter(F.col("dist") <= F.lit(float(radius)))
-            .withColumn("score", score_expr(m.distance, F.col("dist")))
-            .drop(_COMMIT)
-        )
-        if m.layout in ("blocks", "ivf", "ivfpq"):
-            out = out.drop(*vcols)
-        return out
+            scored = self._packed_scan(src, qvs[0], filter_ast, radius=float(radius))
+        return self._finish(scored)
 
     def search_hybrid_text(
         self,
@@ -996,60 +802,6 @@ class Collection:
             F.round("rrf_score", 4).alias("rrf_score"),
         )
 
-    def _search_grouped_blocks(
-        self,
-        qv: list[float],
-        vc: str,
-        group_by: str,
-        *,
-        limit: int,
-        per_group: int,
-        filter_ast: dict[str, Any] | None,
-        files: list[str] | None = None,
-    ) -> DataFrame:
-        """Grouped KNN from the packed index: each file emits its
-        per-group top-``per_group`` (group values decoded from the
-        packed payload, filter applied as the usual block-local mask),
-        one window keyed by the group merges file-local winners, then
-        a TakeOrdered final cut — the block layout's cost shape held
-        under diversification. ``files`` points the scan at an ivf
-        layout's per-centroid block files (all lists — grouped is a
-        set contract, see search_grouped)."""
-        from pyspark.sql import Window
-
-        from coltt_spark.operators.blocks import block_index_scan
-
-        m = self.manifest
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-        payload_schema, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-        local = block_index_scan(
-            self.spark,
-            None if files is not None else self._blocks_dir(vc),
-            qv,
-            files=files,
-            dim=m.dim,
-            distance="cosine_unit" if m.distance == "cosine" else m.distance,
-            dtype=m.block_dtype,
-            payload_schema=payload_schema,
-            id_alias=_COMMIT,
-            payload_filter=payload_filter,
-            tombstones=tomb,
-            group_col=group_by,
-            per_group=per_group,
-        )
-        pk = m.index_design.primary_key
-        w = Window.partitionBy(group_by).orderBy(F.col("dist").asc(), F.col(pk).asc())
-        ranked = (
-            local.withColumn("_gr", F.row_number().over(w))
-            .filter(F.col("_gr") <= per_group)
-            .drop("_gr")
-        )
-        top = ranked.orderBy(F.col("dist").asc(), F.col(pk).asc()).limit(limit)
-        return top.withColumn("score", score_expr(m.distance, F.col("dist"))).drop(
-            _COMMIT
-        )
-
     def search_batch(
         self,
         queries: dict[int, list[float]],
@@ -1063,186 +815,343 @@ class Collection:
         """Bulk KNN: answer all B queries in ONE job — the
         embed-a-batch / answer-a-batch serving shape whose per-query
         cost amortizes toward memory bandwidth (bench: ~0.02 s/query
-        at B=64 over 1M×64, vs ~0.3 s single). Returns (query_id,
-        metadata…, dist, score), top-``limit`` per query.
+        at B=64 over 1M×64, vs ~0.3 s single). Returns (metadata…,
+        query_id, dist, score), top-``limit`` per query.
 
-        On a clean ``layout="blocks"`` collection this is one
-        ``X @ Qᵀ`` BLAS matmul per block file through the node-local
-        spool; only B·k winner rows leave the scan, and metadata comes
-        from a broadcast join of those winners back to the
-        (vector-pruned) snapshot. A clean ``layout="ivf"`` collection
-        answers the batch with one broadcast-probes join over the
-        union of probed partitions (each query reranks only its own
-        ``nprobe`` lists; metadata rides in the index). Other
-        layouts/states fall back to one exact scan with the query set
-        broadcast (same semantics, row-layout cost).
+        A clean packed collection answers the batch with one
+        ``X @ Qᵀ`` BLAS matmul per index file through the node-local
+        spool; on ivf/ivfpq layouts the files are the union of every
+        query's probed lists and each file is scored only for the
+        queries that probe its list (``file_query_ids``), so every
+        query reranks exactly its own ``nprobe`` lists. Only B·k
+        winner rows leave the scan; metadata comes from a broadcast
+        join of those winners back to the (vector-pruned) snapshot,
+        and the (dist, pk) re-rank resolves boundary ties exactly like
+        the single-query path. Other layouts/states fall back to one
+        exact scan with the query set broadcast (same semantics,
+        row-layout cost): the corpus is read ONCE instead of B times,
+        and a window partitioned by query_id keeps top-k per query
+        (never a global sort).
 
         ``filter_ast`` restricts every query of the batch to the
         matching rows on whatever path serves it: a block-local
-        payload mask on the packed index, a pushed predicate on the
-        pruned IVF scan (metadata rides in the index), or a plain
-        pushed filter on the fallback scan.
+        payload mask on the packed index, or a plain pushed filter on
+        the fallback scan.
         """
+        vc, qvs, src = self._route(vector_field, queries, nprobe=nprobe, refine=refine)
+        pk = self.manifest.index_design.primary_key
+        if src is None:
+            scored = self._scored_rows(vc, qvs, filter_ast)
+        else:
+            winners = self._packed_scan(src, qvs, filter_ast, k=max(src.refine, limit))
+            meta = self._view.drop(*self._vector_cols())
+            scored = F.broadcast(winners).join(meta, on=_COMMIT)
+            if src.adc:
+                # per-query (adc, pk) cut — the SAME deterministic order
+                # as the single-query refine cut, so batch results equal
+                # a per-query loop of search() row for row
+                scored = self._adc_serve(
+                    src, vc, scored, qvs,
+                    lambda df: _top_per(df, "query_id", max(src.refine, limit), pk),
+                )
+        return self._finish(_top_per(scored, "query_id", limit, pk), batch=True)
+
+    # -- the read path shared by every search ---------------------------
+
+    def _route(
+        self,
+        vector_field: str | None,
+        queries: dict[int, list[float]],
+        *,
+        nprobe: int | None = None,
+        refine: int | None = None,
+        exact: bool = False,
+    ) -> tuple[str, dict[int, list[float]], _Packed | None]:
+        """THE routing decision of every read: validate the vector
+        field, the queries and the ``nprobe``/``refine`` dials, and
+        name the packed source that serves the read — or None for the
+        row path (unflushed DML, the ``rows`` layout, or no index).
+
+        A clean ``blocks`` collection scans every file of its index
+        dir. A clean ``ivf``/``ivfpq`` collection scans its probed
+        lists' files: each query's ``nprobe`` nearest lists, or every
+        list when an ``exact`` read (grouped, radius — set contracts)
+        runs without an explicit ``nprobe``. An ivfpq index holds PQ
+        codes, not vectors, so exact reads on it take the row path.
+        Cosine queries come back unit-normalized, the form every
+        kernel scores (normalize-at-write)."""
+        from coltt_spark.operators.blocks import ivf_files, ivf_probe_centroids
+
         m = self.manifest
         qvs = {int(i): validate_vector(m.dim, v) for i, v in queries.items()}
-        if m.distance == "cosine":
-            qvs = {i: self._normalize_query(v) for i, v in qvs.items()}
         vcols = self._vector_cols()
         vc = vector_field or (vcols[0] if len(vcols) == 1 else None)
         if vc is None or vc not in vcols:
             raise ValueError(f"vector_field must be one of {vcols}")
-        pk = m.index_design.primary_key
-        if m.layout == "ivf" and not self._dirty and self._ivf_ready(vc):
-            # batched probe over the packed inverted lists: ONE job
-            # scans the union of every query's probed lists, and each
-            # file is scored only for the queries whose probe set
-            # includes its list (file_query_ids), so every query
-            # reranks exactly its own nprobe lists — then the B·k
-            # winners join back to the snapshot for metadata and the
-            # (dist, pk) re-rank, like the blocks batch path
-            from coltt_spark.operators.blocks import (
-                block_index_topk_batch,
-                ivf_files,
-                ivf_probe_centroids,
-            )
-
-            Cn = np.load(os.path.join(self._ivf_dir(vc), "centroids.npy"))
-            blocks_dir = os.path.join(self._ivf_dir(vc), "blocks")
-            np_ = m.ivf_nprobe if nprobe is None else nprobe
-            probes_by_q = {
-                qid: ivf_probe_centroids(Cn, v, np_) for qid, v in qvs.items()
-            }
-            # list each probed centroid's directory ONCE for the batch
-            files_by_c = {
-                c: ivf_files(blocks_dir, [c])
-                for c in {c for cs in probes_by_q.values() for c in cs}
-            }
-            file_query_ids: dict[str, list[int]] = {}
-            for qid, cs in probes_by_q.items():
-                for c in cs:
-                    for f in files_by_c[c]:
-                        file_query_ids.setdefault(f, []).append(int(qid))
-            _, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-            winners = block_index_topk_batch(
-                self.spark,
-                None,
-                qvs,
-                dim=m.dim,
-                k=limit,
-                distance="cosine_unit" if m.distance == "cosine" else m.distance,
-                dtype=m.block_dtype,
-                tombstones=tomb,
-                payload_filter=payload_filter,
-                files=sorted(file_query_ids),
-                file_query_ids=file_query_ids,
-            ).withColumnRenamed("id", _COMMIT)
-            meta = self._view.drop(*vcols)
-            joined = F.broadcast(winners).join(meta, on=_COMMIT).drop(_COMMIT)
-            from pyspark.sql import Window
-
-            wb = Window.partitionBy("query_id").orderBy(
-                F.col("dist").asc(), F.col(pk).asc()
-            )
-            out = (
-                joined.withColumn("_rn", F.row_number().over(wb))
-                .filter(F.col("_rn") <= limit)
-                .drop("_rn")
-            )
-            return out.withColumn("score", score_expr(m.distance, F.col("dist")))
-        if m.layout == "ivfpq" and not self._dirty and self._ivf_ready(vc):
-            return self._search_batch_ivfpq(
-                qvs, vc, limit=limit, filter_ast=filter_ast,
-                nprobe=nprobe, refine=refine,
-            )
+        if nprobe is not None and nprobe < 1:
+            raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         if refine is not None and m.layout != "ivfpq":
             raise ValueError(
-                "refine is an ivfpq-layout dial; this collection serves "
-                f"batches from the {m.layout!r} path (exact distances, "
-                "nothing to refine)"
+                f"refine is an ivfpq-layout dial; this {m.layout!r} collection "
+                "serves exact distances (nothing to refine)"
             )
-        # (a dirty/not-ready ivfpq collection falls through to the
-        # exact fallback scan below — distances are exact there, so a
-        # caller-set refine is a no-op by construction)
-        if (
-            m.layout == "blocks"
-            and not self._dirty
-            and os.path.isdir(self._blocks_dir(vc))
-        ):
-            from coltt_spark.operators.blocks import block_index_topk_batch
+        if refine is not None and refine < 0:
+            raise ValueError(f"refine must be >= 0, got {refine}")
+        if m.distance == "cosine":
+            qvs = {i: self._normalize_query(v) for i, v in qvs.items()}
+        if self._dirty or m.layout == "rows" or (exact and m.layout == "ivfpq"):
+            return vc, qvs, None
+        if m.layout == "blocks":
+            d = self._blocks_dir(vc)
+            return vc, qvs, (_Packed(path=d) if os.path.isdir(d) else None)
+        if not self._ivf_ready(vc):
+            return vc, qvs, None
+        d = self._ivf_dir(vc)
+        if exact and nprobe is None:
+            probes = {i: list(range(m.ivf_centroids)) for i in qvs}
+        else:
+            Cn = np.load(os.path.join(d, "centroids.npy"))
+            probes = {
+                i: ivf_probe_centroids(Cn, v, nprobe or m.ivf_nprobe)
+                for i, v in qvs.items()
+            }
+        # list each probed list's directory ONCE for the whole read
+        by_list = {
+            c: ivf_files(os.path.join(d, "blocks"), [c])
+            for c in sorted({c for cs in probes.values() for c in cs})
+        }
+        file_query_ids: dict[str, list[int]] = {}
+        for i, cs in probes.items():
+            for c in cs:
+                for f in by_list[c]:
+                    file_query_ids.setdefault(f, []).append(i)
+        adc = m.layout == "ivfpq"
+        return vc, qvs, _Packed(
+            ivf_dir=d,
+            files=[f for fs in by_list.values() for f in fs],
+            probes=probes,
+            file_query_ids=file_query_ids,
+            adc=adc,
+            refine=(m.ivfpq_refine if refine is None else refine) if adc else 0,
+        )
 
-            _, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-            winners = block_index_topk_batch(
-                self.spark,
-                self._blocks_dir(vc),
-                qvs,
-                dim=m.dim,
-                k=limit,
-                distance="cosine_unit" if m.distance == "cosine" else m.distance,
-                dtype=m.block_dtype,
-                tombstones=tomb,
-                payload_filter=payload_filter,
+    @staticmethod
+    def _normalize_query(qv: list[float]) -> list[float]:
+        """Unit-normalize a cosine query in float64 (zero-norm guard).
+
+        The norm is a SEQUENTIAL left-to-right sum (not numpy pairwise)
+        so a SQL oracle's ``sqrt(list_dot_product(q, q))`` — also a
+        sequential fold — reproduces it bit-for-bit; that exactness is
+        what lets the quantized-KNN oracles replay f16/bf16/f8 rounding
+        on identical inputs."""
+        acc = 0.0
+        for x in qv:
+            acc += float(x) * float(x)
+        n = math.sqrt(acc)
+        return [float(x) / n for x in qv] if n else [float(x) for x in qv]
+
+    @property
+    def _kind(self) -> str:
+        """Distance kernel of every read: cosine collections normalize
+        at write and every read normalizes its query, so cosine scores
+        ``|1 - dot|`` with no re-normalization (stored norms are NOT
+        re-applied — quantized rows would otherwise drift from the
+        oracle's contract)."""
+        d = self.manifest.distance
+        return "cosine_unit" if d == "cosine" else d
+
+    def _scored_rows(
+        self, vc: str, q: list[float] | dict[int, list[float]], filter_ast
+    ) -> DataFrame:
+        """The row path of every read: the dequantized view, filtered,
+        with ``dist`` to ``q`` — one query vector, or a ``{query_id:
+        vector}`` batch broadcast as a query table (the brute_topk
+        shape: ONE corpus scan scores the cross join)."""
+        df = self._dequantized()
+        if filter_ast is not None:
+            df = df.filter(compile_filter(df, filter_ast))
+        if isinstance(q, dict):
+            df = df.crossJoin(F.broadcast(self._query_table(q)))
+            q = F.col("_qv")
+        return df.withColumn("dist", vector_distance(self._kind, F.col(vc), q))
+
+    def _query_table(self, qvs: dict[int, list[float]]) -> DataFrame:
+        """A batch's queries as a (query_id, _qv) table to broadcast."""
+        return self.spark.createDataFrame(
+            [(int(i), [float(x) for x in v]) for i, v in sorted(qvs.items())],
+            T.StructType(
+                [
+                    T.StructField("query_id", T.LongType(), False),
+                    T.StructField("_qv", T.ArrayType(T.DoubleType()), False),
+                ]
+            ),
+        )
+
+    def _payload_schema(self) -> T.StructType:
+        """Every metadata column in storage order — what each packed
+        index file carries as its per-row payload."""
+        return T.StructType(
+            [
+                f for f in self._storage_schema()
+                if f.name not in self._vector_cols() and f.name != _COMMIT
+            ]
+        )
+
+    def _packed_scan(
+        self,
+        src: _Packed,
+        q: list[float] | dict[int, list[float]],
+        filter_ast,
+        **mode: Any,
+    ) -> DataFrame:
+        """Score ``src``'s files. One query vector → each file's local
+        top-``k`` (or per-group top, or radius ball — ``mode``) WITH
+        its metadata payload, all in ONE lazy job; a ``{query_id:
+        vector}`` batch → (query_id, commit id, dist) top-``k`` per
+        query plus boundary ties, one ``X @ Qᵀ`` per file. Rows carry
+        the commit id as ``_commit_id`` (the payload may hold a user
+        column named ``id``). On ivfpq the files hold PQ codes, scored
+        by ADC against per-(query, list) residual LUTs. A filter
+        compiles to a vectorized mask over each file's payload,
+        evaluated before the distance kernel; rows superseded by a
+        delta flush are masked by the version's commit-id tombstones."""
+        from coltt_spark import filters
+        from coltt_spark.operators import blocks
+
+        m = self.manifest
+        payload_schema = self._payload_schema()
+        payload_filter = (
+            None if filter_ast is None
+            else filters.compile_filter_mask(payload_schema, filter_ast)
+        )
+        tomb = self._tombstones_dir()
+        batch = isinstance(q, dict)
+        if src.adc:
+            luts = self._adc_luts(src, q if batch else {0: q})
+            kernel: dict[str, Any] = {
+                "dim": m.pq_subspaces,
+                "distance": "adc",
+                "dtype": "uint8",
+                "adc_luts": luts if batch else {c: t for (_, c), t in luts.items()},
+            }
+            if not batch:
+                q = None  # the LUTs carry the query
+        else:
+            kernel = {"dim": m.dim, "distance": self._kind, "dtype": m.block_dtype}
+        common = dict(
+            tombstones=tomb if os.path.isdir(tomb) else None,
+            payload_filter=payload_filter, files=src.files, **kernel, **mode,
+        )
+        if batch:
+            return blocks.block_index_topk_batch(
+                self.spark, src.path, q, file_query_ids=src.file_query_ids, **common
             ).withColumnRenamed("id", _COMMIT)
-            meta = self._view.drop(*vcols)
-            joined = F.broadcast(winners).join(meta, on=_COMMIT).drop(_COMMIT)
-            # re-rank the B·k winner rows by (dist, pk): the scan's
-            # surrogate-id tie-break need not match the primary key,
-            # so boundary ties are resolved here, exactly like the
-            # single-query path's _paginate_topk
-            from pyspark.sql import Window
+        return blocks.block_index_scan(
+            self.spark, src.path, q,
+            payload_schema=payload_schema, id_alias=_COMMIT, **common,
+        )
 
-            wb = Window.partitionBy("query_id").orderBy(
-                F.col("dist").asc(), F.col(pk).asc()
+    def _adc_luts(
+        self, src: _Packed, qvs: dict[int, list[float]]
+    ) -> dict[tuple[int, int], np.ndarray]:
+        """Residual ADC lookup tables keyed (query_id, probed list):
+        the query residual differs per coarse centroid — the defining
+        IVFADC detail. Sequential-fold double
+        (:func:`~coltt_spark.operators.pq.ivfpq_residual_luts` keeps
+        the ordinal fold order), the arithmetic the registry oracle
+        replays in SQL. An OPQ index rotates the residuals first:
+        codes encode the ROTATED residual, while the exact rerank
+        stays in the raw space (rotation-invariant)."""
+        from coltt_spark.operators.pq import ivfpq_residual_luts
+
+        Cn = np.load(os.path.join(src.ivf_dir, "centroids.npy"))
+        book = np.load(os.path.join(src.ivf_dir, "book.npy"))
+        pairs = [(qid, c) for qid, cs in sorted(src.probes.items()) for c in cs]
+        qrs = np.array(
+            [
+                [float(qvs[qid][j]) - float(Cn[c][j]) for j in range(self.manifest.dim)]
+                for qid, c in pairs
+            ],
+            dtype=np.float64,
+        )
+        rot_path = os.path.join(src.ivf_dir, "rotation.npy")
+        if os.path.isfile(rot_path):
+            qrs = qrs @ np.load(rot_path)
+        lut_mat = ivfpq_residual_luts(qrs, book)
+        return {pair: lut_mat[i] for i, pair in enumerate(pairs)}
+
+    def _adc_serve(self, src: _Packed, vc: str, scored: DataFrame, q, cut) -> DataFrame:
+        """Finish an ADC scan. ``refine=0`` serves the estimate: the
+        scan scores the residual EUCLIDEAN distance, and on unit
+        vectors ``|1 − dot| = euclid²/2``, so cosine collections map it
+        into the cosine domain (monotone — the ranking is unchanged,
+        and the refine dial never flips the dist/score scale).
+        Otherwise ``cut`` keeps the top ``refine`` candidates by (adc,
+        pk) and they are re-scored with the exact distance via ONE
+        broadcast join against the PROBED lists' exact-vector rows
+        (``vecs/centroid=<c>/`` written at flush — candidates are
+        members of the probed lists by construction, so the rerank
+        reads nprobe/n_centroids of the vector bytes, never a full
+        snapshot scan). Those rows hold the same dequantized values as
+        the snapshot, stored as double, so the exact fold — and the
+        SQL oracle's replay — is unchanged to the bit. Indexes flushed
+        before the rerank tree existed fall back to the column-pruned
+        snapshot."""
+        if not src.refine:
+            if self.manifest.distance != "cosine":
+                return scored
+            return scored.withColumn("dist", F.col("dist") * F.col("dist") / F.lit(2.0))
+        cand = cut(scored).drop("dist")
+        vecs_root = os.path.join(src.ivf_dir, "vecs")
+        if os.path.isdir(vecs_root):
+            vschema = T.StructType(
+                [
+                    T.StructField(_COMMIT, T.LongType(), False),
+                    T.StructField(vc, T.ArrayType(T.DoubleType()), False),
+                ]
             )
-            out = (
-                joined.withColumn("_rn", F.row_number().over(wb))
-                .filter(F.col("_rn") <= limit)
-                .drop("_rn")
+            vdirs = [
+                p
+                for p in (
+                    os.path.join(vecs_root, f"centroid={c}")
+                    for c in sorted({c for cs in src.probes.values() for c in cs})
+                )
+                if os.path.isdir(p)
+            ]
+            vecs = (
+                self.spark.read.schema(vschema).parquet(*vdirs)
+                if vdirs
+                else self.spark.createDataFrame([], vschema)
             )
         else:
-            # one corpus scan for the whole batch: broadcast the B-row
-            # query table, score the cross join, keep top-k per query
-            # with a window partitioned by query_id — the brute_topk
-            # shape (operators/ann.py). The corpus is read ONCE instead
-            # of B times; the window shuffles n·B scored rows but never
-            # a global sort (B partitions, each independently top-k'd).
-            qrows = [(int(i), [float(x) for x in v]) for i, v in sorted(qvs.items())]
-            qdf = self.spark.createDataFrame(
-                qrows,
-                T.StructType(
-                    [
-                        T.StructField("query_id", T.LongType(), False),
-                        T.StructField("_qv", T.ArrayType(T.DoubleType()), False),
-                    ]
-                ),
-            )
-            from pyspark.sql import Window
+            vecs = self._dequantized().select(_COMMIT, vc)
+        rescored = vecs.join(F.broadcast(cand), on=_COMMIT)
+        if isinstance(q, dict):
+            rescored = rescored.join(F.broadcast(self._query_table(q)), on="query_id")
+            q = F.col("_qv")
+        return rescored.withColumn("dist", vector_distance(self._kind, F.col(vc), q))
 
-            base = self._dequantized()
-            if filter_ast is not None:
-                base = base.filter(compile_filter(base, filter_ast))
-            scored = (
-                base
-                .crossJoin(F.broadcast(qdf))
-                .withColumn(
-                    "dist",
-                    vector_distance(
-                        # normalize-at-write: |1 - dot| like every
-                        # other read path (qvs are already normalized)
-                        "cosine_unit" if m.distance == "cosine" else m.distance,
-                        F.col(vc),
-                        F.col("_qv"),
-                    ),
-                )
-            )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist").asc(), F.col(pk).asc()
-            )
-            out = (
-                scored.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= limit)
-                .drop("_rn", "_qv", _COMMIT, *vcols)
-            )
-        return out.withColumn("score", score_expr(m.distance, F.col("dist")))
+    def _finish(self, scored: DataFrame, *, batch: bool = False) -> DataFrame:
+        """THE result shape of every read, whichever path served it:
+        metadata in index-design order, then ``query_id`` (batches),
+        ``dist`` and ``score``. Stored vectors come back only from a
+        single-query read of a ``rows`` collection (its long-standing
+        output); commit ids and scratch columns never do."""
+        m = self.manifest
+        vcols = self._vector_cols()
+        keep_vectors = m.layout == "rows" and not batch
+        names = [
+            f.name for f in self._storage_schema()
+            if f.name != _COMMIT and (keep_vectors or f.name not in vcols)
+        ] + (["query_id"] if batch else []) + ["dist"]
+        # the projection is the same tree on every read of this shape:
+        # build it once per session (a Column per name costs py4j
+        # round-trips on every construction)
+        return scored.select(*memo_columns(
+            f"catalog.finish{(m.distance, tuple(names))!r}",
+            lambda: [F.col(n) for n in names]
+            + [score_expr(m.distance, F.col("dist")).alias("score")],
+        ))
 
     def multi_search(
         self,
@@ -1627,7 +1536,7 @@ class Collection:
                 df = df.withColumn(vc, dequantize(m.quantization, vc))
         pk = m.index_design.primary_key
         # payload = every non-vector field in STORAGE ORDER (pk
-        # included) — must match _block_scan_plumbing's payload schema
+        # included) — must match _payload_schema()
         pcols = [
             f.name for f in self._storage_schema()
             if f.name not in self._vector_cols() and f.name != _COMMIT
@@ -1660,63 +1569,6 @@ class Collection:
                 os.path.join(out, "blocks")
             )
             np.save(os.path.join(out, "centroids.npy"), Cn)
-
-    def _search_ivf(
-        self,
-        qv: list[float],
-        vc: str,
-        *,
-        limit: int,
-        offset: int,
-        nprobe: int | None = None,
-        filter_ast: dict[str, Any] | None = None,
-    ) -> DataFrame:
-        """Serve an approximate KNN from the IVF index: rank centroids
-        on the driver (k·dim floats), then scan ONLY the probed
-        inverted lists' PACKED BLOCK FILES (path-pruned — unprobed
-        lists' files are never opened) through the node-local spool,
-        exact-reranking inside — the same one-matvec-per-file cost
-        shape as the ``blocks`` layout, over (nprobe/n_centroids) of
-        the corpus. Metadata lives in the block payload, so a metadata
-        filter (HybridSearch's intended filter ∩ candidates semantics,
-        ``core/core.go:760-839``) evaluates as a vectorized block-local
-        mask and results come back without any second scan or join;
-        delta-superseded rows are masked by the commit-id tombstones."""
-        from coltt_spark.operators.blocks import (
-            block_index_scan,
-            ivf_files,
-            ivf_probe_centroids,
-        )
-
-        m = self.manifest
-        nprobe = m.ivf_nprobe if nprobe is None else nprobe
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-        Cn = np.load(os.path.join(self._ivf_dir(vc), "centroids.npy"))
-        probes = ivf_probe_centroids(Cn, qv, nprobe)
-        files = ivf_files(os.path.join(self._ivf_dir(vc), "blocks"), probes)
-        payload_schema, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-        # normalize-at-write: index rows are unit for cosine — score
-        # |1 - dot| exactly like the row path (uniform across layouts
-        # even when quantization perturbs stored norms)
-        local = block_index_scan(
-            self.spark,
-            None,
-            qv,
-            dim=m.dim,
-            k=offset + limit,
-            distance="cosine_unit" if m.distance == "cosine" else m.distance,
-            dtype=m.block_dtype,
-            payload_schema=payload_schema,
-            id_alias=_COMMIT,
-            payload_filter=payload_filter,
-            tombstones=tomb,
-            files=files,
-        )
-        paged = _paginate_topk(
-            local.drop(_COMMIT), limit, offset, m.index_design.primary_key
-        )
-        return paged.withColumn("score", score_expr(m.distance, F.col("dist")))
 
     def _write_ivfpq(self, version: int) -> None:
         """Build the fused IVF-PQ (IVFADC) serving index for snapshot
@@ -1946,343 +1798,6 @@ class Collection:
             np.save(os.path.join(new_dir, "book.npy"), book)
             if rot is not None:
                 np.save(os.path.join(new_dir, "rotation.npy"), rot)
-
-    def _search_ivfpq(
-        self,
-        qv: list[float],
-        vc: str,
-        *,
-        limit: int,
-        offset: int,
-        nprobe: int | None = None,
-        refine: int | None = None,
-        filter_ast: dict[str, Any] | None = None,
-    ) -> DataFrame:
-        """Serve a KNN from the IVFADC index: rank coarse centroids on
-        the driver, build one residual LUT per probed list (the query
-        residual differs per coarse centroid — the defining IVFADC
-        detail), ADC-scan ONLY the probed lists' packed CODE files
-        (path-pruned, M bytes per row, metadata filter as a block-local
-        payload mask), cut to the top ``refine`` candidates by (adc,
-        pk), and re-score them with the exact distance via ONE
-        broadcast join of the ≤ refine winners against the PROBED
-        LISTS' exact-vector rows (``vecs/centroid=<c>/`` written at
-        flush — candidates are members of the probed lists by
-        construction, so the rerank reads nprobe/n_centroids of the
-        vector bytes, never a full snapshot scan; VERDICT r9 #2).
-        ``refine=0`` skips the rerank and serves the ADC
-        approximation — no vector data is touched at any point.
-
-        Cosine collections run the whole funnel in the unit domain
-        (normalize-at-write rows, normalized query): euclidean
-        ordering over unit vectors is monotone with cosine, so the
-        residual-euclidean ADC is the principled candidate generator
-        and the rerank scores ``|1 − dot|`` exactly like every other
-        layout's read path. All driver-side float math is
-        sequential-fold double (LUTs, probe ranking) and the scan's
-        ADC sum folds left-to-right over subspaces, so the registry
-        oracle replays the ENTIRE pipeline in SQL
-        (registry._collection_ivfpq_oracle)."""
-        from coltt_spark.operators.blocks import (
-            block_index_scan,
-            ivf_files,
-            ivf_probe_centroids,
-        )
-
-        m = self.manifest
-        nprobe = m.ivf_nprobe if nprobe is None else nprobe
-        refine = m.ivfpq_refine if refine is None else refine
-        pk = m.index_design.primary_key
-        if m.distance == "cosine":
-            qv = self._normalize_query(qv)
-        d = self._ivf_dir(vc)
-        Cn = np.load(os.path.join(d, "centroids.npy"))
-        book = np.load(os.path.join(d, "book.npy"))
-        n_sub, ks, dsub = book.shape
-        probes = ivf_probe_centroids(Cn, qv, nprobe)
-        files = ivf_files(os.path.join(d, "blocks"), probes)
-        # per-probed-centroid residual LUTs, sequential-fold double —
-        # the same arithmetic ivfpq_topk uses and the oracle replays
-        # (ivfpq_residual_luts vectorizes across codes but keeps the
-        # ordinal fold order, so values are bit-identical to the old
-        # per-element loop)
-        from coltt_spark.operators.pq import ivfpq_residual_luts
-
-        qrs = np.array(
-            [[float(qv[j]) - float(Cn[c][j]) for j in range(len(qv))] for c in probes],
-            dtype=np.float64,
-        )
-        rot_path = os.path.join(d, "rotation.npy")
-        if os.path.isfile(rot_path):
-            # OPQ index: codes encode the ROTATED residual, so the LUT
-            # compares against the rotated query residual; the exact
-            # rerank below stays in the raw space (rotation-invariant)
-            qrs = qrs @ np.load(rot_path)
-        lut_mat = ivfpq_residual_luts(qrs, book)
-        luts: dict[int, list[float]] = {
-            int(c): [float(x) for x in lut_mat[i]] for i, c in enumerate(probes)
-        }
-        payload_schema, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-        k_local = (offset + limit) if not refine else max(refine, offset + limit)
-        local = block_index_scan(
-            self.spark,
-            None,
-            None,
-            dim=n_sub,
-            k=k_local,
-            distance="adc",
-            dtype="uint8",
-            adc_luts=luts,
-            payload_schema=payload_schema,
-            id_alias=_COMMIT,
-            payload_filter=payload_filter,
-            tombstones=tomb,
-            files=files,
-        )
-        if not refine:
-            adc_only = local.drop(_COMMIT)
-            if m.distance == "cosine":
-                # the ADC scan estimates the residual EUCLIDEAN
-                # distance; on unit vectors |1 − dot| = euclid²/2, so
-                # map the estimate into the cosine domain (monotone —
-                # the TakeOrdered ranking is unchanged) before
-                # paginating/scoring: the refine dial must not flip
-                # the dist/score scale between 0 and >0 (r9 review)
-                adc_only = adc_only.withColumn(
-                    "dist", F.col("dist") * F.col("dist") / F.lit(2.0)
-                )
-            paged = _paginate_topk(adc_only, limit, offset, pk)
-            return paged.withColumn("score", score_expr(m.distance, F.col("dist")))
-        # ADC funnel cut: deterministic (adc, pk) total order — pk is
-        # unique, so orderBy().limit() (TakeOrderedAndProject, no
-        # global window) is exactly the top-``refine`` the SQL oracle's
-        # row_number() replay produces. Pagination past the refine
-        # budget widens the cut (refine is a floor, not a truncation
-        # of the caller's limit — r9 review)
-        cand = (
-            local.orderBy(F.col("dist").asc(), F.col(pk).asc())
-            .limit(max(refine, offset + limit))
-            .drop("dist")
-        )
-        # rerank source: the probed lists' exact-vector rows (same
-        # dequantized values the snapshot holds, stored as double at
-        # flush so the fold below is bit-identical to a snapshot join
-        # and the SQL oracle's replay). Only probed centroid=<c>/
-        # directories are ever opened — rerank IO is nprobe/n_centroids
-        # of the vector data. Collections flushed before the rerank
-        # tree existed fall back to the column-pruned snapshot join.
-        vecs_root = os.path.join(d, "vecs")
-        if os.path.isdir(vecs_root):
-            vschema = T.StructType(
-                [
-                    T.StructField(_COMMIT, T.LongType(), False),
-                    T.StructField(vc, T.ArrayType(T.DoubleType()), False),
-                ]
-            )
-            vdirs = [
-                p
-                for p in (
-                    os.path.join(vecs_root, f"centroid={c}") for c in probes
-                )
-                if os.path.isdir(p)
-            ]
-            vecs = (
-                self.spark.read.schema(vschema).parquet(*vdirs)
-                if vdirs
-                else self.spark.createDataFrame([], vschema)
-            ).select(_COMMIT, F.col(vc).alias("_v"))
-        else:
-            vecs = self._dequantized().select(_COMMIT, F.col(vc).alias("_v"))
-        if m.distance == "cosine":
-            exact = F.abs(
-                F.lit(1.0)
-                - F.aggregate(
-                    F.zip_with(
-                        F.col("_v").cast("array<double>"),
-                        lit_double_array(qv),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        else:
-            exact = vector_distance(m.distance, F.col("_v"), qv)
-        rescored = (
-            vecs.join(F.broadcast(cand), on=_COMMIT)
-            .withColumn("dist", exact)
-            .drop("_v", _COMMIT)
-            # same column order as every other packed serving path
-            .select("dist", *[f.name for f in payload_schema])
-        )
-        paged = _paginate_topk(rescored, limit, offset, pk)
-        return paged.withColumn("score", score_expr(m.distance, F.col("dist")))
-
-    def _search_batch_ivfpq(
-        self,
-        qvs: dict[int, list[float]],
-        vc: str,
-        *,
-        limit: int,
-        filter_ast: dict[str, Any] | None = None,
-        nprobe: int | None = None,
-        refine: int | None = None,
-    ) -> DataFrame:
-        """Batched IVFADC serving: all B queries in ONE job over the
-        union of their probed lists' packed CODE files. Per-(query,
-        list) residual LUTs become one numpy batch build
-        (:func:`~coltt_spark.operators.pq.ivfpq_residual_luts` — the
-        oracle-matched sequential-over-ordinals fold, VERDICT r9 #3a)
-        keyed ``(query_id, centroid)``; each file is ADC-scored only
-        for the queries whose probe set includes its list
-        (``file_query_ids``), exactly the ivf batch contract. The
-        B·refine ADC candidates broadcast-join the vector-pruned
-        snapshot for metadata + the primary key, are cut per query by
-        (adc, pk) — the SAME deterministic order as the sequential
-        path's refine cut — and exact-rerank against ONLY the probed
-        lists' exact-vector files (``vecs/centroid=<c>/``), so batch
-        results EQUAL a per-query loop of :meth:`search` row for row
-        while the scan cost amortizes toward one pass over the probed
-        code bytes."""
-        from pyspark.sql import Window
-
-        from coltt_spark.operators.blocks import (
-            block_index_topk_batch,
-            ivf_files,
-            ivf_probe_centroids,
-        )
-        from coltt_spark.operators.pq import ivfpq_residual_luts
-
-        m = self.manifest
-        nprobe = m.ivf_nprobe if nprobe is None else nprobe
-        refine = m.ivfpq_refine if refine is None else refine
-        pk = m.index_design.primary_key
-        d = self._ivf_dir(vc)
-        Cn = np.load(os.path.join(d, "centroids.npy"))
-        book = np.load(os.path.join(d, "book.npy"))
-        probes_by_q = {
-            int(qid): ivf_probe_centroids(Cn, v, nprobe) for qid, v in qvs.items()
-        }
-        pairs = [
-            (qid, int(c))
-            for qid, cs in sorted(probes_by_q.items())
-            for c in cs
-        ]
-        qrs = np.array(
-            [
-                [float(qvs[qid][j]) - float(Cn[c][j]) for j in range(m.dim)]
-                for qid, c in pairs
-            ],
-            dtype=np.float64,
-        )
-        rot_path = os.path.join(d, "rotation.npy")
-        if os.path.isfile(rot_path):
-            # OPQ: rotate the whole (query, list) residual batch once
-            qrs = qrs @ np.load(rot_path)
-        lut_mat = ivfpq_residual_luts(qrs, book)
-        adc_luts = {pair: lut_mat[i] for i, pair in enumerate(pairs)}
-        blocks_dir = os.path.join(d, "blocks")
-        files_by_c = {
-            c: ivf_files(blocks_dir, [c])
-            for c in {c for cs in probes_by_q.values() for c in cs}
-        }
-        file_query_ids: dict[str, list[int]] = {}
-        for qid, cs in probes_by_q.items():
-            for c in cs:
-                for f in files_by_c[c]:
-                    file_query_ids.setdefault(f, []).append(int(qid))
-        _, payload_filter, tomb = self._block_scan_plumbing(filter_ast)
-        k_local = max(refine, limit) if refine else limit
-        winners = block_index_topk_batch(
-            self.spark,
-            None,
-            qvs,
-            dim=m.pq_subspaces,
-            k=k_local,
-            distance="adc",
-            dtype="uint8",
-            tombstones=tomb,
-            payload_filter=payload_filter,
-            files=sorted(file_query_ids),
-            file_query_ids=file_query_ids,
-            adc_luts=adc_luts,
-        ).withColumnRenamed("id", _COMMIT)
-        meta = self._view.drop(*self._vector_cols())
-        joined = F.broadcast(winners).join(meta, on=_COMMIT)
-        wb = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col(pk).asc()
-        )
-        if not refine:
-            if m.distance == "cosine":
-                # residual-euclidean estimate → cosine domain, exactly
-                # like the sequential ADC-only path (monotone)
-                joined = joined.withColumn(
-                    "dist", F.col("dist") * F.col("dist") / F.lit(2.0)
-                )
-            out = (
-                joined.withColumn("_rn", F.row_number().over(wb))
-                .filter(F.col("_rn") <= limit)
-                .drop("_rn", _COMMIT)
-            )
-            return out.withColumn("score", score_expr(m.distance, F.col("dist")))
-        cand = (
-            joined.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") <= max(refine, limit))
-            .drop("_rn", "dist")
-        )
-        vecs_root = os.path.join(d, "vecs")
-        if os.path.isdir(vecs_root):
-            vschema = T.StructType(
-                [
-                    T.StructField(_COMMIT, T.LongType(), False),
-                    T.StructField(vc, T.ArrayType(T.DoubleType()), False),
-                ]
-            )
-            vdirs = [
-                p
-                for p in (
-                    os.path.join(vecs_root, f"centroid={c}")
-                    for c in sorted({c for cs in probes_by_q.values() for c in cs})
-                )
-                if os.path.isdir(p)
-            ]
-            vecs = (
-                self.spark.read.schema(vschema).parquet(*vdirs)
-                if vdirs
-                else self.spark.createDataFrame([], vschema)
-            ).select(_COMMIT, F.col(vc).alias("_v"))
-        else:
-            vecs = self._dequantized().select(_COMMIT, F.col(vc).alias("_v"))
-        qdf = self.spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in sorted(qvs.items())],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType(), False),
-                    T.StructField("_qv", T.ArrayType(T.DoubleType()), False),
-                ]
-            ),
-        )
-        rescored = (
-            vecs.join(F.broadcast(cand), on=_COMMIT)
-            .join(F.broadcast(qdf), on="query_id")
-            .withColumn(
-                "dist",
-                vector_distance(
-                    # normalize-at-write: |1 − dot| on unit rows, like
-                    # every other read path (qvs already normalized)
-                    "cosine_unit" if m.distance == "cosine" else m.distance,
-                    F.col("_v"),
-                    F.col("_qv"),
-                ),
-            )
-            .drop("_v", "_qv", _COMMIT)
-        )
-        out = (
-            rescored.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") <= limit)
-            .drop("_rn")
-        )
-        return out.withColumn("score", score_expr(m.distance, F.col("dist")))
 
     def load(self) -> None:
         """Pin the collection in memory (LoadCollection ⇔ cache)."""

@@ -19,7 +19,10 @@ plans, optimizes, and executes from the parquet inputs on every run
 
 Entries are keyed on the active SparkSession and dropped when it
 changes: a Column's JVM handle dies with its gateway, so a test that
-restarts the session must not see a stale tree.
+restarts the session must not see a stale tree. A thread with no
+active session (one not started through ``inheritable_thread_target``)
+keys on the instantiated session instead — never on ``None``, which
+would match forever, across session restarts.
 """
 
 from __future__ import annotations
@@ -36,7 +39,9 @@ _MEMO: dict[str, tuple[SparkSession, Any]] = {}
 def memo_columns(key: str, build: Callable[[], Any]) -> Any:
     """Return ``build()``'s Column (or structure of Columns), built at
     most once per (key, active SparkSession)."""
-    spark = SparkSession.getActiveSession()
+    spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    if spark is None:
+        raise RuntimeError(f"memo_columns({key!r}) needs a running SparkSession")
     hit = _MEMO.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]

@@ -19,6 +19,7 @@ array left-to-right in element order.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -40,16 +41,20 @@ def lit_double_array(xs: Sequence[float]) -> Column:
     return F.expr(sql_double_array(xs))
 
 
+def sql_double(x: float) -> str:
+    """One double as Spark-SQL literal text (``repr`` round-trips
+    exactly; the parser is correctly rounded). Non-finite values raise
+    instead of rendering an unparseable ``infD``/``nanD``."""
+    v = float(x)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite literal {v!r} in SQL text")
+    return repr(v) + "D"
+
+
 def sql_double_array(xs: Sequence[float]) -> str:
     """The SQL-text form of :func:`lit_double_array` — for callers
     composing larger single-parse expressions."""
-    parts = []
-    for x in xs:
-        v = float(x)
-        if v != v or v in (float("inf"), float("-inf")):
-            raise ValueError(f"non-finite literal {v!r} in vector literal")
-        parts.append(repr(v) + "D")
-    return "array(" + ",".join(parts) + ")"
+    return "array(" + ",".join(sql_double(x) for x in xs) + ")"
 
 
 def dot_fold_sql(a_sql: str, b_sql: str) -> str:

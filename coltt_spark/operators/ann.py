@@ -418,7 +418,7 @@ def ivf_probe(
     path). The PRODUCT serving layout (`Collection` with
     ``layout="ivf"``) instead packs each inverted list into block
     files and probes them through the node-local spool
-    (catalog._write_ivf/_search_ivf) — same math, ~2× lower serving
+    (catalog._write_ivf/_packed_scan) — same math, ~2× lower serving
     latency because nothing re-decodes Parquet arrays per query."""
     probe_rows = []
     for qid, v in queries.items():

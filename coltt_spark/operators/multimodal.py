@@ -1080,12 +1080,9 @@ def dhash_pairs(sig: DataFrame, id_col: str, *, max_hamming: int = 3) -> DataFra
         # a signature pair appears once per agreeing band (≤ 4)
         .distinct()
     )
-    da = sig.selectExpr(
-        f"`{id_col}` AS _ida", *[f"{w} AS {w}_a" for w in ws]
-    )
-    db = sig.selectExpr(
-        f"`{id_col}` AS _idb", *[f"{w} AS {w}_b" for w in ws]
-    )
+    quoted = "`" + id_col.replace("`", "``") + "`"
+    da = sig.selectExpr(f"{quoted} AS _ida", *[f"{w} AS {w}_a" for w in ws])
+    db = sig.selectExpr(f"{quoted} AS _idb", *[f"{w} AS {w}_b" for w in ws])
     return (
         sig_pairs.join(da, on=[f"{w}_a" for w in ws])
         .join(db, on=[f"{w}_b" for w in ws])

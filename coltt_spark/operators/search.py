@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from coltt_spark.filters import compile_filter
 from coltt_spark.functions.vector import score as score_expr
-from coltt_spark.functions.vector import vector_distance
+from coltt_spark.functions.vector import sql_double, vector_distance
 
 
 def _paginate_topk(scored: DataFrame, limit: int, offset: int, tie_break: str) -> DataFrame:
@@ -288,6 +288,10 @@ def _wide_dist(
             return sum(F.abs(c - F.lit(q[i])) for i, c in enumerate(cols))
         raise ValueError(f"unknown distance {distance!r}")
 
+    # non-finite components raise here (sql_double) instead of
+    # rendering unparseable SQL text
+    lit = [sql_double(q[i]) for i in range(dim)]
+
     def fold(terms: list[str]) -> str:
         # replicate Python sum(): integer 0 start, left-assoc adds
         acc = "0"
@@ -297,15 +301,15 @@ def _wide_dist(
 
     if distance == "cosine":
         qn = math.sqrt(sum(x * x for x in q)) or 1.0
-        dot = fold([f"(`{prefix}{i}` * {q[i]!r}D)" for i in range(dim)])
-        return F.expr(f"abs(1.0D - ({dot} / (`_vnorm` * {qn!r}D)))")
+        dot = fold([f"(`{prefix}{i}` * {lit[i]})" for i in range(dim)])
+        return F.expr(f"abs(1.0D - ({dot} / (`_vnorm` * {sql_double(qn)})))")
     if distance == "euclidean":
         s = fold(
-            [f"((`{prefix}{i}` - {q[i]!r}D) * (`{prefix}{i}` - {q[i]!r}D))" for i in range(dim)]
+            [f"((`{prefix}{i}` - {lit[i]}) * (`{prefix}{i}` - {lit[i]}))" for i in range(dim)]
         )
         return F.expr(f"sqrt({s})")
     if distance == "manhattan":
-        return F.expr(fold([f"abs(`{prefix}{i}` - {q[i]!r}D)" for i in range(dim)]))
+        return F.expr(fold([f"abs(`{prefix}{i}` - {lit[i]})" for i in range(dim)]))
     raise ValueError(f"unknown distance {distance!r}")
 
 

@@ -18,6 +18,7 @@ from coltt_spark.functions.text import (
     tokens,
     utf8_byte_symbols,
 )
+from coltt_spark.functions.vector import sql_double
 from coltt_spark.sources.tables import ensure_parallelism
 
 # marker stopwords per language for the n-gram/stopword heuristic.
@@ -527,9 +528,10 @@ def _qc_step_aggs(w: list[float]) -> list[Column]:
     keeps a 1-ulp JVM-vs-DuckDB exp() divergence from flipping the
     gradient integer — then sum(CAST(round((p - y)·xj·QC_QUANT) AS
     BIGINT)) per feature."""
-    z = f"(({w[0]!r}D * `_x0`) + ({w[1]!r}D * `_x1`))"
+    lit = [sql_double(x) for x in w]  # non-finite weights raise
+    z = f"(({lit[0]} * `_x0`) + ({lit[1]} * `_x1`))"
     for j in (2, 3):
-        z = f"({z} + ({w[j]!r}D * `_x{j}`))"
+        z = f"({z} + ({lit[j]} * `_x{j}`))"
     p = f"round(1.0D / (1.0D + exp(-{z})), 12)"
     return [
         F.expr(

@@ -554,8 +554,11 @@ def test_delete_key_strict_validation(catalog):
 def test_ivf_layout_serves_and_falls_back(catalog):
     """IVF-layout lifecycle: a flushed collection serves from the
     partitioned index; unflushed DML falls back to the exact row scan
-    with the SAME output columns; re-flush rebuilds the index and the
-    fast path resumes."""
+    with the SAME output columns IN THE SAME ORDER; re-flush rebuilds
+    the index and the fast path resumes. Every read method on every
+    packed layout, clean or dirty, returns the rows-layout column
+    order: metadata in index-design order, query_id for batches, then
+    dist and score."""
     coll = catalog.create_collection(
         "ivfcoll", dim=8, distance="cosine", fields=FIELDS,
         layout="ivf", ivf_centroids=4, ivf_nprobe=4, block_dtype="float64",
@@ -564,7 +567,7 @@ def test_ivf_layout_serves_and_falls_back(catalog):
     coll.flush()
     q = _rows(1, dim=8, seed=99)[0]["vector"]
     served = coll.search(q, limit=5)
-    cols = set(served.columns)
+    cols = served.columns
     assert len(served.collect()) == 5
     # nprobe == n_centroids probes everything -> equals the exact scan
     exact_ids = {
@@ -575,10 +578,32 @@ def test_ivf_layout_serves_and_falls_back(catalog):
     # dirty state: falls back, same schema
     coll.upsert(_rows(3, dim=8, seed=4))
     dirty = coll.search(q, limit=5)
-    assert set(dirty.columns) == cols
+    assert dirty.columns == cols
     # flush rebuilds; fast path again, index reflects the new rows
     coll.flush()
     assert len(coll.search(q, limit=5).collect()) == 5
+
+    meta = [f.name for f in FIELDS]
+    for layout in ("blocks", "ivf", "ivfpq"):
+        c = coll if layout == "ivf" else catalog.create_collection(
+            f"order_{layout}", dim=8, distance="cosine", fields=FIELDS,
+            layout=layout, block_dtype="float64", pq_subspaces=4, pq_codes=8,
+        )
+        if c is not coll:
+            c.upsert(_rows(80, dim=8, seed=3))
+            c.flush()
+        for state in ("clean", "dirty"):
+            if state == "dirty":
+                c.upsert(_rows(3, dim=8, seed=4))
+            reads = {
+                "search": c.search(q, limit=5),
+                "search_grouped": c.search_grouped(q, "type", limit=4),
+                "search_radius": c.search_radius(q, 0.5),
+                "search_batch": c.search_batch({0: q}, limit=5),
+            }
+            for name, df in reads.items():
+                want = meta + (["query_id"] if name == "search_batch" else [])
+                assert df.columns == want + ["dist", "score"], (layout, state, name)
 
 
 def test_ivf_search_batch_agrees_with_single(spark, catalog):
@@ -1032,6 +1057,12 @@ def test_nprobe_validation(catalog):
             coll.search(q, limit=3, nprobe=bad).collect()
         with pytest.raises(ValueError, match="nprobe"):
             coll.search_batch({0: q}, limit=3, nprobe=bad).collect()
+    # refine is an ivfpq-only dial: every read rejects it elsewhere
+    # instead of silently ignoring it
+    with pytest.raises(ValueError, match="refine"):
+        coll.search(q, limit=3, refine=5)
+    with pytest.raises(ValueError, match="refine"):
+        coll.search_batch({0: q}, limit=3, refine=5)
 
 
 def test_stale_ivf_layout_fails_loudly(catalog):
@@ -1301,7 +1332,7 @@ def test_ivf_auto_compaction_bounds_read_amplification(catalog):
 
 
 # -- layout="ivfpq": fused IVFADC serving (coarse lists + residual PQ
-# -- codes packed per centroid; catalog._write_ivfpq/_search_ivfpq) --
+# -- codes packed per centroid; catalog._write_ivfpq/_packed_scan) --
 
 
 def _exact_topk(rows_state, q, k=5, types=None):

@@ -1039,6 +1039,22 @@ def test_minhash_index_delta_exact_copy_of_old_doc(spark, tmp_path):
     assert not any(900002 in p for p in got)
 
 
+def test_dhash_pairs_quotes_backticked_id_column(spark):
+    """dhash_pairs renders the id column into SQL text; a name holding
+    a backtick must be escaped (doubled), not break the parse or bind
+    the wrong column."""
+    from coltt_spark.operators.multimodal import dhash_pairs
+
+    rows = [(1, 1, 2, 3, 4), (2, 1, 2, 3, 5), (3, 100, 200, 300, 400)]
+    schema = "{} long, w0 long, w1 long, w2 long, w3 long"
+    plain = spark.createDataFrame(rows, schema.format("doc_id"))
+    odd = spark.createDataFrame(rows, schema.format("`doc``id`"))
+    assert odd.columns[0] == "doc`id"
+    want = [tuple(r) for r in dhash_pairs(plain, "doc_id").collect()]
+    assert want == [(1, 2, 1)]
+    assert [tuple(r) for r in dhash_pairs(odd, "doc`id").collect()] == want
+
+
 def test_av_dedup_joint_contract(spark):
     """The AV AND-composition's recall/precision contract, measured
     end-to-end through the REAL two-stream containers: in every

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import struct
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -329,6 +331,52 @@ def test_memo_columns_identity_and_session_invalidation(spark):
         assert [r[0] for r in df2.select(c.alias("y")).collect()] == [21]
     finally:
         clear_column_memo()
+
+
+def test_memo_columns_never_keys_on_none_session(spark):
+    """A plain thread has no active session; memo_columns must key its
+    entry on the instantiated session, never on None (a None entry
+    would match forever, even after the session restarts)."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from coltt_spark.functions import memo
+
+    seen = {}
+
+    def run():
+        seen["active"] = SparkSession.getActiveSession()
+        seen["tree"] = memo.memo_columns("_test.thread", lambda: F.col("x") + 1)
+
+    try:
+        t = threading.Thread(target=run)
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive() and "tree" in seen
+        session, tree = memo._MEMO["_test.thread"]
+        assert session is spark and tree is seen["tree"]
+        df = spark.createDataFrame([(1,)], "x long")
+        assert df.select(tree.alias("y")).first()["y"] == 2
+    finally:
+        memo.clear_column_memo()
+
+
+def test_sql_text_literals_reject_non_finite(spark):
+    """The single-parse SQL renderers fail loudly on inf/nan instead
+    of emitting unparseable 'infD'/'nanD' text: the wide-layout
+    distance and the quality-classifier gradient step."""
+    from coltt_spark.operators.search import vertex_search_wide, widen_vectors
+    from coltt_spark.operators.textstats import _qc_step_aggs
+
+    emb = spark.createDataFrame([(0, [0.5, 1.0])], "vec_id long, embedding array<double>")
+    wide = widen_vectors(emb, vector_col="embedding", dim=2)
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        for dist in ("cosine", "euclidean", "manhattan"):
+            with pytest.raises(ValueError, match="non-finite"):
+                vertex_search_wide(wide, [1.0, bad], distance=dist, tie_break="vec_id")
+        with pytest.raises(ValueError, match="non-finite"):
+            _qc_step_aggs([0.1, bad, 0.0, 0.0])
 
 
 def test_memo_columns_registry_trees_stable_across_constructions(spark):
