@@ -599,10 +599,14 @@ def ivf_files(path: str, centroids: Sequence[int]) -> list[str]:
 
 
 def default_max_tasks(spark: SparkSession) -> int:
-    """Default task-group count for block-index scans. Local mode pays
-    ~10-70 ms Python dispatch per task, so fewer, fatter tasks win;
-    a real cluster wants one task per file. Heuristic: a quarter of
-    the parallelism, floor 8 — override with COLTT_BLOCK_MAX_TASKS."""
+    """Default task-group count for block-index scans. Each Python task
+    carries a fixed set-up cost on top of its scan: a 2-task identity
+    ``mapInPandas`` job costs ~160 ms against ~60 ms for a pure-JVM
+    one on 4 local cores (``tools/worker_floor.py``; ~400 ms before the
+    session's worker daemon stopped re-reading zip archives per task).
+    So fewer, fatter tasks win locally; a real cluster wants one task
+    per file. Heuristic: a quarter of the parallelism, floor 8 —
+    override with COLTT_BLOCK_MAX_TASKS."""
     env = os.environ.get("COLTT_BLOCK_MAX_TASKS")
     if env:
         return int(env)
@@ -611,14 +615,17 @@ def default_max_tasks(spark: SparkSession) -> int:
 
 def _file_group_df(spark: SparkSession, files: list[str], max_tasks: int | None):
     """One row per task, each carrying a ';'-joined group of file
-    paths — built with ``parallelize(…, n)`` so the per-query plan has
-    NO shuffle, just one narrow Python stage. ``max_tasks`` trades
-    per-task dispatch overhead (~10-70 ms each on local mode) against
-    per-task scan size; at cluster scale pass len(files)."""
+    paths — a JVM ``range(0, n, 1, n)`` picking its group from a
+    literal array, so the per-query plan has NO shuffle and ONE Python
+    hop per task (the scan's ``mapInPandas``; a ``parallelize`` source
+    would add a second Python pass to convert its rows). ``max_tasks``
+    trades the fixed per-task set-up (see :func:`default_max_tasks`)
+    against per-task scan size; at cluster scale pass len(files)."""
     n_tasks = min(len(files), max_tasks or default_max_tasks(spark))
-    groups = [files[i::n_tasks] for i in range(n_tasks)]
-    rdd = spark.sparkContext.parallelize([(";".join(g),) for g in groups], n_tasks)
-    return spark.createDataFrame(rdd, "paths string")
+    groups = F.array(*[F.lit(";".join(files[i::n_tasks])) for i in range(n_tasks)])
+    return spark.range(0, n_tasks, 1, n_tasks).select(
+        F.element_at(groups, F.col("id").cast("int") + 1).alias("paths")
+    )
 
 
 def _scan_block_grouped(

@@ -64,9 +64,9 @@ def connected_components(
         # the count job materializes the checkpoint as a side effect,
         # so each propagation round costs one job where the eager
         # checkpoint + separate count cost two (each bounded below by
-        # the ~0.2 s local-mode job floor; at cluster scale, one
-        # scheduler round-trip fewer per round). Subsequent rounds
-        # read the materialized partitions, never the lineage.
+        # the local-mode job floor, ~60 ms for a JVM job; at cluster
+        # scale, one scheduler round-trip fewer per round). Subsequent
+        # rounds read the materialized partitions, never the lineage.
         new_labels = new_labels.localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")

@@ -47,6 +47,9 @@ def get_spark(
         # the test boxes have 128 GiB, so default generously
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # workers fork from a daemon whose zip importers skip the
+        # per-task re-read of unchanged archives (coltt_spark/pydaemon.py)
+        .config("spark.python.daemon.module", "coltt_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1199,3 +1199,43 @@ def test_av_dedup_plan_banded_no_allpairs(spark):
     assert "CartesianProduct" not in plan, plan[:800]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:800]
     assert "band_idx" in plan and "band_val" in plan
+
+
+def test_block_scan_source_is_jvm_range_one_python_hop(spark, tmp_path):
+    """The block scan's file-group source must be JVM-native (a Range),
+    not a Python RDD: ``Scan ExistingRDD`` would convert its rows in a
+    second Python worker pass inside every scan task. The scan's
+    ``mapInPandas`` is the only Python operator, with one task per
+    file group, groups dealt round-robin in partition order."""
+    import random
+
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.operators.blocks import _file_group_df
+    from coltt_spark.plans import executed_plan
+    from coltt_spark.schema import IndexField
+
+    files = [f"/blocks/part-{i:05d}.parquet" for i in range(11)]
+    for max_tasks in (4, 32):
+        fdf = _file_group_df(spark, files, max_tasks)
+        n = min(len(files), max_tasks)
+        assert fdf.rdd.getNumPartitions() == n
+        assert "Scan ExistingRDD" not in executed_plan(fdf)
+        got = fdf.rdd.glom().map(lambda rows: [r.paths for r in rows]).collect()
+        assert [p for part in got for p in part] == [
+            ";".join(files[i::n]) for i in range(n)
+        ]
+        assert all(len(part) == 1 for part in got)
+
+    rng = random.Random(5)
+    coll = Catalog(spark, str(tmp_path / "wh")).create_collection(
+        "srcplan", dim=6, distance="cosine",
+        fields=[IndexField("id", "string", primary_key=True)],
+        layout="blocks", block_dtype="float64",
+    )
+    coll.upsert(
+        [{"id": f"r{i}", "vector": [rng.gauss(0, 1) for _ in range(6)]} for i in range(100)]
+    )
+    coll.flush()
+    plan = executed_plan(coll.search([rng.gauss(0, 1) for _ in range(6)], limit=5))
+    assert "Scan ExistingRDD" not in plan, plan[:800]
+    assert plan.count("MapInPandas") == 1, plan[:800]
