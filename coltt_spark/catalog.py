@@ -33,7 +33,7 @@ import shutil
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,6 +84,15 @@ def _link_parts(src: str, dst: str) -> None:
             os.link(s, d)
         except OSError:
             shutil.copy2(s, d)
+
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` eagerly local-checkpointed, and its row count, both from
+    the one checkpoint job: an ``Observation`` counts the rows as they
+    are materialized, in place of a second ``count()`` job."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
 
 
 @dataclass(frozen=True)
@@ -506,8 +515,7 @@ class Collection:
         order = [f.name for f in design.fields] + (
             [] if any(f.type == "vector" for f in design.fields) else [_VEC]
         )
-        new = prepared.select(*order, _COMMIT).localCheckpoint(eager=True)
-        n = new.count()
+        new, n = _checkpoint_counted(prepared.select(*order, _COMMIT))
         # no broadcast hint: the batch may be any size — AQE picks the
         # join strategy from the materialized checkpoint stats
         survivors = self._view.join(new.select(pk), on=pk, how="left_anti")
@@ -1317,18 +1325,17 @@ class Collection:
         update."""
         schema = self._storage_schema()
         pk = self.manifest.index_design.primary_key
-        delta = (
+        delta, n_delta = _checkpoint_counted(
             self._pending
             if self._pending is not None
             else self.spark.createDataFrame([], schema)
-        ).localCheckpoint(eager=True)
-        n_delta = delta.count()
+        )
         base = self.spark.read.schema(schema).parquet(self._data_dir(old_v))
         dead_parts = []
         if self._upserted_pks is not None:
             dead_parts.append(
                 base.join(
-                    F.broadcast(self._upserted_pks.distinct()), on=pk, how="left_semi"
+                    F.broadcast(self._upserted_pks), on=pk, how="left_semi"
                 ).select(_COMMIT)
             )
         for ast in self._delete_asts:

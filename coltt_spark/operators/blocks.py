@@ -601,11 +601,12 @@ def ivf_files(path: str, centroids: Sequence[int]) -> list[str]:
 def default_max_tasks(spark: SparkSession) -> int:
     """Default task-group count for block-index scans. Each Python task
     carries a fixed set-up cost on top of its scan: a 2-task identity
-    ``mapInPandas`` job costs ~160 ms against ~60 ms for a pure-JVM
+    ``mapInPandas`` job costs ~120 ms against ~60 ms for a pure-JVM
     one on 4 local cores (``tools/worker_floor.py``; ~400 ms before the
-    session's worker daemon stopped re-reading zip archives per task).
-    So fewer, fatter tasks win locally; a real cluster wants one task
-    per file. Heuristic: a quarter of the parallelism, floor 8 —
+    session's worker daemon stopped re-reading zip archives per task,
+    ~160 ms before workers moved from loopback TCP to Unix domain
+    sockets). So fewer, fatter tasks win locally; a real cluster wants
+    one task per file. Heuristic: a quarter of the parallelism, floor 8 —
     override with COLTT_BLOCK_MAX_TASKS."""
     env = os.environ.get("COLTT_BLOCK_MAX_TASKS")
     if env:

@@ -4,14 +4,44 @@ Local mode is the test substrate; the settings are chosen so the same
 plans scale to a multi-executor cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), Arrow for the few Pandas-UDF paths,
 and shuffle partitions sized to the parallelism actually available
-instead of the 200 default.
+instead of the 200 default. Python workers reach the JVM over Unix
+domain sockets, not loopback TCP.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+#: longest AF_UNIX socket path (``sun_path`` is 108 bytes with its NUL)
+_UDS_PATH_MAX = 107
+#: pyspark and the JVM name their sockets ``<dir>/.<uuid4>.sock``
+_UDS_NAME_BYTES = len("/." + "0" * 36 + ".sock")
+_UDS_PREFIX = "coltt-uds-"
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """The process's directory for the session's Unix domain sockets.
+
+    Those sockets skip Spark's auth secret, so the directory is
+    owner-only (``mkdtemp`` makes it 0700). It is made under the temp
+    dir when every socket path in it fits ``_UDS_PATH_MAX``, otherwise
+    under ``/tmp``, and removed when the process exits.
+    """
+    base = tempfile.gettempdir()
+    # mkdtemp names the directory "<base>/<prefix><8 random chars>"
+    longest = len(os.fsencode(base)) + 1 + len(_UDS_PREFIX) + 8 + _UDS_NAME_BYTES
+    path = tempfile.mkdtemp(
+        prefix=_UDS_PREFIX, dir=base if longest <= _UDS_PATH_MAX else "/tmp"
+    )
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -50,6 +80,12 @@ def get_spark(
         # workers fork from a daemon whose zip importers skip the
         # per-task re-read of unchanged archives (coltt_spark/pydaemon.py)
         .config("spark.python.daemon.module", "coltt_spark.pydaemon")
+        # Python workers (and the driver's result and accumulator
+        # servers) talk to the JVM over Unix domain sockets: on loopback
+        # TCP each Python task waited ~40 ms for its first Arrow batch
+        # (Nagle's algorithm meeting a delayed ACK)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1239,3 +1239,59 @@ def test_block_scan_source_is_jvm_range_one_python_hop(spark, tmp_path):
     plan = executed_plan(coll.search([rng.gauss(0, 1) for _ in range(6)], limit=5))
     assert "Scan ExistingRDD" not in plan, plan[:800]
     assert plan.count("MapInPandas") == 1, plan[:800]
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs that ``action()`` runs, counted by its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_upsert_and_delta_flush_job_counts(spark, tmp_path):
+    """A PK-unique checkpointed batch upserts in ONE job: the eager
+    checkpoint also counts the rows (an ``Observation``), with no
+    second ``count()`` job. A one-batch blocks delta flush counts its
+    delta in its checkpoint job too, and semi-joins the upserted PKs
+    without a ``distinct()`` shuffle."""
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, 1, 2).select(
+            F.concat(F.lit("r"), F.col("id").cast("string")).alias("id"),
+            (F.col("id") % 5).cast("int").alias("grp"),
+            F.array(*[F.sin(F.col("id") + k) for k in range(4)]).alias("vector"),
+        ).localCheckpoint(eager=True)
+
+    coll = Catalog(spark, str(tmp_path / "wh")).create_collection(
+        "jobcount", dim=4, distance="euclidean",
+        fields=[IndexField("id", "string", primary_key=True), IndexField("grp", "integer")],
+        layout="blocks",
+    )
+    coll.upsert_df(batch(0, 200), dedupe_batch=False)
+    coll.flush()  # v1: full pack
+    updates = batch(150, 250)  # 50 updates, 50 inserts
+    n = []
+    assert _jobs_run(spark, lambda: n.append(coll.upsert_df(updates, dedupe_batch=False))) == 1
+    assert n == [100]
+    base = spark.read.parquet(coll._data_dir(1))
+    superseded = base.filter(F.col("id").isin([f"r{i}" for i in range(150, 200)]))
+    want_tombs = sorted(r[0] for r in superseded.select("_commit_id").collect())
+    # as measured: the delta checkpoint (which also counts the delta),
+    # the delta write, then the AQE stage and broadcast jobs of the
+    # tombstone and block-pack writes
+    assert _jobs_run(spark, coll.flush) == 7
+    assert coll.manifest.version == 2 and coll.count() == 250
+    tombs = spark.read.parquet(coll._tombstones_dir(2)).collect()
+    assert sorted(r[0] for r in tombs) == want_tombs and len(want_tombs) == 50

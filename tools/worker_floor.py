@@ -11,7 +11,9 @@ session it reports the median of 20 warm runs of:
   ``mapInPandas``;
 - ``worker_invalidate_caches_ms``: ``importlib.invalidate_caches()``
   timed inside a worker (the slower of the two tasks), the call
-  pyspark makes at the start of every Python task.
+  pyspark makes at the start of every Python task;
+- ``transport``: ``"unix"`` or ``"tcp"``, the socket the Python workers
+  reach the JVM over (``spark.python.unix.domain.socket.enabled``).
 
 Usage: python tools/worker_floor.py
 """
@@ -75,10 +77,12 @@ def main() -> None:
     inval = statistics.median(
         max(r.ms for r in timed.collect()) for _ in range(RUNS)
     )
+    uds = spark.conf.get("spark.python.unix.domain.socket.enabled", "false")
     print(
         json.dumps(
             {
                 "cores": spark.sparkContext.defaultParallelism,
+                "transport": "unix" if uds.lower() == "true" else "tcp",
                 "runs": RUNS,
                 "jvm_job_ms": round(jvm, 1),
                 "python_job_ms": round(py, 1),
