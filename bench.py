@@ -234,7 +234,7 @@ def _bench_flat_1m(spark, sf_dir: str) -> dict:
     sec_collection_delta_best = round(min(runs_cd), 4)
     shutil.rmtree(wh, ignore_errors=True)
     # IVF scale path: build the index once as PER-CENTROID PACKED
-    # BLOCK FILES (the serving layout catalog._write_ivf uses) — a
+    # BLOCK FILES (the serving layout Collection._write_index writes) — a
     # probe prunes by path to its nprobe/n_centroids inverted lists
     # and scans them through the same node-local spool as the block
     # index, so probe cost is ~(nprobe/n_centroids) of a packed scan

@@ -25,12 +25,14 @@ deliberately identical.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 import os
 import re
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -372,10 +374,10 @@ class Collection:
             df = df.join(dead, on=_COMMIT, how="left_anti")
         return df
 
-    def _write_manifest(self) -> None:
+    def _write_manifest(self, manifest: Manifest) -> None:
         tmp = os.path.join(self.root, "manifest.json.tmp")
         with open(tmp, "w") as f:
-            json.dump(self.manifest.to_json(), f, indent=2)
+            json.dump(manifest.to_json(), f, indent=2)
         os.replace(tmp, os.path.join(self.root, "manifest.json"))
 
     # -- DML ----------------------------------------------------------
@@ -1195,51 +1197,45 @@ class Collection:
     # -- lifecycle ----------------------------------------------------
 
     def flush(self, *, compact: bool = False) -> None:
-        """Materialize the in-memory view to a new snapshot version and
-        atomically repoint the manifest (durability boundary, like
-        coltt Flush → MinIO). For ``layout="blocks"`` collections this
-        is also where vectors are packed into the block index — the
-        Spark analogue of the reference rebuilding its packed shard
-        store on Flush (``edge/none_vectorstore.go:129-180``): pack
-        before the manifest repoint so readers only ever see a version
-        whose index is complete.
+        """Materialize the in-memory view as the next snapshot version
+        and atomically repoint the manifest at it: the durability
+        boundary (coltt Flush → MinIO), one operation like the
+        reference's store rebuild (``edge/none_vectorstore.go:129-180``).
+        Every flush makes the same writes, in this order:
 
-        Blocks collections flush INCREMENTALLY once a base index
-        exists: only rows new since the previous version are written
-        and packed (delta files beside hardlinked base files, plus a
-        tombstone list of superseded commit ids — the Iceberg/Delta
-        manifest shape, realized with hardlinks on a local FS), so
-        flush cost scales with the CHANGE, not the collection. The
-        reference's per-write in-place store update
-        (``edge/none_vectorstore.go:66-103``) amortizes the same way.
-        ``compact=True`` (or :meth:`compact`) forces the full rewrite,
-        folding deltas and dropping tombstones.
+        1. the snapshot of version ``v+1``: the whole view (a full
+           flush), or, incrementally, only the rows changed since the
+           last flush beside hardlinks to version ``v``'s parts, plus a
+           tombstone table of the commit ids they supersede
+           (:meth:`_write_delta_snapshot`; the Iceberg/Delta manifest
+           shape, realized with hardlinks on a local FS);
+        2. for a packed layout, the index of the same rows through the
+           one index writer (:meth:`_write_index`): a full build trains
+           its quantizer, a delta routes the changed rows into version
+           ``v``'s fixed quantizer and hardlinks ``v``'s index files;
+        3. the manifest, last. Nothing before it commits: a flush that
+           fails earlier leaves the handle and the disk at version
+           ``v``, and the next flush first clears whatever the failed
+           one left under ``v+1``.
 
-        IVF collections flush incrementally too, with the standard IVF
-        delta discipline: centroids stay FIXED (they only move on an
-        explicit compact/rebuild) and new rows are routed into the
-        existing inverted lists (one broadcast-matmul assignment over
-        the delta only), appended as new part files inside the probed
-        partition layout; superseded index rows die via the same
-        commit-id tombstone mask. When any inverted list's part-file
-        fan-out has grown by ``ivf_max_list_files`` since the last
-        full build (manifest knob, default 10, 0 disables), the flush
-        AUTO-COMPACTS — full fold instead of append — so probe-time
-        read amplification stays bounded without anyone remembering
-        to call :meth:`compact`."""
+        Packed collections flush incrementally once a base index
+        exists, so flush cost scales with the change, not the
+        collection, the way the reference's per-write in-place store
+        update amortizes (``edge/none_vectorstore.go:66-103``).
+        ``compact=True`` (or :meth:`compact`) forces the full rewrite:
+        deltas fold, tombstones drop, IVF/PQ quantizers retrain. An
+        ivf/ivfpq flush also auto-compacts once any inverted list's
+        part-file fan-out has grown by ``ivf_max_list_files`` since the
+        last full build (manifest knob, default 10, 0 disables), so
+        probe-time read amplification stays bounded without anyone
+        remembering to call :meth:`compact`."""
         m = self.manifest
-        old_v = m.version
-        new_v = old_v + 1
+        old_v, new_v = m.version, m.version + 1
+        vcols = self._vector_cols()
         if m.layout == "blocks":
-            idx_ready = all(
-                os.path.isdir(self._blocks_dir(vc, old_v))
-                for vc in self._vector_cols()
-            )
+            idx_ready = all(os.path.isdir(self._blocks_dir(vc, old_v)) for vc in vcols)
         elif m.layout in ("ivf", "ivfpq"):
-            idx_ready = all(
-                self._ivf_ready(vc, old_v, strict=False)
-                for vc in self._vector_cols()
-            )
+            idx_ready = all(self._ivf_ready(vc, old_v, strict=False) for vc in vcols)
         else:
             idx_ready = False
         incremental = (
@@ -1252,7 +1248,7 @@ class Collection:
             and any(
                 self._ivf_worst_list_fanout(vc, old_v) - m.ivf_base_list_files
                 >= m.ivf_max_list_files
-                for vc in self._vector_cols()
+                for vc in vcols
             )
         ):
             # Auto-compaction: the delta layout's per-list file fan-out
@@ -1266,38 +1262,31 @@ class Collection:
             # 10 keeps the drift under ~10% while amortizing the
             # rebuild over ~10 delta flushes.
             incremental = False
+        # the manifest never names a version above its own, so whatever
+        # is under v+1 is a failed flush's: reused, it would serve that
+        # flush's rows under commit ids since handed out again
+        self._drop_version(new_v)
         if incremental:
-            self._flush_delta(old_v, new_v)
+            rows, n_rows = self._write_delta_snapshot(old_v, new_v)
         else:
             self._view.write.mode("overwrite").parquet(self._data_dir(new_v))
-            if m.layout == "blocks":
-                self._write_blocks(new_v)
-            elif m.layout in ("ivf", "ivfpq"):
-                if m.layout == "ivf":
-                    self._write_ivf(new_v)
-                else:
-                    self._write_ivfpq(new_v)
-                # record the fresh layout's fan-out — the baseline the
-                # growth-triggered auto-compaction measures against
-                m.ivf_base_list_files = max(
-                    (self._ivf_worst_list_fanout(vc, new_v) for vc in self._vector_cols()),
-                    default=0,
-                )
-        m.version = new_v
-        self._write_manifest()
+            rows, n_rows = self.read_version(new_v), 0
+        nxt = dataclasses.replace(m, version=new_v)
+        if m.layout != "rows":
+            self._write_index(rows, new_v, old_v if incremental else None, n_rows)
+        if m.layout in ("ivf", "ivfpq") and not incremental:
+            # the fresh layout's fan-out: the baseline the
+            # growth-triggered auto-compaction measures against
+            nxt.ivf_base_list_files = max(
+                (self._ivf_worst_list_fanout(vc, new_v) for vc in vcols), default=0
+            )
+        self._write_manifest(nxt)
+        self.manifest = nxt
         self._view = self._read_version()
         self._dirty = False
         self._reset_pending()
         if not m.versioning:
-            for old_dir in (
-                self._data_dir(old_v),
-                os.path.join(self.root, f"v{old_v}_blocks"),
-                os.path.join(self.root, f"v{old_v}_ivf"),
-                os.path.join(self.root, f"v{old_v}_tombstones"),
-            ):
-                if os.path.isdir(old_dir):
-                    # hardlinked inodes survive in the new version
-                    shutil.rmtree(old_dir)
+            self._drop_version(old_v)
 
     def compact(self) -> None:
         """Full rewrite: fold all delta files and tombstones into one
@@ -1305,24 +1294,33 @@ class Collection:
         a delta-maintained collection runs off the serving path)."""
         self.flush(compact=True)
 
-    def _flush_delta(self, old_v: int, new_v: int) -> None:
-        """Incremental blocks flush. The new version is a MANIFEST
-        over immutable files: hardlinks to every base data/index part
+    def _drop_version(self, v: int) -> None:
+        """Remove version ``v``'s snapshot, index and tombstone
+        directories. Files hardlinked into a later version live on
+        there."""
+        for suffix in ("", "_blocks", "_ivf", "_tombstones"):
+            d = os.path.join(self.root, f"v{v}{suffix}")
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+
+    def _write_delta_snapshot(self, old_v: int, new_v: int) -> tuple[DataFrame, int]:
+        """Write version ``new_v``'s snapshot as a MANIFEST over
+        immutable files: hardlinks to every base data part
         (metadata-only ops — on an object store these would be file
         references in a table manifest) + freshly written delta parts
         + a cumulative tombstone table (commit ids superseded by
         upserts or removed by deletes). Readers subtract tombstones;
-        the block scan masks them per file.
+        the block scan masks them per file. Returns the delta rows
+        and their count, for the index writer.
 
         Cost shape: delta rows come straight from the DML bookkeeping
         (:meth:`_track_upsert` — already checkpointed batches, no
         collection diff), and tombstones from ONE column-pruned pass
         over the base files (PK semi-join against the upserted-PK set
         + the recorded delete predicates; Catalyst prunes the scan to
-        the referenced columns). Nothing re-reads, rewrites, or
-        re-packs the unchanged bulk — flush work is O(change), the
-        delta analogue of the reference's per-write in-place store
-        update."""
+        the referenced columns). Nothing re-reads or rewrites the
+        unchanged bulk — the delta analogue of the reference's
+        per-write in-place store update."""
         schema = self._storage_schema()
         pk = self.manifest.index_design.primary_key
         delta, n_delta = _checkpoint_counted(
@@ -1331,6 +1329,7 @@ class Collection:
             else self.spark.createDataFrame([], schema)
         )
         base = self.spark.read.schema(schema).parquet(self._data_dir(old_v))
+        tomb_schema = T.StructType([T.StructField(_COMMIT, T.LongType(), False)])
         dead_parts = []
         if self._upserted_pks is not None:
             dead_parts.append(
@@ -1345,109 +1344,161 @@ class Collection:
             dead_parts.append(base.filter(compile_filter(base, ast)).select(_COMMIT))
         old_tomb = self._tombstones_dir(old_v)
         if os.path.isdir(old_tomb):
-            dead_parts.append(
-                self.spark.read.schema(
-                    T.StructType([T.StructField(_COMMIT, T.LongType(), False)])
-                ).parquet(old_tomb)
-            )
+            dead_parts.append(self.spark.read.schema(tomb_schema).parquet(old_tomb))
         if dead_parts:
-            from functools import reduce
-
-            dead = reduce(lambda a, b: a.unionByName(b), dead_parts).distinct()
+            dead = reduce(DataFrame.unionByName, dead_parts).distinct()
         else:
-            dead = self.spark.createDataFrame(
-                [], T.StructType([T.StructField(_COMMIT, T.LongType(), False)])
-            )
+            dead = self.spark.createDataFrame([], tomb_schema)
         delta.write.mode("overwrite").parquet(self._data_dir(new_v))
         _link_parts(self._data_dir(old_v), self._data_dir(new_v))
         dead.write.mode("overwrite").parquet(self._tombstones_dir(new_v))
-        if self.manifest.layout == "ivf":
-            self._flush_delta_ivf(old_v, new_v, delta, n_delta)
-            return
-        if self.manifest.layout == "ivfpq":
-            self._flush_delta_ivfpq(old_v, new_v, delta, n_delta)
-            return
-        # pack ONLY the delta rows; base block files ride along as links
-        from coltt_spark.operators.blocks import pack_blocks, write_block_index
+        return delta, n_delta
 
-        m = self.manifest
-        df = delta
-        if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
-        meta_cols = [
-            f.name for f in schema
-            if f.name not in self._vector_cols() and f.name != _COMMIT
-        ]
-        n_files = max(1, min(
-            self.spark.sparkContext.defaultParallelism,
-            -(-n_delta // 32768),  # ceil — don't shatter a small delta
-        ))
-        for vc in self._vector_cols():
-            blocks = pack_blocks(
-                df.select(_COMMIT, *meta_cols, vc),
-                id_col=_COMMIT,
-                vec_col=vc,
-                dim=m.dim,
-                dtype=m.block_dtype,
-                payload_cols=meta_cols,
-            )
-            write_block_index(blocks, self._blocks_dir(vc, new_v), n_files=n_files)
-            _link_parts(self._blocks_dir(vc, old_v), self._blocks_dir(vc, new_v))
-
-    def _flush_delta_ivf(
-        self, old_v: int, new_v: int, delta: DataFrame, n_delta: int
+    def _write_index(
+        self, rows: DataFrame, version: int, base: int | None, n_rows: int
     ) -> None:
-        """Incremental IVF index maintenance: centroids are FIXED
-        (loaded from the previous version — they only move on
-        compact), delta rows are routed into the existing inverted
-        lists with one broadcast-matmul assignment
-        (:func:`coltt_spark.operators.ann.ivf_assign`), PACKED into
-        per-list block files (``pack_blocks(group_col="centroid")``)
-        and appended INSIDE the centroid-partitioned block layout, so
-        probe-time path pruning keeps working unchanged. Base index
-        files ride along as hardlinks; superseded rows are masked by
-        the commit-id tombstones the shared delta flush just wrote.
-        Flush work is O(delta), never O(collection)."""
+        """The one index writer behind every flush: pack ``rows``
+        (storage schema) into version ``version``'s index, the same way
+        for every layout. Without ``base``, ``rows`` is the whole
+        snapshot and the IVF/PQ quantizer is trained on it; with it,
+        ``rows`` are the ``n_rows`` changed rows, the quantizer is
+        ``base``'s (fixed: it only moves on a full build), and
+        ``base``'s index files are hardlinked in beside the new ones;
+        tombstones mask the superseded ones.
+
+        Rows are dequantized once and keep ``(commit id, payload…)``
+        throughout: the commit id is the block row id (the handle
+        tombstones use), and the payload is every non-vector field, so
+        winners return their metadata in-scan. An ivf/ivfpq index
+        routes the rows through
+        :func:`~coltt_spark.operators.ann.ivf_assign`, which appends
+        ``centroid`` to every column, so nothing joins back to the
+        snapshot. Per vector column:
+
+        - ``blocks``: one block index (``write_block_index``);
+        - ``ivf``: each inverted list packed into block files under its
+          own ``blocks/centroid=<c>/`` directory (``pack_blocks(
+          group_col="centroid")`` + ``partitionBy``, so no block spans
+          two lists). A probe prunes by PATH — the Spark analogue of
+          HNSW's sub-linear candidate generation
+          (``core/vectorindex/hnsw.go:243-278``) — and scans through the
+          same node-local spool as ``blocks``;
+        - ``ivfpq`` (IVFADC, Jégou et al. 2011; the reference declares
+          PQ and never implements it, ``idl/proto/v3/core.proto:105-112``):
+          the same tree over each row's M uint8 codes of its residual
+          against its centroid, so a row costs M bytes instead of dim·4;
+          plus the exact vectors as ``(commit id, vector)`` rows under
+          ``vecs/centroid=<c>/``, the refined search's path-pruned
+          rerank source, stored as array<double> so the rerank (and its
+          SQL oracle) is unchanged to the bit.
+
+        The quantizer lands beside the lists as ``centroids.npy`` (+
+        ``book.npy``, + ``rotation.npy`` with OPQ). A full build writes
+        ``defaultParallelism`` files per tree, a delta one per
+        ``block_rows`` rows up to that, so a small delta is not
+        shattered."""
         from coltt_spark.operators.ann import ivf_assign
-        from coltt_spark.operators.blocks import pack_blocks
+        from coltt_spark.operators.blocks import pack_blocks, write_block_index
+        from coltt_spark.operators.pq import _encode_udf, ivf_residuals
 
         m = self.manifest
-        schema = self._storage_schema()
-        df = delta
+        vcols = self._vector_cols()
         if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
+            for vc in vcols:
+                rows = rows.withColumn(vc, dequantize(m.quantization, vc))
+        # payload = every non-vector field in STORAGE ORDER (pk
+        # included) — must match _payload_schema()
         pcols = [
-            f.name for f in schema
-            if f.name not in self._vector_cols() and f.name != _COMMIT
+            f.name for f in self._storage_schema()
+            if f.name not in vcols and f.name != _COMMIT
         ]
-        n_files = max(1, min(
-            self.spark.sparkContext.defaultParallelism,
-            -(-max(n_delta, 1) // 32768),  # ceil — don't shatter a small delta
-        ))
-        for vc in self._vector_cols():
-            old_dir = self._ivf_dir(vc, old_v)
-            new_dir = self._ivf_dir(vc, new_v)
-            Cn = np.load(os.path.join(old_dir, "centroids.npy"))
-            assigned = ivf_assign(
-                df.select(_COMMIT, vc), Cn, id_col=_COMMIT, vec_col=vc
-            ).join(df.select(_COMMIT, *pcols), on=_COMMIT)
-            blocks = pack_blocks(
-                assigned.repartition(n_files, "centroid"),
-                id_col=_COMMIT,
-                vec_col=vc,
-                dim=m.dim,
-                dtype=m.block_dtype,
+        n_files = self.spark.sparkContext.defaultParallelism
+        if base is not None:
+            block_rows = pack_blocks.__kwdefaults__["block_rows"]
+            n_files = max(1, min(n_files, -(-n_rows // block_rows)))
+        for vc in vcols:
+            src = rows.select(_COMMIT, *pcols, vc)
+            pack = dict(
+                id_col=_COMMIT, vec_col=vc, dim=m.dim, dtype=m.block_dtype,
                 payload_cols=pcols,
-                group_col="centroid",
             )
-            os.makedirs(os.path.join(new_dir, "blocks"), exist_ok=True)
-            _link_tree(os.path.join(old_dir, "blocks"), os.path.join(new_dir, "blocks"))
-            blocks.write.mode("append").partitionBy("centroid").parquet(
-                os.path.join(new_dir, "blocks")
+            if m.layout == "blocks":
+                out = self._blocks_dir(vc, version)
+                write_block_index(pack_blocks(src, **pack), out, n_files=n_files)
+                if base is not None:
+                    _link_parts(self._blocks_dir(vc, base), out)
+                continue
+            quant = self._quantizer(rows, vc, base)
+            routed = ivf_assign(src, quant["centroids"], id_col=_COMMIT, vec_col=vc)
+            lists, trees = routed, {}
+            if m.layout == "ivfpq":
+                # one file per inverted list and writer
+                trees["vecs"] = routed.select(
+                    "centroid", _COMMIT, F.col(vc).cast("array<double>").alias(vc)
+                ).repartition(n_files, "centroid")
+                encode = _encode_udf(quant["book"], rotation=quant.get("rotation"))
+                lists = ivf_residuals(routed, quant["centroids"], vec_col=vc).select(
+                    _COMMIT, *pcols, "centroid", encode(F.col("_rv")).alias("_codes")
+                )
+                pack.update(vec_col="_codes", dim=m.pq_subspaces, dtype="uint8")
+            trees["blocks"] = pack_blocks(
+                lists.repartition(n_files, "centroid"), group_col="centroid", **pack
             )
-            np.save(os.path.join(new_dir, "centroids.npy"), Cn)
+            out = self._ivf_dir(vc, version)
+            for name, tree in trees.items():
+                # the lists live under <dir>/<tree> to keep partition
+                # discovery away from the sidecars
+                tree.write.mode("overwrite").partitionBy("centroid").parquet(
+                    os.path.join(out, name)
+                )
+                if base is not None:
+                    _link_tree(
+                        os.path.join(self._ivf_dir(vc, base), name), os.path.join(out, name)
+                    )
+            for name, arr in quant.items():
+                np.save(os.path.join(out, f"{name}.npy"), arr)
+
+    def _quantizer(
+        self, rows: DataFrame, vc: str, base: int | None
+    ) -> dict[str, np.ndarray]:
+        """The IVF quantizer of ``vc`` by sidecar name: the coarse
+        ``centroids``, plus for ivfpq the residual PQ ``book`` and, with
+        OPQ, its ``rotation``. A delta loads ``base``'s. A full build
+        trains them on the dequantized snapshot ``rows`` keyed on the
+        PK: md5-seeded, Lloyd-refined k-means
+        (:func:`~coltt_spark.operators.ann.ivf_build`), then codebooks
+        on the residuals against it
+        (:func:`~coltt_spark.operators.pq.pq_train`) or, with OPQ (Ge
+        et al. 2014), an orthogonal rotation and codebooks learned on a
+        deterministic residual sample. The coarse quantizer, the vecs
+        rerank tree and the exact rerank ignore the rotation:
+        distances are rotation-invariant."""
+        if base is not None:
+            d = self._ivf_dir(vc, base)
+            return {
+                name: np.load(os.path.join(d, f"{name}.npy"))
+                for name in ("centroids", "book", "rotation")
+                if os.path.isfile(os.path.join(d, f"{name}.npy"))
+            }
+        from coltt_spark.operators.ann import ivf_build
+        from coltt_spark.operators.pq import ivf_residuals, opq_sample, opq_train_np, pq_train
+
+        m = self.manifest
+        pk = m.index_design.primary_key
+        assigned, Cn = ivf_build(
+            rows.select(pk, vc), id_col=pk, vec_col=vc,
+            n_centroids=m.ivf_centroids, kmeans_iters=m.ivf_kmeans_iters,
+        )
+        quant = {"centroids": Cn}
+        if m.layout == "ivfpq":
+            resid = ivf_residuals(assigned, Cn, vec_col=vc)
+            geometry = dict(n_subspaces=m.pq_subspaces, n_codes=m.pq_codes)
+            if m.pq_opq:
+                sample = opq_sample(resid, id_col=pk, vec_col="_rv")
+                quant["rotation"], quant["book"] = opq_train_np(sample, **geometry)
+            else:
+                quant["book"] = pq_train(resid, id_col=pk, vec_col="_rv", **geometry)
+        return quant
 
     def versions(self) -> list[int]:
         """Snapshot versions currently retained on storage."""
@@ -1477,334 +1528,9 @@ class Collection:
         removes all non-latest object versions from a versioned bucket
         (``edge/edge_helper.go:97-105``,
         ``pkg/minio/bucket_handler.go:106-119``)."""
-        cur = self.manifest.version
         for v in self.versions():
-            if v != cur:
-                for d in (
-                    self._data_dir(v),
-                    os.path.join(self.root, f"v{v}_blocks"),
-                    os.path.join(self.root, f"v{v}_ivf"),
-                    os.path.join(self.root, f"v{v}_tombstones"),
-                ):
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
-
-    def _write_blocks(self, version: int) -> None:
-        """Pack each vector column of snapshot ``version`` into a
-        written block index keyed by ``_commit_id`` (unique int64 per
-        live row — the block store's surrogate id, joined back to the
-        snapshot at query time to recover metadata/PK)."""
-        from coltt_spark.operators.blocks import pack_blocks, write_block_index
-
-        m = self.manifest
-        df = self.spark.read.schema(self._storage_schema()).parquet(self._data_dir(version))
-        if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
-        meta_cols = [
-            f.name for f in self._storage_schema()
-            if f.name not in self._vector_cols() and f.name != _COMMIT
-        ]
-        for vc in self._vector_cols():
-            blocks = pack_blocks(
-                df.select(_COMMIT, *meta_cols, vc),
-                id_col=_COMMIT,
-                vec_col=vc,
-                dim=m.dim,
-                dtype=m.block_dtype,
-                payload_cols=meta_cols,  # winners return metadata in-scan
-            )
-            write_block_index(blocks, self._blocks_dir(vc, version))
-
-    def _write_ivf(self, version: int) -> None:
-        """Build the IVF index for snapshot ``version``: deterministic
-        md5-seeded centroids + Lloyd refinement (operators/ann.py),
-        then each inverted list PACKED INTO BLOCK FILES under its own
-        ``centroid=<c>/`` directory (``pack_blocks(group_col=
-        "centroid")`` + ``partitionBy`` — no block spans two lists).
-        A probe prunes by PATH (only the probed lists' files are ever
-        opened — the Spark analogue of HNSW's sub-linear candidate
-        generation, ``core/vectorindex/hnsw.go:243-278``) and scans
-        them through the same node-local decoded-matrix spool as the
-        ``blocks`` layout, so probe cost is (nprobe/n_centroids) of a
-        packed full scan instead of a per-query Parquet array decode.
-        Metadata + the primary key ride in each block's payload (and
-        the commit id is the block row id), so probes serve filters
-        and results with no second scan and delta flushes tombstone
-        superseded rows by commit id. Centroids land beside the lists
-        as ``centroids.npy``."""
-        from coltt_spark.operators.ann import ivf_build
-        from coltt_spark.operators.blocks import pack_blocks
-
-        m = self.manifest
-        df = self.spark.read.schema(self._storage_schema()).parquet(self._data_dir(version))
-        if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
-        pk = m.index_design.primary_key
-        # payload = every non-vector field in STORAGE ORDER (pk
-        # included) — must match _payload_schema()
-        pcols = [
-            f.name for f in self._storage_schema()
-            if f.name not in self._vector_cols() and f.name != _COMMIT
-        ]
-        n_files = self.spark.sparkContext.defaultParallelism
-        for vc in self._vector_cols():
-            assigned, Cn = ivf_build(
-                df.select(pk, vc),
-                id_col=pk,
-                vec_col=vc,
-                n_centroids=m.ivf_centroids,
-                kmeans_iters=m.ivf_kmeans_iters,
-            )
-            assigned = assigned.join(
-                df.select(_COMMIT, *pcols), on=pk
-            )
-            blocks = pack_blocks(
-                assigned.repartition(n_files, "centroid"),
-                id_col=_COMMIT,
-                vec_col=vc,
-                dim=m.dim,
-                dtype=m.block_dtype,
-                payload_cols=pcols,
-                group_col="centroid",
-            )
-            out = self._ivf_dir(vc, version)
-            # lists under <dir>/blocks keep partition discovery away
-            # from the centroids sidecar
-            blocks.write.mode("overwrite").partitionBy("centroid").parquet(
-                os.path.join(out, "blocks")
-            )
-            np.save(os.path.join(out, "centroids.npy"), Cn)
-
-    def _write_ivfpq(self, version: int) -> None:
-        """Build the fused IVF-PQ (IVFADC) serving index for snapshot
-        ``version`` — the collection-level form of
-        :func:`coltt_spark.operators.pq.ivfpq_build` (Jégou et al.
-        2011; the reference DECLARES PQ as a collection quantization
-        and never implements it, ``idl/proto/v3/core.proto:105-112``):
-        the coarse quantizer is the same md5-seeded, Lloyd-refined
-        k-means as the ivf layout, PQ codebooks are trained on the
-        RESIDUALS (stored vector − coarse centroid), and each row's M
-        uint8 codes are packed into per-centroid block files through
-        the very same machinery as the ivf layout (dim = M, dtype
-        uint8, metadata in the payload) — so path pruning, payload
-        filters, tombstones, and the node-local spool all apply
-        unchanged while each row costs M BYTES instead of dim·4.
-        Sidecars: ``centroids.npy`` (coarse) + ``book.npy`` (M, ks,
-        dsub residual codebooks).
-
-        Beside the code blocks, the EXACT vectors land as plain
-        ``(commit id, vector)`` Parquet rows under ``vecs/centroid=<c>/``
-        — the refined search's rerank source. Refine candidates are by
-        construction members of the probed lists, so reranking needs
-        only the probed lists' vector rows: path-pruned exactly like
-        the code scan, the rerank reads nprobe/n_centroids of the
-        vector bytes instead of joining against a full snapshot scan
-        (the one plan that would equal a flat exhaustive scan's IO at
-        100×, VERDICT r9 #2). Stored as array<double> of the SAME
-        dequantized values the snapshot join used to produce, so the
-        rerank's sequential-fold arithmetic — and therefore the SQL
-        oracle — is unchanged to the bit."""
-        from coltt_spark.operators.ann import ivf_build
-        from coltt_spark.operators.blocks import pack_blocks
-        from coltt_spark.operators.pq import _encode_udf, pq_train
-
-        m = self.manifest
-        if m.dim % m.pq_subspaces:
-            raise ValueError(
-                f"dim {m.dim} not divisible by pq_subspaces {m.pq_subspaces}"
-            )
-        df = self.spark.read.schema(self._storage_schema()).parquet(
-            self._data_dir(version)
-        )
-        if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
-        pk = m.index_design.primary_key
-        pcols = [
-            f.name for f in self._storage_schema()
-            if f.name not in self._vector_cols() and f.name != _COMMIT
-        ]
-        n_files = self.spark.sparkContext.defaultParallelism
-        for vc in self._vector_cols():
-            assigned, Cn = ivf_build(
-                df.select(pk, vc),
-                id_col=pk,
-                vec_col=vc,
-                n_centroids=m.ivf_centroids,
-                kmeans_iters=m.ivf_kmeans_iters,
-            )
-            resid = self._ivfpq_residuals(assigned, Cn, vc)
-            if m.pq_opq:
-                # OPQ (Ge et al. 2014): learn an orthogonal rotation on
-                # a deterministic residual sample, then rotate-encode
-                # every residual in the same Arrow pass. The coarse
-                # quantizer, the vecs rerank tree, and the exact rerank
-                # are untouched — distances are rotation-invariant.
-                from coltt_spark.operators.pq import opq_sample, opq_train_np
-
-                sample = opq_sample(resid, id_col=pk, vec_col="_rv")
-                rot, book = opq_train_np(
-                    sample, n_subspaces=m.pq_subspaces, n_codes=m.pq_codes
-                )
-            else:
-                rot = None
-                book = pq_train(
-                    resid, id_col=pk, vec_col="_rv",
-                    n_subspaces=m.pq_subspaces, n_codes=m.pq_codes,
-                )
-            codes = resid.select(
-                pk,
-                "centroid",
-                _encode_udf(book, rotation=rot)(F.col("_rv")).alias("_codes"),
-            ).join(df.select(_COMMIT, *pcols), on=pk)
-            blocks = pack_blocks(
-                codes.repartition(n_files, "centroid"),
-                id_col=_COMMIT,
-                vec_col="_codes",
-                dim=m.pq_subspaces,
-                dtype="uint8",
-                payload_cols=pcols,
-                group_col="centroid",
-            )
-            out = self._ivf_dir(vc, version)
-            blocks.write.mode("overwrite").partitionBy("centroid").parquet(
-                os.path.join(out, "blocks")
-            )
-            # exact-vector rerank rows, one file per inverted list
-            # (repartition by centroid keeps each list in one writer)
-            (
-                assigned.select(pk, "centroid")
-                .join(df.select(pk, _COMMIT, vc), on=pk)
-                .select(
-                    "centroid",
-                    _COMMIT,
-                    F.col(vc).cast("array<double>").alias(vc),
-                )
-                .repartition(n_files, "centroid")
-                .write.mode("overwrite")
-                .partitionBy("centroid")
-                .parquet(os.path.join(out, "vecs"))
-            )
-            np.save(os.path.join(out, "centroids.npy"), Cn)
-            np.save(os.path.join(out, "book.npy"), book)
-            if rot is not None:
-                np.save(os.path.join(out, "rotation.npy"), rot)
-
-    def _ivfpq_residuals(
-        self, assigned: DataFrame, Cn: np.ndarray, vc: str
-    ) -> DataFrame:
-        """(id, centroid, _rv): residual of each assigned stored
-        vector against its coarse centroid — the quantity the PQ
-        codebooks are trained on and encode (broadcast centroid join,
-        residual in double)."""
-        cent_df = self.spark.createDataFrame(
-            [(int(i), [float(x) for x in Cn[i]]) for i in range(len(Cn))],
-            T.StructType(
-                [
-                    T.StructField("centroid", T.IntegerType(), False),
-                    T.StructField("_cv", T.ArrayType(T.DoubleType()), False),
-                ]
-            ),
-        )
-        keep = [c for c in assigned.columns if c not in (vc, "centroid")]
-        return assigned.join(F.broadcast(cent_df), on="centroid").select(
-            *keep,
-            "centroid",
-            F.zip_with(
-                F.col(vc).cast("array<double>"), F.col("_cv"), lambda x, c: x - c
-            ).alias("_rv"),
-        )
-
-    def _flush_delta_ivfpq(
-        self, old_v: int, new_v: int, delta: DataFrame, n_delta: int
-    ) -> None:
-        """Incremental IVFADC maintenance — the same fixed-quantizer
-        discipline as the ivf delta path, extended to the codebooks:
-        coarse centroids AND residual codebooks are FIXED (loaded from
-        the previous version — they only move on compact), delta rows
-        are routed into the existing inverted lists, their residuals
-        re-encoded against the FIXED book, and the resulting code
-        blocks appended inside the centroid-partitioned layout. The
-        delta rows' exact vectors append into the same-shaped
-        ``vecs/centroid=<c>/`` rerank tree (base files hardlink
-        across), so the refined search's path-pruned rerank keeps
-        covering every live row; its per-list file fan-out grows in
-        lockstep with the code blocks', so the same auto-compaction
-        trigger bounds both. Base index files hardlink across;
-        superseded rows die via the shared commit-id tombstones.
-        Flush work is O(delta)."""
-        from coltt_spark.operators.ann import ivf_assign
-        from coltt_spark.operators.blocks import pack_blocks
-        from coltt_spark.operators.pq import _encode_udf
-
-        m = self.manifest
-        schema = self._storage_schema()
-        df = delta
-        if m.quantization != "none":
-            for vc in self._vector_cols():
-                df = df.withColumn(vc, dequantize(m.quantization, vc))
-        pcols = [
-            f.name for f in schema
-            if f.name not in self._vector_cols() and f.name != _COMMIT
-        ]
-        n_files = max(1, min(
-            self.spark.sparkContext.defaultParallelism,
-            -(-max(n_delta, 1) // 32768),  # ceil — don't shatter a small delta
-        ))
-        for vc in self._vector_cols():
-            old_dir = self._ivf_dir(vc, old_v)
-            new_dir = self._ivf_dir(vc, new_v)
-            Cn = np.load(os.path.join(old_dir, "centroids.npy"))
-            book = np.load(os.path.join(old_dir, "book.npy"))
-            rot_path = os.path.join(old_dir, "rotation.npy")
-            # the OPQ rotation is FROZEN alongside the codebooks (it
-            # only moves on compact) — delta rows rotate-encode against
-            # the same basis the base codes were trained in
-            rot = np.load(rot_path) if os.path.isfile(rot_path) else None
-            assigned = ivf_assign(
-                df.select(_COMMIT, vc), Cn, id_col=_COMMIT, vec_col=vc
-            )
-            codes = self._ivfpq_residuals(assigned, Cn, vc).select(
-                _COMMIT,
-                "centroid",
-                _encode_udf(book, rotation=rot)(F.col("_rv")).alias("_codes"),
-            ).join(df.select(_COMMIT, *pcols), on=_COMMIT)
-            blocks = pack_blocks(
-                codes.repartition(n_files, "centroid"),
-                id_col=_COMMIT,
-                vec_col="_codes",
-                dim=m.pq_subspaces,
-                dtype="uint8",
-                payload_cols=pcols,
-                group_col="centroid",
-            )
-            os.makedirs(os.path.join(new_dir, "blocks"), exist_ok=True)
-            _link_tree(os.path.join(old_dir, "blocks"), os.path.join(new_dir, "blocks"))
-            blocks.write.mode("append").partitionBy("centroid").parquet(
-                os.path.join(new_dir, "blocks")
-            )
-            if os.path.isdir(os.path.join(old_dir, "vecs")):
-                os.makedirs(os.path.join(new_dir, "vecs"), exist_ok=True)
-                _link_tree(
-                    os.path.join(old_dir, "vecs"), os.path.join(new_dir, "vecs")
-                )
-                (
-                    assigned.select(
-                        "centroid",
-                        _COMMIT,
-                        F.col(vc).cast("array<double>").alias(vc),
-                    )
-                    .repartition(n_files, "centroid")
-                    .write.mode("append")
-                    .partitionBy("centroid")
-                    .parquet(os.path.join(new_dir, "vecs"))
-                )
-            np.save(os.path.join(new_dir, "centroids.npy"), Cn)
-            np.save(os.path.join(new_dir, "book.npy"), book)
-            if rot is not None:
-                np.save(os.path.join(new_dir, "rotation.npy"), rot)
+            if v != self.manifest.version:
+                self._drop_version(v)
 
     def load(self) -> None:
         """Pin the collection in memory (LoadCollection ⇔ cache)."""
@@ -1901,7 +1627,7 @@ class Catalog:
         # seed v0 with an empty snapshot so reads always succeed
         empty = self.spark.createDataFrame([], coll._storage_schema())
         empty.write.mode("overwrite").parquet(coll._data_dir(0))
-        coll._write_manifest()
+        coll._write_manifest(manifest)
         coll._view = coll._read_version()
         self._open[name] = coll
         return coll

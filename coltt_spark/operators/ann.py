@@ -341,6 +341,7 @@ def ivf_build(
     DataFrame is the persistent index: cache it or write it
     partitioned by ``centroid`` so probes prune to the lists they
     touch."""
+    corpus = corpus.select(id_col, vec_col)
     n = corpus.count()
     cent_rows = seed_centroids(corpus, id_col=id_col, vec_col=vec_col,
                                n_centroids=n_centroids, n=n).collect()
@@ -359,41 +360,33 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign every row to its max-cosine centroid among FIXED
     centroids ``Cn`` — one broadcast + one Arrow-batched matmul per
-    partition. This is both the tail of :func:`ivf_build` and the
+    batch. Every input column passes through with ``centroid``
+    appended (only the vector crosses into Python), so an index writer
+    packs the routed rows with their payload and needs no join back.
+    This is both the tail of :func:`ivf_build` and the
     incremental-maintenance path: rows added after the index was
     built are routed into the EXISTING inverted lists without
     retraining (the standard IVF delta discipline; centroids only
     move on an explicit rebuild/compact)."""
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(Cn, dtype=np.float64))
+    from pyspark.sql.functions import pandas_udf
 
-    # ids keep their source type (long vec_ids, string PKs, …) — the
-    # centroid column is the only addition
-    id_type = corpus.schema[id_col].dataType
-    id_type = T.LongType() if isinstance(id_type, (T.IntegerType, T.ShortType)) else id_type
-    assign_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type, False),
-            T.StructField(vec_col, T.ArrayType(T.FloatType()), False),
-            T.StructField("centroid", T.IntegerType(), False),
-        ]
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        np.ascontiguousarray(Cn, dtype=np.float64)
     )
 
-    def assign(batches: Iterator) -> Iterator:
-        Cn_b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = _list_col_matrix(pdf[vec_col])
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-            pdf = pdf.copy()
-            pdf["centroid"] = np.argmax(Xn @ Cn_b.T, axis=1).astype(np.int32)
-            yield pdf
+    @pandas_udf(T.IntegerType())
+    def nearest(vecs: pd.Series) -> pd.Series:
+        X = _list_col_matrix(vecs)
+        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+        return pd.Series(np.argmax(Xn @ bc.value.T, axis=1).astype(np.int32))
 
-    return corpus.select(
-        F.col(id_col).cast(id_type).alias(id_col),
-        F.col(vec_col).cast("array<float>").alias(vec_col),
-    ).mapInPandas(assign, assign_schema)
+    # ids keep their source type (long vec_ids, string PKs, …), with
+    # narrow integers widened to long
+    if isinstance(corpus.schema[id_col].dataType, (T.IntegerType, T.ShortType)):
+        corpus = corpus.withColumn(id_col, F.col(id_col).cast("long"))
+    return corpus.withColumn(
+        vec_col, F.col(vec_col).cast("array<float>")
+    ).withColumn("centroid", nearest(vec_col))
 
 
 def ivf_probe(
@@ -418,8 +411,9 @@ def ivf_probe(
     path). The PRODUCT serving layout (`Collection` with
     ``layout="ivf"``) instead packs each inverted list into block
     files and probes them through the node-local spool
-    (catalog._write_ivf/_packed_scan) — same math, ~2× lower serving
-    latency because nothing re-decodes Parquet arrays per query."""
+    (catalog.Collection._write_index/_packed_scan) — same math, ~2×
+    lower serving latency because nothing re-decodes Parquet arrays
+    per query."""
     probe_rows = []
     for qid, v in queries.items():
         q = np.asarray(list(map(float, v)), dtype=np.float64)

@@ -504,6 +504,31 @@ def opq_train_np(
     return R, book
 
 
+def ivf_residuals(assigned: DataFrame, Cn: np.ndarray, *, vec_col: str) -> DataFrame:
+    """Each IVF-assigned row's residual against its coarse centroid,
+    ``vector − centroid`` in double, as ``_rv``: the quantity PQ
+    codebooks are trained on and encode. One broadcast join on
+    ``centroid``; every other column of ``assigned`` passes through,
+    followed by ``centroid`` and ``_rv``."""
+    cent_df = assigned.sparkSession.createDataFrame(
+        [(int(i), [float(x) for x in Cn[i]]) for i in range(len(Cn))],
+        T.StructType(
+            [
+                T.StructField("centroid", T.IntegerType(), False),
+                T.StructField("_cv", T.ArrayType(T.DoubleType()), False),
+            ]
+        ),
+    )
+    keep = [c for c in assigned.columns if c not in (vec_col, "centroid")]
+    return assigned.join(F.broadcast(cent_df), on="centroid").select(
+        *keep,
+        "centroid",
+        F.zip_with(
+            F.col(vec_col).cast("array<double>"), F.col("_cv"), lambda x, c: x - c
+        ).alias("_rv"),
+    )
+
+
 def opq_sample(
     corpus: DataFrame, *, id_col: str, vec_col: str, sample_rows: int = 16384
 ) -> np.ndarray:
@@ -562,23 +587,7 @@ def ivfpq_build_opq(
         n_centroids=n_centroids,
         kmeans_iters=kmeans_iters,
     )
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in Cn[i]]) for i in range(len(Cn))],
-        T.StructType(
-            [
-                T.StructField("centroid", T.IntegerType(), False),
-                T.StructField("_cv", T.ArrayType(T.DoubleType()), False),
-            ]
-        ),
-    )
-    resid = assigned.join(F.broadcast(cent_df), on="centroid").select(
-        F.col(id_col),
-        F.col("centroid"),
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), F.col("_cv"), lambda x, c: x - c
-        ).alias("_rv"),
-    )
+    resid = ivf_residuals(assigned, Cn, vec_col=vec_col)
     sample = opq_sample(
         resid, id_col=id_col, vec_col="_rv", sample_rows=opq_sample_rows
     )
@@ -633,23 +642,7 @@ def ivfpq_build(
         n_centroids=n_centroids,
         kmeans_iters=kmeans_iters,
     )
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in Cn[i]]) for i in range(len(Cn))],
-        T.StructType(
-            [
-                T.StructField("centroid", T.IntegerType(), False),
-                T.StructField("_cv", T.ArrayType(T.DoubleType()), False),
-            ]
-        ),
-    )
-    resid = assigned.join(F.broadcast(cent_df), on="centroid").select(
-        F.col(id_col),
-        F.col("centroid"),
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), F.col("_cv"), lambda x, c: x - c
-        ).alias("_rv"),
-    )
+    resid = ivf_residuals(assigned, Cn, vec_col=vec_col)
     book = pq_train(
         resid, id_col=id_col, vec_col="_rv", n_subspaces=n_subspaces, n_codes=n_codes
     )

@@ -622,7 +622,8 @@ def _delta_blocks_collection(spark: SparkSession, sf_dir: str):
     flush of the base corpus, then an upsert batch (vec_id < 10 →
     label+100) and a filter-delete (label = 5) flushed as a DELTA —
     base block files hardlinked, only changed rows packed, superseded
-    commit ids tombstoned (catalog.Collection._flush_delta)."""
+    commit ids tombstoned (catalog.Collection._write_delta_snapshot
+    and the one index writer, catalog.Collection._write_index)."""
     from coltt_spark.tmpdirs import scratch_dir
 
     from coltt_spark.catalog import Catalog
@@ -762,7 +763,7 @@ def _delta_ivf_collection(spark: SparkSession, sf_dir: str):
     build of the base corpus, then an upsert batch (vec_id < 10 →
     label+100) and a filter-delete (label = 5) flushed as a DELTA —
     centroids FIXED, delta rows routed into the existing inverted
-    lists (catalog.Collection._flush_delta_ivf), superseded commit
+    lists (catalog.Collection._write_index), superseded commit
     ids tombstoned."""
     from coltt_spark.tmpdirs import scratch_dir
 
@@ -926,7 +927,7 @@ def _ivfpq_collection(spark: SparkSession, sf_dir: str):
     """Cached ``layout="ivfpq"`` cosine collection over the embeddings
     table — flush builds the fused IVFADC serving index (coarse
     md5-seeded k-means + residual PQ codebooks + M uint8 codes per row
-    packed into per-centroid block files; catalog._write_ivfpq)."""
+    packed into per-centroid block files; catalog.Collection._write_index)."""
     from coltt_spark.tmpdirs import scratch_dir
 
     from coltt_spark.catalog import Catalog
@@ -965,7 +966,7 @@ def _ivfpq_opq_collection(spark: SparkSession, sf_dir: str):
     geometry as :func:`_ivfpq_collection`, but flush additionally
     trains an orthogonal OPQ rotation (Ge et al. 2014) on a
     deterministic residual sample and rotate-encodes every residual in
-    the same Arrow pass (catalog._write_ivfpq;
+    the same Arrow pass (catalog.Collection._quantizer;
     operators.pq.opq_train_np). Queries rotate their residuals before
     the LUT build; the exact rerank stays in the raw space."""
     from coltt_spark.tmpdirs import scratch_dir
@@ -1009,7 +1010,7 @@ def _delta_ivfpq_collection(spark: SparkSession, sf_dir: str):
     filter-delete (label = 5) flushed as a DELTA — coarse centroids
     AND residual codebooks FROZEN, delta rows re-encoded against them
     into per-centroid delta code files, superseded commits
-    tombstoned (catalog.Collection._flush_delta_ivfpq)."""
+    tombstoned (catalog.Collection._write_index)."""
     from coltt_spark.tmpdirs import scratch_dir
 
     from coltt_spark.catalog import Catalog

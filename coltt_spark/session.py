@@ -13,7 +13,9 @@ from __future__ import annotations
 import atexit
 import functools
 import os
+import re
 import shutil
+import stat
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -32,16 +34,38 @@ def _socket_dir() -> str:
     Those sockets skip Spark's auth secret, so the directory is
     owner-only (``mkdtemp`` makes it 0700). It is made under the temp
     dir when every socket path in it fits ``_UDS_PATH_MAX``, otherwise
-    under ``/tmp``, and removed when the process exits.
+    under ``/tmp``, and removed when the process exits. Its name
+    carries the owner's pid, so the dirs of processes that died
+    without exiting (SIGKILL skips ``atexit``) are swept here.
     """
     base = tempfile.gettempdir()
+    prefix = f"{_UDS_PREFIX}{os.getpid()}-"
     # mkdtemp names the directory "<base>/<prefix><8 random chars>"
-    longest = len(os.fsencode(base)) + 1 + len(_UDS_PREFIX) + 8 + _UDS_NAME_BYTES
-    path = tempfile.mkdtemp(
-        prefix=_UDS_PREFIX, dir=base if longest <= _UDS_PATH_MAX else "/tmp"
-    )
+    longest = len(os.fsencode(base)) + 1 + len(prefix) + 8 + _UDS_NAME_BYTES
+    parent = base if longest <= _UDS_PATH_MAX else "/tmp"
+    _sweep_socket_dirs(parent)
+    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def _sweep_socket_dirs(parent: str) -> None:
+    """Remove the socket dirs under ``parent`` that this user's
+    processes made and outlived. A dir whose pid was since reused
+    stays: the safe direction."""
+    for name in os.listdir(parent):
+        m = re.fullmatch(rf"{_UDS_PREFIX}([1-9][0-9]*)-\w{{8}}", name)
+        if not m:
+            continue
+        path = os.path.join(parent, name)
+        try:
+            st = os.lstat(path)
+            if st.st_uid == os.getuid() and stat.S_ISDIR(st.st_mode):
+                os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(path, ignore_errors=True)
+        except OSError:  # removed meanwhile, or alive under another uid
+            pass
 
 
 def get_spark(

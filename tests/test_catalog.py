@@ -1332,7 +1332,7 @@ def test_ivf_auto_compaction_bounds_read_amplification(catalog):
 
 
 # -- layout="ivfpq": fused IVFADC serving (coarse lists + residual PQ
-# -- codes packed per centroid; catalog._write_ivfpq/_packed_scan) --
+# -- codes packed per centroid; catalog.Collection._write_index/_packed_scan) --
 
 
 def _exact_topk(rows_state, q, k=5, types=None):
@@ -1595,3 +1595,92 @@ def test_ivfpq_search_batch_equals_sequential_loop(catalog):
     coll.flush()
     check()
     check(refine=0)
+
+
+class _InjectedFailure(RuntimeError):
+    pass
+
+
+def _fail_next_manifest_write(monkeypatch):
+    """Make the next manifest write — a flush's last step, its repoint
+    — raise once, as a crash right before the repoint would."""
+    from coltt_spark.catalog import Collection
+
+    real = Collection._write_manifest
+    armed = [True]
+
+    def flaky(self, *args, **kwargs):
+        if armed[0]:
+            armed[0] = False
+            raise _InjectedFailure("manifest write failed")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(Collection, "_write_manifest", flaky)
+
+
+#: dials that make a search probe every list and rerank every row, so
+#: ``search(limit=400)`` returns the whole collection on every layout
+_PROBE_ALL = {
+    "blocks": {},
+    "ivf": {"ivf_centroids": 4, "ivf_nprobe": 4},
+    "ivfpq": {
+        "ivf_centroids": 4, "ivf_nprobe": 4,
+        "pq_subspaces": 4, "pq_codes": 8, "ivfpq_refine": 400,
+    },
+}
+
+
+@pytest.mark.parametrize("layout", ["blocks", "ivf", "ivfpq"])
+def test_failed_flush_neither_loses_nor_leaks_rows(catalog, spark, tmp_path, monkeypatch, layout):
+    """A flush that fails before its manifest repoint leaves the
+    collection at its old version, so (a) a retry on the same handle
+    ends equal to a twin that never failed: the pending rows are not
+    tombstoned as if the failed attempt had committed them; and (b) a
+    handle reopened from disk, given different upserts, flushes
+    without serving any row of the failed attempt, whose version
+    directory it reuses along with its commit ids."""
+    rows = _rows(300, dim=8, seed=61)
+    q = _rows(1, dim=8, seed=62)[0]["vector"]
+    pending = [dict(r, id=f"pending-{i}") for i, r in enumerate(_rows(20, dim=8, seed=63))]
+    other = [dict(r, id=f"other-{i}") for i, r in enumerate(_rows(20, dim=8, seed=64))]
+
+    def flushed(name):
+        coll = catalog.create_collection(
+            name, dim=8, distance="euclidean", fields=FIELDS, layout=layout,
+            block_dtype="float64", **_PROBE_ALL[layout],
+        )
+        coll.upsert(rows)
+        coll.flush()
+        return coll
+
+    def served(coll):
+        return [(r["id"], round(r["dist"], 6)) for r in coll.search(q, limit=400).collect()]
+
+    twin = flushed("twin")
+    twin.upsert(pending)
+    twin.flush()
+
+    retried = flushed("retried")
+    retried.upsert(pending)
+    _fail_next_manifest_write(monkeypatch)
+    with pytest.raises(_InjectedFailure):
+        retried.flush()
+    assert retried.manifest.version == 1
+    retried.flush()
+    assert retried.manifest.version == twin.manifest.version == 2
+    assert retried.count() == twin.count() == 320
+    assert served(retried) == served(twin)
+
+    aborted = flushed("aborted")
+    aborted.upsert(pending)
+    _fail_next_manifest_write(monkeypatch)
+    with pytest.raises(_InjectedFailure):
+        aborted.flush()
+    reopened = Catalog(spark, str(tmp_path / "warehouse")).get_collection("aborted")
+    assert reopened.manifest.version == 1
+    reopened.upsert(other)
+    reopened.flush()
+    ids = [pk for pk, _ in served(reopened)]
+    assert reopened.count() == 320
+    assert len(ids) == len(set(ids)) == 320
+    assert sorted(ids) == sorted([r["id"] for r in rows] + [r["id"] for r in other])

@@ -3,6 +3,7 @@ engine fast at 100 TB (SURVEY §4 mappings)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from coltt_spark.operators.analytics import top_revenue_orders
@@ -1241,8 +1242,9 @@ def test_block_scan_source_is_jvm_range_one_python_hop(spark, tmp_path):
     assert plan.count("MapInPandas") == 1, plan[:800]
 
 
-def _jobs_run(spark, action) -> int:
-    """Spark jobs that ``action()`` runs, counted by its own job group."""
+def _run_in_group(spark, action) -> list[int]:
+    """The ids of the Spark jobs that ``action()`` runs, found by its
+    own job group."""
     import uuid
 
     sc = spark.sparkContext
@@ -1255,7 +1257,12 @@ def _jobs_run(spark, action) -> int:
             sc.setLocalProperty(prop, None)
     # job events reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs that ``action()`` runs, counted by its own job group."""
+    return len(_run_in_group(spark, action))
 
 
 def test_upsert_and_delta_flush_job_counts(spark, tmp_path):
@@ -1295,3 +1302,67 @@ def test_upsert_and_delta_flush_job_counts(spark, tmp_path):
     assert coll.manifest.version == 2 and coll.count() == 250
     tombs = spark.read.parquet(coll._tombstones_dir(2)).collect()
     assert sorted(r[0] for r in tombs) == want_tombs and len(want_tombs) == 50
+
+
+def _stages_and_plans(spark, job_ids) -> tuple[int, list[str]]:
+    """The stages the jobs ran (skipped stages not counted, as the
+    benchmark's trace counts them) and the final physical plans of the
+    SQL executions those jobs belong to."""
+    st = spark.sparkContext.statusTracker()
+    stages = sum(
+        1 for j in job_ids for s in st.getJobInfo(j).stageIds if st.getStageInfo(s) is not None
+    )
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if any(ex.jobs().contains(j) for j in job_ids):
+            plans.append(ex.physicalPlanDescription())
+    return stages, plans
+
+
+def _join_keys(plan: str) -> set[str]:
+    """Column names of every equi-join key in a physical plan, as the
+    SQL status store keeps it (the formatted explain mode)."""
+    import re
+
+    return {
+        re.sub(r"#\d+L?$", "", k.strip())
+        for keys in re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
+        for k in keys.split(",")
+    }
+
+
+@pytest.mark.parametrize("layout, want_jobs, want_stages", [("ivf", 9, 12), ("ivfpq", 20, 26)])
+def test_full_index_build_job_counts_and_no_join_back(spark, tmp_path, layout, want_jobs, want_stages):
+    """A full ivf/ivfpq flush routes the snapshot rows through the
+    trained quantizer with their commit id and payload attached, so
+    the index writes (the per-centroid block tree, and the ivfpq
+    ``vecs/`` rerank tree) join neither on the primary key nor on the
+    commit id: only the ivfpq residual's broadcast join on
+    ``centroid`` is left. Job and stage counts are pinned as measured
+    (skipped stages not counted)."""
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    rows = spark.range(0, 200, 1, 2).select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("id"),
+        (F.col("id") % 5).cast("int").alias("grp"),
+        F.array(*[F.sin(F.col("id") + k) for k in range(4)]).alias("vector"),
+    ).localCheckpoint(eager=True)
+    coll = Catalog(spark, str(tmp_path / "wh")).create_collection(
+        f"full_{layout}", dim=4, distance="euclidean",
+        fields=[IndexField("id", "string", primary_key=True), IndexField("grp", "integer")],
+        layout=layout, ivf_centroids=4, pq_subspaces=2, pq_codes=8,
+    )
+    coll.upsert_df(rows, dedupe_batch=False)
+    jobs = _run_in_group(spark, coll.flush)
+    stages, plans = _stages_and_plans(spark, jobs)
+    assert (len(jobs), stages) == (want_jobs, want_stages)
+    index_writes = [p for p in plans if coll._ivf_dir("vector", 1) in p]
+    assert len(index_writes) == (2 if layout == "ivfpq" else 1), plans
+    # the ivfpq residual's broadcast join on centroid is the only join
+    # left, and shows that the keys are parsed
+    keys = set().union(*map(_join_keys, index_writes))
+    assert keys == ({"centroid"} if layout == "ivfpq" else set()), index_writes
+    assert coll.count() == 200

@@ -89,3 +89,48 @@ def test_session_with_long_tmpdir_runs_python_tasks(tmp_path):
     assert out["ids"] == [0, 1, 2]
     assert out["longest"] <= 107
     assert not os.path.exists(out["dir"])
+
+
+_SWEEP_SESSION_DIRS = textwrap.dedent(
+    """
+    import json, os
+    from coltt_spark.session import _socket_dir
+
+    print(json.dumps({"dir": _socket_dir(), "pid": os.getpid()}))
+    """
+)
+
+
+def test_socket_dirs_of_dead_processes_are_swept(tmp_path):
+    """The socket dir is named after its owner's pid. A process killed
+    before its ``atexit`` leaves the dir behind; the next session
+    removes it, and keeps the dir of a process still alive."""
+    import json
+    import tempfile
+
+    # a short temp dir, so the socket dir is made (and swept) inside it
+    with tempfile.TemporaryDirectory(dir="/tmp") as tmp:
+        exited = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                                capture_output=True, text=True, check=True)
+        dead = os.path.join(tmp, f"coltt-uds-{int(exited.stdout)}-deadbeef")
+        alive = os.path.join(tmp, f"coltt-uds-{os.getpid()}-stillrun")
+        unrelated = os.path.join(tmp, "coltt-uds-notapid")
+        for d in (dead, alive, unrelated):
+            os.mkdir(d)
+        env = dict(
+            os.environ,
+            TMPDIR=tmp,
+            PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
+        )
+        proc = subprocess.run(
+            [sys.executable, "-c", _SWEEP_SESSION_DIRS],
+            env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=120,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        made = out["dir"]
+        assert os.path.dirname(made) == tmp
+        assert os.path.basename(made).startswith(f"coltt-uds-{out['pid']}-")
+        assert not os.path.exists(dead)
+        assert os.path.isdir(alive) and os.path.isdir(unrelated)
+        assert not os.path.exists(made)  # removed when its process exited
