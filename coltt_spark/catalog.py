@@ -10,7 +10,8 @@ snapshots plus a JSON manifest (dim, distance, quantization, index
 design, current version) — the manifest plays the role of coltt's
 MinIO ``.meta.json`` blob and the version swap plays the diskv commit
 log: every flush writes ``v{N+1}`` then atomically repoints the
-manifest, so readers never observe a half-written table (same
+manifest (:mod:`coltt_spark.store`, the discipline every store
+shares), so readers never observe a half-written table (same
 guarantee Delta's transaction log provides; plain Parquet keeps the
 container dependency-free).
 
@@ -26,10 +27,8 @@ deliberately identical.
 from __future__ import annotations
 
 import dataclasses
-import json
 import math
 import os
-import re
 import shutil
 from dataclasses import dataclass
 from functools import reduce
@@ -41,6 +40,7 @@ from pyspark.sql import types as T
 
 import numpy as np
 
+from coltt_spark import store
 from coltt_spark.filters import compile_filter, validate_delete_key
 from coltt_spark.functions.memo import memo_columns
 from coltt_spark.functions.quantization import dequantize, quantize, quantize_np
@@ -55,37 +55,6 @@ LAYOUTS = ("rows", "blocks", "ivf", "ivfpq")
 
 _VEC = "vector"
 _COMMIT = "_commit_id"
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """:func:`_link_parts` over a partitioned layout: replicate the
-    ``key=value`` directory structure of ``src`` under ``dst`` and
-    hardlink every part file inside — the manifest-reference shape for
-    a partition-pruned index."""
-    for entry in os.listdir(src):
-        s = os.path.join(src, entry)
-        if os.path.isdir(s):
-            d = os.path.join(dst, entry)
-            os.makedirs(d, exist_ok=True)
-            _link_tree(s, d)
-    _link_parts(src, dst)
-
-
-def _link_parts(src: str, dst: str) -> None:
-    """Reference every Parquet part file of ``src`` from ``dst`` via
-    hardlink (metadata-only; the files are immutable once written —
-    the local-FS realization of a table-format manifest pointing at
-    unchanged base files). Falls back to a copy across filesystems."""
-    for f in os.listdir(src):
-        if not (f.startswith("part-") and f.endswith(".parquet")):
-            continue
-        s, d = os.path.join(src, f), os.path.join(dst, f)
-        if os.path.exists(d):
-            continue
-        try:
-            os.link(s, d)
-        except OSError:
-            shutil.copy2(s, d)
 
 
 def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -171,51 +140,23 @@ class Manifest:
     pq_opq: bool = False
 
     def to_json(self) -> dict[str, Any]:
-        return {
-            "name": self.name,
-            "dim": self.dim,
-            "distance": self.distance,
-            "quantization": self.quantization,
-            "index_design": self.index_design.to_json(),
-            "version": self.version,
-            "next_commit": self.next_commit,
-            "layout": self.layout,
-            "block_dtype": self.block_dtype,
-            "versioning": self.versioning,
-            "ivf_centroids": self.ivf_centroids,
-            "ivf_nprobe": self.ivf_nprobe,
-            "ivf_kmeans_iters": self.ivf_kmeans_iters,
-            "ivf_max_list_files": self.ivf_max_list_files,
-            "ivf_base_list_files": self.ivf_base_list_files,
-            "pq_subspaces": self.pq_subspaces,
-            "pq_codes": self.pq_codes,
-            "ivfpq_refine": self.ivfpq_refine,
-            "pq_opq": self.pq_opq,
-        }
+        d = {f.name: getattr(self, f.name) for f in dataclasses.fields(self)}
+        d["index_design"] = self.index_design.to_json()
+        return d
 
     @classmethod
     def from_json(cls, d: dict[str, Any]) -> Manifest:
-        return cls(
-            name=d["name"],
-            dim=d["dim"],
-            distance=d["distance"],
-            quantization=d["quantization"],
-            index_design=IndexDesign.from_json(d["index_design"]),
-            version=d["version"],
-            next_commit=d["next_commit"],
-            layout=d.get("layout", "rows"),
-            block_dtype=d.get("block_dtype", "float32"),
-            versioning=d.get("versioning", False),
-            ivf_centroids=d.get("ivf_centroids", 16),
-            ivf_nprobe=d.get("ivf_nprobe", 4),
-            ivf_kmeans_iters=d.get("ivf_kmeans_iters", 1),
-            ivf_max_list_files=d.get("ivf_max_list_files", 10),
-            ivf_base_list_files=d.get("ivf_base_list_files", 0),
-            pq_subspaces=d.get("pq_subspaces", 8),
-            pq_codes=d.get("pq_codes", 16),
-            ivfpq_refine=d.get("ivfpq_refine", 50),
-            pq_opq=d.get("pq_opq", False),
-        )
+        # a field without a default, or the version and commit
+        # counters, must be present (KeyError otherwise); every other
+        # field falls back to its default and unknown keys are ignored
+        kw = {
+            f.name: d[f.name]
+            for f in dataclasses.fields(cls)
+            if f.name in d or f.default is dataclasses.MISSING
+            or f.name in ("version", "next_commit")
+        }
+        kw["index_design"] = IndexDesign.from_json(kw["index_design"])
+        return cls(**kw)
 
 
 class Collection:
@@ -261,21 +202,21 @@ class Collection:
 
     # -- storage ------------------------------------------------------
 
-    def _data_dir(self, version: int | None = None) -> str:
+    def _dir(self, part: str, version: int | None) -> str:
         v = self.manifest.version if version is None else version
-        return os.path.join(self.root, f"v{v}")
+        return store.version_dir(self.root, v, part)
+
+    def _data_dir(self, version: int | None = None) -> str:
+        return self._dir("", version)
 
     def _blocks_dir(self, vector_col: str, version: int | None = None) -> str:
-        v = self.manifest.version if version is None else version
-        return os.path.join(self.root, f"v{v}_blocks", vector_col)
+        return os.path.join(self._dir("blocks", version), vector_col)
 
     def _ivf_dir(self, vector_col: str, version: int | None = None) -> str:
-        v = self.manifest.version if version is None else version
-        return os.path.join(self.root, f"v{v}_ivf", vector_col)
+        return os.path.join(self._dir("ivf", version), vector_col)
 
     def _tombstones_dir(self, version: int | None = None) -> str:
-        v = self.manifest.version if version is None else version
-        return os.path.join(self.root, f"v{v}_tombstones")
+        return self._dir("tombstones", version)
 
     def _ivf_ready(
         self, vector_col: str, version: int | None = None, *, strict: bool = True
@@ -375,10 +316,7 @@ class Collection:
         return df
 
     def _write_manifest(self, manifest: Manifest) -> None:
-        tmp = os.path.join(self.root, "manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest.to_json(), f, indent=2)
-        os.replace(tmp, os.path.join(self.root, "manifest.json"))
+        store.commit(self.root, manifest.to_json())
 
     # -- DML ----------------------------------------------------------
 
@@ -1230,7 +1168,7 @@ class Collection:
         probe-time read amplification stays bounded without anyone
         remembering to call :meth:`compact`."""
         m = self.manifest
-        old_v, new_v = m.version, m.version + 1
+        old_v = m.version
         vcols = self._vector_cols()
         if m.layout == "blocks":
             idx_ready = all(os.path.isdir(self._blocks_dir(vc, old_v)) for vc in vcols)
@@ -1262,10 +1200,9 @@ class Collection:
             # 10 keeps the drift under ~10% while amortizing the
             # rebuild over ~10 delta flushes.
             incremental = False
-        # the manifest never names a version above its own, so whatever
-        # is under v+1 is a failed flush's: reused, it would serve that
-        # flush's rows under commit ids since handed out again
-        self._drop_version(new_v)
+        # a failed flush's leftovers would serve its rows under commit
+        # ids since handed out again
+        new_v = store.begin(self.root, old_v)
         if incremental:
             rows, n_rows = self._write_delta_snapshot(old_v, new_v)
         else:
@@ -1286,22 +1223,13 @@ class Collection:
         self._dirty = False
         self._reset_pending()
         if not m.versioning:
-            self._drop_version(old_v)
+            store.drop_version(self.root, old_v)
 
     def compact(self) -> None:
         """Full rewrite: fold all delta files and tombstones into one
         clean snapshot + freshly packed index (the explicit compaction
         a delta-maintained collection runs off the serving path)."""
         self.flush(compact=True)
-
-    def _drop_version(self, v: int) -> None:
-        """Remove version ``v``'s snapshot, index and tombstone
-        directories. Files hardlinked into a later version live on
-        there."""
-        for suffix in ("", "_blocks", "_ivf", "_tombstones"):
-            d = os.path.join(self.root, f"v{v}{suffix}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
 
     def _write_delta_snapshot(self, old_v: int, new_v: int) -> tuple[DataFrame, int]:
         """Write version ``new_v``'s snapshot as a MANIFEST over
@@ -1350,7 +1278,7 @@ class Collection:
         else:
             dead = self.spark.createDataFrame([], tomb_schema)
         delta.write.mode("overwrite").parquet(self._data_dir(new_v))
-        _link_parts(self._data_dir(old_v), self._data_dir(new_v))
+        store.link_tree(self._data_dir(old_v), self._data_dir(new_v))
         dead.write.mode("overwrite").parquet(self._tombstones_dir(new_v))
         return delta, n_delta
 
@@ -1426,7 +1354,7 @@ class Collection:
                 out = self._blocks_dir(vc, version)
                 write_block_index(pack_blocks(src, **pack), out, n_files=n_files)
                 if base is not None:
-                    _link_parts(self._blocks_dir(vc, base), out)
+                    store.link_tree(self._blocks_dir(vc, base), out)
                 continue
             quant = self._quantizer(rows, vc, base)
             routed = ivf_assign(src, quant["centroids"], id_col=_COMMIT, vec_col=vc)
@@ -1452,7 +1380,7 @@ class Collection:
                     os.path.join(out, name)
                 )
                 if base is not None:
-                    _link_tree(
+                    store.link_tree(
                         os.path.join(self._ivf_dir(vc, base), name), os.path.join(out, name)
                     )
             for name, arr in quant.items():
@@ -1502,12 +1430,7 @@ class Collection:
 
     def versions(self) -> list[int]:
         """Snapshot versions currently retained on storage."""
-        out = []
-        for name in os.listdir(self.root):
-            m = re.fullmatch(r"v(\d+)", name)
-            if m and os.path.isdir(os.path.join(self.root, name)):
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return store.versions(self.root)
 
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read of a retained snapshot version (edge v4
@@ -1530,7 +1453,7 @@ class Collection:
         ``pkg/minio/bucket_handler.go:106-119``)."""
         for v in self.versions():
             if v != self.manifest.version:
-                self._drop_version(v)
+                store.drop_version(self.root, v)
 
     def load(self) -> None:
         """Pin the collection in memory (LoadCollection ⇔ cache)."""
@@ -1636,11 +1559,10 @@ class Catalog:
         if name in self._open:
             return self._open[name]
         root = self._root(name)
-        path = os.path.join(root, "manifest.json")
-        if not os.path.exists(path):
+        d = store.read_manifest(root)
+        if d is None:
             raise KeyError(f"collection {name!r} does not exist")
-        with open(path) as f:
-            manifest = Manifest.from_json(json.load(f))
+        manifest = Manifest.from_json(d)
         coll = Collection(self.spark, root, manifest)
         self._open[name] = coll
         return coll
@@ -1656,5 +1578,5 @@ class Catalog:
         return sorted(
             d
             for d in os.listdir(self.warehouse)
-            if os.path.isfile(os.path.join(self.warehouse, d, "manifest.json"))
+            if os.path.isfile(os.path.join(self.warehouse, d, store.MANIFEST))
         )

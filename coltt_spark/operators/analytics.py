@@ -175,12 +175,13 @@ def sessionize(events: DataFrame, *, gap_minutes: int = 30) -> DataFrame:
     one per-user window partition (single shuffle on user_id)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Parquet tz-naive timestamps read as TIMESTAMP_NTZ (Spark 4), which
-    # cannot cast straight to BIGINT; bounce through TIMESTAMP_LTZ (a
-    # no-op if the column is already LTZ). Gap arithmetic is invariant
-    # to the fixed session-zone offset the bounce applies.
-    epoch = F.col("ts").cast("timestamp_ltz").cast("long")
+    # unix_micros does not take; bounce through TIMESTAMP_LTZ (a no-op
+    # if the column is already LTZ). Gap arithmetic is invariant to the
+    # fixed session-zone offset the bounce applies. Microseconds, not a
+    # cast to whole seconds: a 1800.4 s gap exceeds 30 minutes.
+    epoch = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     gap = epoch - F.lag(epoch).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60 * 10**6), 1).otherwise(0)
     sess = events.withColumn("_new", is_new).withColumn(
         "session_id", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )

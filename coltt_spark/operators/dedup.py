@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from coltt_spark import store
 from coltt_spark.functions.text import (
     HASH_P,
     MINHASH_PARAMS,
@@ -513,8 +514,9 @@ class MinHashIndex:
     batch against an already-processed corpus WITHOUT recomputing the
     corpus side).
 
-    Artifacts under ``root`` (parquet snapshots, the packed-index
-    flush discipline of ``TextIndex`` / ``Collection``):
+    Artifacts under ``root``, each a parquet part of one version of
+    the store (``v{N}_members/`` …, :mod:`coltt_spark.store`, the
+    discipline ``TextIndex`` and ``Collection`` share):
 
     - ``members/``      ``(member, fp)`` — one row per indexed doc;
       ``fp`` is the exact-content fingerprint (md5 of the sorted
@@ -527,7 +529,8 @@ class MinHashIndex:
       content, the exact-Jaccard verify side.
     - ``pairs/``        ``(id_a, id_b, jaccard)`` — verified near-dup
       pairs WITHIN the indexed corpus.
-    - ``meta.json``     shingle width / bands / threshold.
+
+    The store manifest carries the shingle width / bands / threshold.
 
     Pair membership is PAIRWISE-determined: (a, b) is emitted iff
     their signatures share a band (each signature is a function of
@@ -544,22 +547,25 @@ class MinHashIndex:
     equi-join on fp for verification; ``members`` equi-join on fp for
     pair expansion), each written hash-distributed by its join key so
     a daily delta shuffles new-batch rows plus matched index
-    partitions only. ``merge`` is append-only at this scale because
-    artifacts are keyed by content fingerprint: re-snapshot under a
-    version directory (the catalog versioning discipline) when
-    atomicity across the four artifacts matters.
+    partitions only. ``merge`` writes only the batch's rows as the
+    next version and hardlinks the rest forward, committing the four
+    artifacts at once.
     """
 
-    _ARTIFACTS = ("members", "band_keys", "fp_shingles", "pairs")
+    #: artifact → its delta-side join key (the write layout's hash key)
+    _ARTIFACTS = {
+        "members": ("fp",),
+        "band_keys": ("band_hash",),
+        "fp_shingles": ("fp",),
+        "pairs": (),
+    }
 
     def __init__(self, spark, root: str):
-        import json
-        import os
-
         self.spark = spark
         self.root = root
-        with open(os.path.join(root, "meta.json")) as fh:
-            self.meta = json.load(fh)
+        self.meta = store.read_manifest(root)
+        if self.meta is None:
+            raise FileNotFoundError(f"no MinHashIndex at {root}")
 
     # -- construction -------------------------------------------------
 
@@ -579,10 +585,6 @@ class MinHashIndex:
         """Index a corpus: signatures + content collapse + band keys,
         plus the corpus's own verified pairs (so the index answers
         "all pairs so far" without rescoring history)."""
-        import json
-        import os
-
-        spark = df.sparkSession
         sh = (
             shingles
             if shingles is not None
@@ -609,35 +611,30 @@ class MinHashIndex:
             df, id_col, text_col, n=n, bands=bands, threshold=threshold,
             shingles=sh, sig_fp=per_doc,
         )
-        # hash-distribute each artifact by its delta-side join key
-        members.repartition(n_files, "fp").write.mode("overwrite").parquet(
-            os.path.join(root, "members")
+        return MinHashIndex._snapshot(
+            df.sparkSession,
+            root,
+            dict(members=members, band_keys=band_keys, fp_shingles=fp_shingles, pairs=pairs),
+            {"n": n, "bands": bands, "threshold": threshold, "k": len(MINHASH_PARAMS)},
+            n_files,
         )
-        band_keys.repartition(n_files, "band_hash").write.mode("overwrite").parquet(
-            os.path.join(root, "band_keys")
-        )
-        fp_shingles.repartition(n_files, "fp").write.mode("overwrite").parquet(
-            os.path.join(root, "fp_shingles")
-        )
-        pairs.repartition(n_files).write.mode("overwrite").parquet(
-            os.path.join(root, "pairs")
-        )
-        with open(os.path.join(root, "meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "n": n,
-                    "bands": bands,
-                    "threshold": threshold,
-                    "k": len(MINHASH_PARAMS),
-                },
-                fh,
-            )
+
+    @staticmethod
+    def _snapshot(spark, root: str, artifacts: dict, meta: dict, n_files: int) -> "MinHashIndex":
+        """Commit ``artifacts`` as the whole next version of the index
+        at ``root``, each hash-distributed by its delta-side join key."""
+        v = store.Version(root)
+        for name, df in artifacts.items():
+            df.repartition(n_files, *MinHashIndex._ARTIFACTS[name]).write.mode(
+                "overwrite"
+            ).parquet(v.path(name))
+        v.commit(meta)
         return MinHashIndex(spark, root)
 
     def _read(self, name: str) -> DataFrame:
-        import os
-
-        return self.spark.read.parquet(os.path.join(self.root, name))
+        return self.spark.read.parquet(
+            store.version_dir(self.root, self.meta["version"], name)
+        )
 
     # -- incremental dedup --------------------------------------------
 
@@ -766,36 +763,29 @@ class MinHashIndex:
         *,
         shingles: DataFrame | None = None,
     ) -> None:
-        """Fold the new batch into the index: members and delta pairs
-        always append; band_keys/fp_shingles append only fingerprints
-        NOT already indexed (content-keyed artifacts are naturally
-        idempotent under duplicates). All appends are materialized
-        BEFORE any write so no job reads a directory it is appending
-        to. After merge the batch is frozen corpus and subsequent
-        deltas compose exactly (three-batch == from-scratch is pinned
-        by tests/test_dedup.py)."""
-        import os
-
+        """Fold the new batch into the index as its next version: the
+        batch's members and delta pairs, and the band_keys/fp_shingles
+        of fingerprints NOT already indexed (content-keyed artifacts
+        are naturally idempotent under duplicates), written beside
+        hardlinks to the current version's files and committed at
+        once — a merge that fails part-way leaves the index as it was,
+        and retrying it is safe. After merge the batch is frozen
+        corpus and subsequent deltas compose exactly (three-batch ==
+        from-scratch is pinned by tests/test_dedup.py)."""
         members_new, band_keys_new, fp_sh_new, new_pairs = self._delta_parts(
             new_df, id_col, text_col, shingles=shingles
         )
         known_fps = self._read("band_keys").select("fp").distinct()
-        fresh_bands = band_keys_new.join(
-            known_fps, on="fp", how="left_anti"
-        ).localCheckpoint(eager=True)
-        fresh_sh = fp_sh_new.join(
-            known_fps, on="fp", how="left_anti"
-        ).localCheckpoint(eager=True)
-        members_new = members_new.localCheckpoint(eager=True)
-        new_pairs = new_pairs.localCheckpoint(eager=True)
-        members_new.write.mode("append").parquet(os.path.join(self.root, "members"))
-        fresh_bands.write.mode("append").parquet(
-            os.path.join(self.root, "band_keys")
-        )
-        fresh_sh.write.mode("append").parquet(
-            os.path.join(self.root, "fp_shingles")
-        )
-        new_pairs.write.mode("append").parquet(os.path.join(self.root, "pairs"))
+        fresh = {
+            "members": members_new,
+            "band_keys": band_keys_new.join(known_fps, on="fp", how="left_anti"),
+            "fp_shingles": fp_sh_new.join(known_fps, on="fp", how="left_anti"),
+            "pairs": new_pairs,
+        }
+        v = store.Version(self.root, base=self.meta["version"])
+        for name, df in fresh.items():
+            df.write.mode("overwrite").parquet(v.path(name))
+        self.meta = v.commit(self.meta)
 
     def compact(self, root: str, *, n_files: int = 8) -> "MinHashIndex":
         """Rewrite the index as a fresh snapshot under ``root`` —
@@ -806,25 +796,10 @@ class MinHashIndex:
         Content is copied verbatim (no recompute, no re-shingle), so
         every subsequent ``delta_pairs`` answer is unchanged — pinned
         by tests/test_dedup.py."""
-        import json
-        import os
-
-        for name, key in (
-            ("members", "fp"),
-            ("band_keys", "band_hash"),
-            ("fp_shingles", "fp"),
-            ("pairs", None),
-        ):
-            df = self._read(name)
-            part = (
-                df.repartition(n_files, key)
-                if key is not None
-                else df.repartition(n_files)
-            )
-            part.write.mode("overwrite").parquet(os.path.join(root, name))
-        with open(os.path.join(root, "meta.json"), "w") as fh:
-            json.dump(self.meta, fh)
-        return MinHashIndex(self.spark, root)
+        return MinHashIndex._snapshot(
+            self.spark, root, {name: self._read(name) for name in self._ARTIFACTS},
+            self.meta, n_files,
+        )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 60) -> DataFrame:

@@ -116,19 +116,20 @@ def stream_minhash_merge(
     persisted :class:`~coltt_spark.operators.dedup.MinHashIndex` at
     ``root`` (the first batch bootstraps it with ``build``, every
     later batch ``merge``s: delta pairs vs the already-landed corpus
-    + batch-internal pairs appended, signatures computed over the
-    BATCH only — never the corpus). The signature analogue of
-    :func:`stream_text_index`: maintenance cost scales with the
-    CHANGE, and the landed pairs table equals a from-scratch dedup of
-    the full landed corpus exactly (pairwise determination — pinned
-    through the registry oracle). Blocks until the ``availableNow``
-    replay completes."""
+    + batch-internal pairs committed as the index's next version,
+    signatures computed over the BATCH only — never the corpus). The
+    signature analogue of :func:`stream_text_index`: maintenance cost
+    scales with the CHANGE, and the landed pairs table equals a
+    from-scratch dedup of the full landed corpus exactly (pairwise
+    determination — pinned through the registry oracle). Blocks until
+    the ``availableNow`` replay completes."""
+    from coltt_spark import store
     from coltt_spark.operators.dedup import MinHashIndex
 
     def sink(batch: DataFrame, _epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        if os.path.exists(os.path.join(root, "meta.json")):
+        if store.read_manifest(root) is not None:
             MinHashIndex(batch.sparkSession, root).merge(
                 batch, id_col, text_col
             )

@@ -7,14 +7,17 @@ frequencies). This module is the serving configuration that removes
 all three — the same build-once/scan-many trade as the packed vector
 block layouts (`Collection(layout="blocks")`, operators/blocks.py):
 
-* **Build** tokenizes the corpus ONCE and writes
+* **Build** tokenizes the corpus ONCE and writes, as one version of
+  the store (:mod:`coltt_spark.store`: ``v{N}_postings/`` …, committed
+  by one atomic manifest repoint, like every other write here)
   - ``postings/`` — (t, id, dl, tf) parquet, repartitioned by term
     hash and sorted by term within each file, so a query's
     ``t IN (...)`` predicate prunes row groups via parquet min/max +
     dictionary stats (the text twin of the blocks index's partition
     pruning);
   - ``dfreq/`` — the (t, df) document-frequency table;
-  - ``stats.json`` — corpus document count and total token count.
+  - the corpus document count and total token count, in the store
+    manifest.
 * **Search** reads only the pruned postings of the query's terms,
   broadcasts the |q|-row df slice, scores with the SAME
   ``bm25_term_score`` expression the ad-hoc path uses (one source of
@@ -31,13 +34,13 @@ sketches).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from coltt_spark import store
 from coltt_spark.functions.text import tokens
 from coltt_spark.operators.fulltext import (
     BM25_B,
@@ -49,19 +52,45 @@ from coltt_spark.operators.fulltext import (
 from coltt_spark.sources.tables import ensure_parallelism
 
 
+def _write_postings(v: store.Version, postings: DataFrame, n_files: int) -> DataFrame:
+    """Write ``postings`` as version ``v``'s postings in the serving
+    layout (term-hash files, term-sorted within each); returns them
+    read back."""
+    (
+        postings.repartition(n_files, "t")
+        .sortWithinPartitions("t")
+        .write.mode("overwrite")
+        .parquet(v.path("postings"))
+    )
+    return postings.sparkSession.read.parquet(v.path("postings"))
+
+
+def _doc_freq(postings: DataFrame) -> DataFrame:
+    return postings.groupBy("t").agg(F.count(F.lit(1)).cast("double").alias("df"))
+
+
 class TextIndex:
     """Handle on a built inverted index directory."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        with open(os.path.join(root, "stats.json")) as fh:
-            st = json.load(fh)
+        st = store.read_manifest(root)
+        if st is None:
+            raise FileNotFoundError(f"no TextIndex at {root}")
+        self._adopt(st)
+
+    def _adopt(self, st: dict) -> None:
+        self.manifest = st
+        self.version = st["version"]
         #: (n_docs, total_dl) as exact integer-valued doubles — the
         #: same values the ad-hoc path aggregates per query.
         self.n_docs = float(st["n_docs"])
         self.total_dl = float(st["total_dl"])
         self.id_col = st["id_col"]
+
+    def _part(self, name: str) -> str:
+        return store.version_dir(self.root, self.version, name)
 
     # -- build ---------------------------------------------------------
 
@@ -74,7 +103,9 @@ class TextIndex:
         *,
         n_files: int = 16,
     ) -> "TextIndex":
-        """Tokenize once, write postings/dfreq/stats under ``root``.
+        """Tokenize once, write postings/dfreq/stats under ``root`` as
+        its next version (a build over an existing index replaces it
+        at the commit, or not at all).
 
         ``n_files`` sizes the postings layout (term-hash
         repartition); at real scale set it so each file is a few
@@ -82,6 +113,7 @@ class TextIndex:
         """
         spark = docs.sparkSession
         docs = ensure_parallelism(docs, id_col)
+        v = store.Version(root)
         # persist the tokenized projection across the two build
         # actions (postings write, stats aggregate) so the corpus is
         # scanned and tokenized once — build is an eager method, so
@@ -96,31 +128,20 @@ class TextIndex:
                 .agg(F.count(F.lit(1)).cast("double").alias("tf"))
                 .select("t", F.col(id_col), F.col("_dl").alias("dl"), "tf")
             )
-            (
-                postings.repartition(n_files, "t")
-                .sortWithinPartitions("t")
-                .write.mode("overwrite")
-                .parquet(os.path.join(root, "postings"))
-            )
+            built = _write_postings(v, postings, n_files)
             stats_row = base.agg(
                 F.count(F.lit(1)).alias("n_docs"), F.sum("_dl").alias("total_dl")
             ).first()
         finally:
             base.unpersist()
-        built = spark.read.parquet(os.path.join(root, "postings"))
-        dfreq = built.groupBy("t").agg(
-            F.count(F.lit(1)).cast("double").alias("df")
+        _doc_freq(built).write.mode("overwrite").parquet(v.path("dfreq"))
+        v.commit(
+            {
+                "n_docs": int(stats_row["n_docs"]),
+                "total_dl": int(stats_row["total_dl"]),
+                "id_col": id_col,
+            }
         )
-        dfreq.write.mode("overwrite").parquet(os.path.join(root, "dfreq"))
-        with open(os.path.join(root, "stats.json"), "w") as fh:
-            json.dump(
-                {
-                    "n_docs": int(stats_row["n_docs"]),
-                    "total_dl": int(stats_row["total_dl"]),
-                    "id_col": id_col,
-                },
-                fh,
-            )
         return TextIndex(spark, root)
 
     @staticmethod
@@ -140,9 +161,7 @@ class TextIndex:
         id_col = shards[0].id_col
         if any(s.id_col != id_col for s in shards):
             raise ValueError("TextIndex.merge: shards disagree on id column")
-        if any(
-            os.path.isdir(os.path.join(s.root, "tombstones")) for s in shards
-        ):
+        if any(os.path.isdir(s._part("tombstones")) for s in shards):
             # merged stats/df add AS-BUILT shard values; a shard with
             # pending mask-only deletes would fold its deleted docs
             # into the merged statistics forever — compact it first
@@ -153,31 +172,25 @@ class TextIndex:
         postings = None
         dfreq = None
         for s in shards:
-            p = spark.read.parquet(os.path.join(s.root, "postings"))
-            d = spark.read.parquet(os.path.join(s.root, "dfreq"))
+            p = spark.read.parquet(s._part("postings"))
+            d = spark.read.parquet(s._part("dfreq"))
             postings = p if postings is None else postings.unionByName(p)
             dfreq = d if dfreq is None else dfreq.unionByName(d)
-        (
-            postings.repartition(n_files, "t")
-            .sortWithinPartitions("t")
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "postings"))
-        )
+        v = store.Version(root)
+        _write_postings(v, postings, n_files)
         (
             dfreq.groupBy("t")
             .agg(F.sum("df").alias("df"))
             .write.mode("overwrite")
-            .parquet(os.path.join(root, "dfreq"))
+            .parquet(v.path("dfreq"))
         )
-        with open(os.path.join(root, "stats.json"), "w") as fh:
-            json.dump(
-                {
-                    "n_docs": int(sum(s.n_docs for s in shards)),
-                    "total_dl": int(sum(s.total_dl for s in shards)),
-                    "id_col": id_col,
-                },
-                fh,
-            )
+        v.commit(
+            {
+                "n_docs": int(sum(s.n_docs for s in shards)),
+                "total_dl": int(sum(s.total_dl for s in shards)),
+                "id_col": id_col,
+            }
+        )
         return TextIndex(spark, root)
 
     # -- deletes -------------------------------------------------------
@@ -190,11 +203,13 @@ class TextIndex:
         tombstones (deleted docs still count toward idf/avgdl, exactly
         like deleted-but-unmerged Lucene segments). Cost is O(|ids|)
         per call and one tiny broadcast per query — never a postings
-        rewrite on the serving path. ``ids``: an iterable of id values
-        or a single-column DataFrame."""
-        id_type = self.spark.read.parquet(
-            os.path.join(self.root, "postings")
-        ).schema[self.id_col].dataType
+        rewrite on the serving path: the ids are written as the next
+        version's tombstones beside hardlinks to everything else, and
+        the handle moves to that version once it commits. ``ids``: an
+        iterable of id values or a single-column DataFrame."""
+        id_type = self.spark.read.parquet(self._part("postings")).schema[
+            self.id_col
+        ].dataType
         if isinstance(ids, DataFrame):
             given = ids.schema[ids.columns[0]].dataType
             if given != id_type:
@@ -211,10 +226,12 @@ class TextIndex:
                 [(i,) for i in ids],
                 T.StructType([T.StructField(self.id_col, id_type, False)]),
             )
-        df.write.mode("append").parquet(os.path.join(self.root, "tombstones"))
+        v = store.Version(self.root, base=self.version)
+        df.write.mode("overwrite").parquet(v.path("tombstones"))
+        self._adopt(v.commit(self.manifest))
 
     def _minus_tombstones(self, postings: DataFrame) -> DataFrame:
-        tomb = os.path.join(self.root, "tombstones")
+        tomb = self._part("tombstones")
         if not os.path.isdir(tomb):
             return postings
         dead = self.spark.read.parquet(tomb).select(self.id_col).distinct()
@@ -230,37 +247,23 @@ class TextIndex:
         with zero indexable tokens never have postings rows, so they
         leave the stats at compact — they carry no scoring weight
         either way)."""
-        survivors = self._minus_tombstones(
-            self.spark.read.parquet(os.path.join(self.root, "postings"))
-        )
-        (
-            survivors.repartition(n_files, "t")
-            .sortWithinPartitions("t")
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "postings"))
-        )
-        rebuilt = self.spark.read.parquet(os.path.join(root, "postings"))
-        (
-            rebuilt.groupBy("t")
-            .agg(F.count(F.lit(1)).cast("double").alias("df"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "dfreq"))
-        )
+        survivors = self._minus_tombstones(self.spark.read.parquet(self._part("postings")))
+        v = store.Version(root)
+        rebuilt = _write_postings(v, survivors, n_files)
+        _doc_freq(rebuilt).write.mode("overwrite").parquet(v.path("dfreq"))
         stats_row = (
             rebuilt.select(self.id_col, "dl")
             .distinct()
             .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl"))
             .first()
         )
-        with open(os.path.join(root, "stats.json"), "w") as fh:
-            json.dump(
-                {
-                    "n_docs": int(stats_row["n_docs"] or 0),
-                    "total_dl": int(stats_row["total_dl"] or 0),
-                    "id_col": self.id_col,
-                },
-                fh,
-            )
+        v.commit(
+            {
+                "n_docs": int(stats_row["n_docs"] or 0),
+                "total_dl": int(stats_row["total_dl"] or 0),
+                "id_col": self.id_col,
+            }
+        )
         return TextIndex(self.spark, root)
 
     # -- serve ---------------------------------------------------------
@@ -284,11 +287,11 @@ class TextIndex:
             ["query_id", "t"],
         )
         postings = self._minus_tombstones(
-            self.spark.read.parquet(os.path.join(self.root, "postings"))
+            self.spark.read.parquet(self._part("postings"))
             .where(F.col("t").isin(all_terms))
         )
         dfreq = (
-            self.spark.read.parquet(os.path.join(self.root, "dfreq"))
+            self.spark.read.parquet(self._part("dfreq"))
             .where(F.col("t").isin(all_terms))
         )
         j = postings.join(F.broadcast(dfreq), on="t").join(

@@ -3,6 +3,7 @@ vs DuckDB is covered by test_oracle_parity)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from coltt_spark.operators.dedup import (
@@ -1111,8 +1112,6 @@ def test_minhash_index_compact_preserves_delta_answers(spark, tmp_path):
     appended files), compact rewrites the snapshot into n_files per
     artifact WITHOUT recompute — and the delta answer over a fresh
     batch is unchanged, still equal to from-scratch over the union."""
-    import os
-
     from coltt_spark.operators.dedup import MinHashIndex
 
     from .conftest import SF_SMOKE
@@ -1130,8 +1129,39 @@ def test_minhash_index_compact_preserves_delta_answers(spark, tmp_path):
     full = sorted(map(tuple, minhash_lsh_pairs(docs, "doc_id", "text").collect()))
     assert after == full
     # the compacted layout is actually smaller-file-count
-    n_band_files = len(
-        [f for f in os.listdir(tmp_path / "compacted" / "band_keys")
-         if f.endswith(".parquet")]
-    )
+    n_band_files = len(cidx._read("band_keys").inputFiles())
     assert n_band_files <= 2
+
+
+@pytest.mark.parametrize(
+    "k,after", [(1, False), (2, False), (3, False), (4, False), (4, True)],
+    ids=["before-1", "before-2", "before-3", "before-4", "after-4"],
+)
+def test_minhash_merge_failure_commits_nothing(spark, tmp_path, monkeypatch, k, after):
+    """A merge that fails at any of its four artifact writes, or after
+    the last, leaves the index at its committed version (a reopened
+    handle answers as before), and retrying it ends equal to a
+    from-scratch dedup. Writes that append in place would keep a
+    failed attempt's members (duplicate pairs on retry) or its band
+    keys without their shingle sets (lost pairs)."""
+    from coltt_spark.operators.dedup import MinHashIndex
+
+    from .conftest import InjectedWriteFailure, fail_at_parquet_write
+
+    docs = load_table(spark, SF_CORRECT, "documents")
+    b0, b1, b2 = (docs.filter(F.col("doc_id") % 3 == i) for i in (1, 2, 0))
+    root = str(tmp_path / "idx")
+
+    def answer(index, batch):
+        return sorted(map(tuple, index.delta_pairs(batch, "doc_id", "text").collect()))
+
+    idx = MinHashIndex.build(b0, "doc_id", "text", root)
+    committed = answer(idx, b1)
+    fail_at_parquet_write(monkeypatch, k, after=after)
+    with pytest.raises(InjectedWriteFailure):
+        idx.merge(b1, "doc_id", "text")
+    assert answer(MinHashIndex(spark, root), b1) == committed
+    idx.merge(b1, "doc_id", "text")
+    assert answer(idx, b2) == sorted(
+        map(tuple, minhash_lsh_pairs(docs, "doc_id", "text").collect())
+    )

@@ -485,3 +485,62 @@ def test_hybrid_batch_equals_sequential(spark):
             ).collect()
         ]
         assert sorted(got[qid]) == sorted(single), qid
+
+
+def _served(idx) -> list[tuple]:
+    return [tuple(r) for r in idx.search("vector hash join dup", top_k=20).collect()]
+
+
+@pytest.mark.parametrize(
+    "k,after", [(1, False), (2, False), (2, True)], ids=["before-1", "before-2", "after-2"]
+)
+def test_textindex_failed_rebuild_keeps_the_committed_index(
+    spark, tmp_path, monkeypatch, k, after
+):
+    """A build over an existing index that fails at its postings or
+    dfreq write, or after both, leaves the old index whole: a
+    reopened handle serves the old corpus statistics and scores
+    (never new postings under old stats), and a retry equals a fresh
+    build."""
+    from coltt_spark.textindex import TextIndex
+
+    from .conftest import InjectedWriteFailure, fail_at_parquet_write
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    root = str(tmp_path / "idx")
+    old = TextIndex.build(docs.filter("doc_id % 2 = 0"), "doc_id", "text", root)
+    committed = (old.n_docs, _served(old))
+    fail_at_parquet_write(monkeypatch, k, after=after)
+    with pytest.raises(InjectedWriteFailure):
+        TextIndex.build(docs, "doc_id", "text", root)
+    reopened = TextIndex(spark, root)
+    assert (reopened.n_docs, _served(reopened)) == committed
+    retried = TextIndex.build(docs, "doc_id", "text", root)
+    fresh = TextIndex.build(docs, "doc_id", "text", str(tmp_path / "fresh"))
+    assert (retried.n_docs, _served(retried)) == (fresh.n_docs, _served(fresh))
+
+
+@pytest.mark.parametrize("after", [False, True], ids=["before", "after"])
+def test_textindex_failed_delete_keeps_the_committed_index(
+    spark, tmp_path, monkeypatch, after
+):
+    """A delete that fails at its tombstone write, before or after
+    the files land, leaves the index serving as before on the same
+    handle and on a reopened one; retrying it equals a clean delete."""
+    from coltt_spark.textindex import TextIndex
+
+    from .conftest import InjectedWriteFailure, fail_at_parquet_write
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    dead = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    root = str(tmp_path / "idx")
+    idx = TextIndex.build(docs, "doc_id", "text", root)
+    committed = _served(idx)
+    fail_at_parquet_write(monkeypatch, 1, after=after)
+    with pytest.raises(InjectedWriteFailure):
+        idx.delete(dead)
+    assert _served(idx) == _served(TextIndex(spark, root)) == committed
+    idx.delete(dead)
+    clean = TextIndex.build(docs, "doc_id", "text", str(tmp_path / "clean"))
+    clean.delete(dead)
+    assert _served(idx) == _served(clean) != committed

@@ -55,6 +55,25 @@ def test_stream_sessions_match_batch_totals(spark):
     assert s_per_user == b_per_user
 
 
+def test_sessionize_gap_at_microsecond_precision(spark):
+    """A gap of exactly 30 minutes stays in the session; 30 minutes
+    and half a second opens a new one (floored to whole seconds, that
+    gap would read 1800 s and not split)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    events = spark.createDataFrame(
+        [
+            (1, 7, t0, 1.0),
+            (2, 7, t0 + dt.timedelta(minutes=30), 1.0),
+            (3, 7, t0 + dt.timedelta(minutes=60, milliseconds=500), 1.0),
+        ],
+        "event_id long, user_id long, ts timestamp_ntz, value double",
+    )
+    rows = sessionize(events).orderBy("session_id").collect()
+    assert [r["n_events"] for r in rows] == [2, 1]
+
+
 def test_media_features_deterministic(spark):
     media = media_table(load_table(spark, SF_SMOKE, "documents"))
     f1 = {r["doc_id"]: r["features"] for r in extract_features(media, dim=16).collect()}
