@@ -21,7 +21,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in driver
+    priority order (``registry.driver_order``): touched keys not yet
+    re-verified, then keys never checked green, then the rest by
+    oldest green check in the committed ``CORRECTNESS_r*.json``."""
     return dict(QUERIES)
 
 

@@ -19,7 +19,9 @@ stable:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2148,236 +2150,77 @@ QUERIES.update(FULLTEXT_QUERIES)
 ORACLES.update(FULLTEXT_ORACLES)
 
 # ---------------------------------------------------------------------------
-# Driver-window ordering. The per-round correctness gate hash-checks the
-# FIRST `_DRIVER_WINDOW` keys of ``queries()`` only, so dict order encodes
-# verification priority: entries that have never been driver-checked, are
-# new, or whose implementation changed this round come FIRST; long-stable
-# variants whose semantics are redundantly covered by an earlier entry
-# (e.g. knn_wide/knn_block re-verify knn_cosine through other layouts) sit
-# past the window — they remain fully oracle-checked by the local gate
-# (tests/test_oracle_parity.py) every run. A new registry entry MUST be
-# added to _KEY_ORDER explicitly — inside the window when a
-# lower-priority slot exists; when the window is already full of
-# never-driver-checked entries, FIRST past the boundary with a
-# rotation-ledger note (CLAUDE.md) marking it next-round priority.
-# The reorder below fails loudly on a missing name, and
-# test_registry_order pins the contract.
+# Driver-window ordering. The driver's correctness gate hash-checks only
+# the FIRST `_DRIVER_WINDOW` keys of ``queries()``, so dict order is
+# verification priority. It is derived from the gate's own history
+# (``CORRECTNESS_r*.json`` at the repo root) by `driver_order`; the only
+# hand-kept input is `_TOUCHED`.
 
 _DRIVER_WINDOW = 50
 
-_KEY_ORDER = [
-    # -- round-14 window: the r13 rotation ledger executed — the 22
-    # -- r10-overflow entries FIRST (displaced from the r13 window,
-    # -- oldest driver signal on the board), then the leading 25
-    # -- r11-green entries in r11-window order, then this round's 3
-    # -- touched seats. The r11 block TAIL (24 entries) is displaced
-    # -- past the boundary and keeps round-15 priority. See CLAUDE.md
-    # -- 'Driver-check rotation ledger'.
-    "knn_f16",                 # ledger: r10 overflow, last driver signal r10
-    "ann_topk_batch",                 # ledger: r10 overflow, last driver signal r10
-    "knn_pagination",                 # ledger: r10 overflow, last driver signal r10
-    "knn_block",                 # ledger: r10 overflow, last driver signal r10
-    "dedup_containment",                 # ledger: r10 overflow, last driver signal r10
-    "rollup_revenue",                 # ledger: r10 overflow, last driver signal r10
-    "events_sessionize",                 # ledger: r10 overflow, last driver signal r10
-    "media_features",                 # ledger: r10 overflow, last driver signal r10
-    "quality_classifier",                 # ledger: r10 overflow, last driver signal r10
-    "web_sitemap",                 # ledger: r10 overflow, last driver signal r10
-    "knn_euclidean",                 # ledger: r10 overflow, last driver signal r10
-    "knn_manhattan",                 # ledger: r10 overflow, last driver signal r10
-    "compare_dist",                 # ledger: r10 overflow, last driver signal r10
-    "knn_f8",                 # ledger: r10 overflow, last driver signal r10
-    "knn_bf16",                 # ledger: r10 overflow, last driver signal r10
-    "media_image_dedup",                 # ledger: r10 overflow, last driver signal r10
-    "collection_search_ivfpq_batch",                 # ledger: r10 overflow, last driver signal r10
-    "media_image_dedup_groups",                 # ledger: r10 overflow, last driver signal r10
-    "unigram_train",                 # ledger: r10 overflow, last driver signal r10
-    "unigram_encode_ids",                 # ledger: r10 overflow, last driver signal r10
-    "collection_search_ivfpq",                 # ledger: r10 overflow, last driver signal r10
-    "collection_search_ivfpq_delta",                 # ledger: r10 overflow, last driver signal r10
-    "knn_two_phase",                 # ledger: last driver signal r11
-    "ann_topk_blas",                 # ledger: last driver signal r11
-    "media_metadata",                 # ledger: last driver signal r11
-    "events_hourly",                 # ledger: last driver signal r11
-    "token_count",                 # ledger: last driver signal r11
-    "cube_revenue",                 # ledger: last driver signal r11
-    "set_intersect",                 # ledger: last driver signal r11
-    "top_revenue_orders",                 # ledger: last driver signal r11
-    "knn_wide",                 # ledger: last driver signal r11
-    "events_json",                 # ledger: last driver signal r11
-    "text_redact_pii",                 # ledger: last driver signal r11
-    "collection_hybrid_ivf",                 # ledger: last driver signal r11
-    "bm25_index_deleted",                 # ledger: last driver signal r11
-    "collection_search_grouped",                 # ledger: last driver signal r11
-    "media_knn",                 # ledger: last driver signal r11
-    "media_frames",                 # ledger: last driver signal r11
-    "schemaless_pure_search",                 # ledger: last driver signal r11
-    "schemaless_update_delete",                 # ledger: last driver signal r11
-    "hybrid_search",                 # ledger: last driver signal r11
-    "doc_chunk",                 # ledger: last driver signal r11
-    "decontaminate",                 # ledger: last driver signal r11
-    "sample_stratified",                 # ledger: last driver signal r11
-    "sample_fraction",                 # ledger: last driver signal r11
-    "source_mix",                 # ledger: last driver signal r11
-    "export_shards",                 # ledger: last driver signal r11
-    # -- touched this round (r14-opt): plan/execution-shape changes,
-    # -- re-verified by the driver gate
-    "doc_ppl_bigram",  # touched r14: bigram stream tokenized ONCE into
-    #    a lazy local checkpoint (was 5 re-derived scan+explode
-    #    subtrees); values unchanged, oracle MATCH at sf0.001/0.01
-    "dedup_minhash_delta_canonical",  # touched r14: label-propagation
-    #    rounds fused to ONE job each (lazy checkpoint + count in one
-    #    action) and the edges checkpoint made lazy; values unchanged
-    "web_domain_quota",  # touched r14: the PSL-resolved (doc_id,
-    #    domain, score) projection lands in a lazy localCheckpoint so
-    #    the ~2.6k-rule domain CASE is evaluated once, not once per
-    #    domain_quota plan branch; values unchanged, oracle MATCH
-    # ------------------------------------------------------------------
-    # -- past the 50-key boundary: re-oracled by the LOCAL gate every
-    # -- pytest run; driver rotation continues next round.
-    # -- displaced r11 entries — ROUND-15 PRIORITY (pack_sequences
-    # -- demoted by the third r14 touched seat), in r11 order:
-    "pack_sequences",                 # ledger: last driver signal r11
-    "stream_hourly",                 # ledger: r11 overflow, round-15 priority
-    "stream_sessionize",                 # ledger: r11 overflow, round-15 priority
-    "stream_dedup",                 # ledger: r11 overflow, round-15 priority
-    "collection_search_blocks_filtered",                 # ledger: r11 overflow, round-15 priority
-    "events_asof",                 # ledger: r11 overflow, round-15 priority
-    "ann_bq",                 # ledger: r11 overflow, round-15 priority
-    "ann_pq",                 # ledger: r11 overflow, round-15 priority
-    "embed_cluster_sizes",                 # ledger: r11 overflow, round-15 priority
-    "sample_cluster_balanced",                 # ledger: r11 overflow, round-15 priority
-    "dedup_spans",                 # ledger: r11 overflow, round-15 priority
-    "text_repetition",                 # ledger: r11 overflow, round-15 priority
-    "stream_ingest",                 # ledger: r11 overflow, round-15 priority
-    "knn_bq",                 # ledger: r11 overflow, round-15 priority
-    "knn_sq8",                 # ledger: r11 overflow, round-15 priority
-    "semantic_dedup",                 # ledger: r11 overflow, round-15 priority
-    "range_search",                 # ledger: r11 overflow, round-15 priority
-    "token_count_unicode",                 # ledger: r11 overflow, round-15 priority
-    "stream_ingest_ivfpq",                 # ledger: r11 overflow, round-15 priority
-    "unigram_train_pruned",                 # ledger: r11 overflow, round-15 priority
-    "media_audio_dedup",                 # ledger: r11 overflow, round-15 priority
-    "collection_search_ivfpq_opq",                 # ledger: r11 overflow, round-15 priority
-    "decontaminate_semantic",                 # ledger: r11 overflow, round-15 priority
-    "neardup_cosine",                 # ledger: r11 overflow, round-15 priority
-    # -- the 47 remaining r12-green entries, r12-window order
-    # -- (doc_ppl_bigram left this block when promoted as touched):
-    "dedup_minhash_bytes",                 # ledger: last driver signal r12
-    "ann_ivfpq",                 # ledger: last driver signal r12
-    "decontaminate_bytes",                 # ledger: last driver signal r12
-    "text_script_profile",                 # ledger: last driver signal r12
-    "dedup_containment_bytes",                 # ledger: last driver signal r12
-    "bpe_train",                 # ledger: last driver signal r12
-    "bpe_encode",                 # ledger: last driver signal r12
-    "media_exif",                 # ledger: last driver signal r12
-    "media_exif_orientation",                 # ledger: last driver signal r12
-    "pack_sequences_firstfit",                 # ledger: last driver signal r12
-    "embed_outliers",                 # ledger: last driver signal r12
-    "token_vocab",                 # ledger: last driver signal r12
-    "doc_lm_score",                 # ledger: last driver signal r12
-    "filter_extended",                 # ledger: last driver signal r12
-    "collection_time_travel",                 # ledger: last driver signal r12
-    "jsonl_roundtrip",                 # ledger: last driver signal r12
-    "ann_recall",                 # ledger: last driver signal r12
-    "stream_join",                 # ledger: last driver signal r12
-    "embed_project",                 # ledger: last driver signal r12
-    "sample_temperature",                 # ledger: last driver signal r12
-    "bm25_search",                 # ledger: last driver signal r12
-    "distinct_sketch",                 # ledger: last driver signal r12
-    "quantile_sketch",                 # ledger: last driver signal r12
-    "decontaminate_bloom",                 # ledger: last driver signal r12
-    "bm25_indexed",                 # ledger: last driver signal r12
-    "collection_search",                 # ledger: last driver signal r12
-    "media_jpeg_features",                 # ledger: last driver signal r12
-    "media_gif_features",                 # ledger: last driver signal r12
-    "format_roundtrip",                 # ledger: last driver signal r12
-    "media_tiff_features",                 # ledger: last driver signal r12
-    "archive_roundtrip",                 # ledger: last driver signal r12
-    "warc_html_extract",                 # ledger: last driver signal r12
-    "web_url_dedup",                 # ledger: last driver signal r12
-    "line_dedup",                 # ledger: last driver signal r12
-    "bucketed_join",                 # ledger: last driver signal r12
-    "web_robots_filter",                 # ledger: last driver signal r12
-    "dedup_span_removal",                 # ledger: last driver signal r12
-    "zorder_layout",                 # ledger: last driver signal r12
-    "media_png_features",                 # ledger: last driver signal r12
-    "collection_search_ivf",                 # ledger: last driver signal r12
-    "collection_search_ivf_delta",                 # ledger: last driver signal r12
-    "media_video_dedup",                 # ledger: last driver signal r12
-    "wordpiece_train",                 # ledger: last driver signal r12
-    "wordpiece_encode",                 # ledger: last driver signal r12
-    "collection_hybrid_ivfpq",                 # ledger: last driver signal r12
-    "media_video_dedup_groups",                 # ledger: last driver signal r12
-    "text_lang_id_windows",                 # ledger: last driver signal r12
-    # -- the 49 remaining r13-green entries, r13-window order
-    # -- (dedup_minhash_delta_canonical left when promoted as touched):
-    "stream_quantile",                 # ledger: last driver signal r13
-    "ann_lsh",                 # ledger: last driver signal r13
-    "dedup_simhash",                 # ledger: last driver signal r13
-    "collection_hybrid_text",                 # ledger: last driver signal r13
-    "bm25_index_merged",                 # ledger: last driver signal r13
-    "media_audio_features",                 # ledger: last driver signal r13
-    "media_video_stats",                 # ledger: last driver signal r13
-    "collection_search_blocks",                 # ledger: last driver signal r13
-    "token_fertility_by_lang",                 # ledger: last driver signal r13
-    "bpe_encode_ids_pretok",                 # ledger: last driver signal r13
-    "pack_sequences_ids",                 # ledger: last driver signal r13
-    "bpe_train_bytes",                 # ledger: last driver signal r13
-    "bpe_encode_ids",                 # ledger: last driver signal r13
-    "text_lang_id_unicode",                 # ledger: last driver signal r13
-    "text_lang_id",                 # ledger: last driver signal r13
-    "upsert_delete",                 # ledger: last driver signal r13
-    "filter_coercion",                 # ledger: last driver signal r13
-    "filter_search",                 # ledger: last driver signal r13
-    "multi_vector_search",                 # ledger: last driver signal r13
-    "dedup_minhash_lsh",                 # ledger: last driver signal r13
-    "stream_distinct",                 # ledger: last driver signal r13
-    "collection_search_blocks_delta",                 # ledger: last driver signal r13
-    "knn_cosine",                 # ledger: last driver signal r13
-    "ann_ivf",                 # ledger: last driver signal r13
-    "collection_search_batch",                 # ledger: last driver signal r13
-    "freq_sketch",                 # ledger: last driver signal r13
-    "dedup_canonical",                 # ledger: last driver signal r13
-    "knn_filtered",                 # ledger: last driver signal r13
-    "dedup_exact",                 # ledger: last driver signal r13
-    "dedup_groups",                 # ledger: last driver signal r13
-    "dedup_ngram_jaccard",                 # ledger: last driver signal r13
-    "collection_search_batch_filtered",                 # ledger: last driver signal r13
-    "hybrid_rrf",                 # ledger: last driver signal r13
-    "bm25_topk_batch",                 # ledger: last driver signal r13
-    "text_quality",                 # ledger: last driver signal r13
-    "doc_fingerprint",                 # ledger: last driver signal r13
-    "pricing_summary",                 # ledger: last driver signal r13
-    "region_revenue",                 # ledger: last driver signal r13
-    "window_top_orders",                 # ledger: last driver signal r13
-    "price_percentiles",                 # ledger: last driver signal r13
-    "dedup_minhash_delta",                 # ledger: last driver signal r13
-    "unigram_train_soft",                 # ledger: last driver signal r13
-    "collection_hybrid_ivfpq_batch",                 # ledger: last driver signal r13
-    "web_url_psl",                 # ledger: last driver signal r13
-    "media_av_dedup",                 # ledger: last driver signal r13
-    "media_av_dedup_groups",                 # ledger: last driver signal r13
-    "dedup_minhash_delta_bytes",                 # ledger: last driver signal r13
-    "stream_dedup_index",                 # ledger: last driver signal r13
-]
+#: key -> driver round in which its implementation last changed (one
+#: past the newest history file when the change lands). A key leads the
+#: window until the driver checks it green in that round or later, so
+#: an entry never needs clearing.
+_TOUCHED: dict[str, int] = {
+    "events_sessionize": 15,  # gap precision
+    # MinHashIndex moved onto the versioned store
+    "dedup_minhash_delta": 15,
+    "dedup_minhash_delta_bytes": 15,
+    "dedup_minhash_delta_canonical": 15,
+    "stream_dedup_index": 15,
+    # TextIndex moved onto the versioned store
+    "bm25_indexed": 15,
+    "bm25_index_deleted": 15,
+    "bm25_index_merged": 15,
+    "collection_hybrid_text": 15,
+    "collection_hybrid_ivfpq": 15,
+    "collection_hybrid_ivfpq_batch": 15,
+}
 
 
-def _apply_key_order() -> None:
-    global QUERIES, ORACLES
-    missing = [k for k in _KEY_ORDER if k not in QUERIES]
-    extra = [k for k in QUERIES if k not in _KEY_ORDER]
-    if missing or extra:
-        raise AssertionError(
-            f"_KEY_ORDER out of sync with the registry: missing={missing} "
-            f"extra={extra} — add new entries to _KEY_ORDER inside the "
-            f"driver window"
-        )
-    QUERIES = {k: QUERIES[k] for k in _KEY_ORDER}
-    ORACLES = {k: ORACLES[k] for k in _KEY_ORDER if k in ORACLES}
+def driver_order(
+    keys: Sequence[str], history_dir: str | Path, touched: dict[str, int]
+) -> list[str]:
+    """Order ``keys`` (registration order) by driver-check priority.
+
+    A check is green when its rows, schema and hash match and ``err``
+    is null. First come the ``touched`` keys whose round is later than
+    their last green check, in ``touched`` order; then keys never
+    checked green, in registration order; then the rest by last green
+    round, oldest first, ties broken by position in that round's file.
+    History keys absent from ``keys`` are ignored; a ``touched`` key
+    absent from ``keys`` raises."""
+    unknown = [k for k in touched if k not in keys]
+    if unknown:
+        raise ValueError(f"touched keys not in the registry: {unknown}")
+    last_green: dict[str, tuple[int, int]] = {}
+    rounds = {
+        int(p.stem.rpartition("_r")[2]): p
+        for p in Path(history_dir).glob("CORRECTNESS_r*.json")
+    }
+    for rnd in sorted(rounds):
+        checks = json.loads(rounds[rnd].read_text())
+        for pos, (key, c) in enumerate(checks.items()):
+            green = c["rows_match"] and c["schema_match"] and c["hash_match"]
+            if green and c["err"] is None:
+                last_green[key] = (rnd, pos)
+    first = [
+        k for k, rnd in touched.items() if rnd > last_green.get(k, (0,))[0]
+    ]
+    rest = [k for k in keys if k not in first]
+    never = [k for k in rest if k not in last_green]
+    seen = sorted((k for k in rest if k in last_green), key=last_green.get)
+    return first + never + seen
 
 
-_apply_key_order()
+QUERIES = {
+    k: QUERIES[k]
+    for k in driver_order(
+        list(QUERIES), Path(__file__).resolve().parents[1], _TOUCHED
+    )
+}
+ORACLES = {k: ORACLES[k] for k in QUERIES if k in ORACLES}
 
 
 def prewarm_fixtures(spark: SparkSession, sf_dir: str) -> None:

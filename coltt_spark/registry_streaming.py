@@ -11,7 +11,9 @@ live landing directory / Kafka source.
 from __future__ import annotations
 
 import itertools
+import threading
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,19 +49,20 @@ _MEM_SEQ = itertools.count()
 _HOUR_STATE_PARTITIONS = "4"
 
 
-def _hour_state_scope(spark: SparkSession):
-    from contextlib import contextmanager
+#: serializes `_hour_state_scope`: two overlapping save/set/restore
+#: scopes on one session would otherwise leave it at the scoped count
+_HOUR_STATE_LOCK = threading.Lock()
 
-    @contextmanager
-    def scope():
+
+@contextmanager
+def _hour_state_scope(spark: SparkSession):
+    with _HOUR_STATE_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", _HOUR_STATE_PARTITIONS)
         try:
             yield
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return scope()
 
 
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -364,13 +367,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition; the state partition count is fixed at query start, so
     # scope it down for this bounded replay (a production deployment
     # sizes it to the key cardinality once, not per query)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _hour_state_scope(spark):
         sdf = interval_join_stream(read_events_stream(spark, sf_dir))
         return run_to_memory(sdf, f"q_stream_join_{next(_MEM_SEQ)}", mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 _ORACLE_STREAM_JOIN = """

@@ -20,8 +20,9 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-#: longest AF_UNIX socket path (``sun_path`` is 108 bytes with its NUL)
-_UDS_PATH_MAX = 107
+#: longest socket path: Spark rejects a socket dir longer than 61
+#: characters, so 61 + the socket name, below AF_UNIX's 107 bytes
+_UDS_PATH_MAX = 104
 #: pyspark and the JVM name their sockets ``<dir>/.<uuid4>.sock``
 _UDS_NAME_BYTES = len("/." + "0" * 36 + ".sock")
 _UDS_PREFIX = "coltt-uds-"

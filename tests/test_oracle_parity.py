@@ -37,148 +37,87 @@ def test_every_query_is_oracle_backed():
     assert not missing, f"queries without oracles: {missing}"
 
 
-#: The round-13 rotation ledger (CLAUDE.md), executed this round:
-#: the 22 r10-overflow entries lead (displaced from the r13 window,
-#: the oldest driver signal on the board), then the leading r11-green
-#: entries in r11-window order. The r11 block TAIL overflows as this
-#: round's touched seats land and keeps round-15 priority.
-#: Machine-checked against _KEY_ORDER below so the ledger promise
-#: cannot silently drift (ADVICE r3 #1).
-ROTATION_LEDGER_R14 = [
-    # the 22 r10-overflow entries, r10 order (r14 priority per the
-    # r13 ledger — oldest driver signal on the board)
-    "knn_f16",
-    "ann_topk_batch",
-    "knn_pagination",
-    "knn_block",
-    "dedup_containment",
-    "rollup_revenue",
-    "events_sessionize",
-    "media_features",
-    "quality_classifier",
-    "web_sitemap",
-    "knn_euclidean",
-    "knn_manhattan",
-    "compare_dist",
-    "knn_f8",
-    "knn_bf16",
-    "media_image_dedup",
-    "collection_search_ivfpq_batch",
-    "media_image_dedup_groups",
-    "unigram_train",
-    "unigram_encode_ids",
-    "collection_search_ivfpq",
-    "collection_search_ivfpq_delta",
-    # the leading 25 r11-green entries in r11-window order; the
-    # 24-entry tail is displaced past the boundary (R15_PRIORITY)
-    "knn_two_phase",
-    "ann_topk_blas",
-    "media_metadata",
-    "events_hourly",
-    "token_count",
-    "cube_revenue",
-    "set_intersect",
-    "top_revenue_orders",
-    "knn_wide",
-    "events_json",
-    "text_redact_pii",
-    "collection_hybrid_ivf",
-    "bm25_index_deleted",
-    "collection_search_grouped",
-    "media_knn",
-    "media_frames",
-    "schemaless_pure_search",
-    "schemaless_update_delete",
-    "hybrid_search",
-    "doc_chunk",
-    "decontaminate",
-    "sample_stratified",
-    "sample_fraction",
-    "source_mix",
-    "export_shards",
-]
+def _write_round(d, rnd, checks):
+    """One ``CORRECTNESS_rNN.json``: key -> (hash_match, err)."""
+    import json
 
-#: the r11 overflow tail — displaced from the round-14 window by the
-#: 22 r10-overflow entries + this round's 3 touched seats; they lead
-#: the round-15 rotation queue, in r11-window order (pack_sequences
-#: was the last leading-block entry until web_domain_quota's touched
-#: seat displaced it).
-R15_PRIORITY = [
-    "pack_sequences",
-    "stream_hourly",
-    "stream_sessionize",
-    "stream_dedup",
-    "collection_search_blocks_filtered",
-    "events_asof",
-    "ann_bq",
-    "ann_pq",
-    "embed_cluster_sizes",
-    "sample_cluster_balanced",
-    "dedup_spans",
-    "text_repetition",
-    "stream_ingest",
-    "knn_bq",
-    "knn_sq8",
-    "semantic_dedup",
-    "range_search",
-    "token_count_unicode",
-    "stream_ingest_ivfpq",
-    "unigram_train_pruned",
-    "media_audio_dedup",
-    "collection_search_ivfpq_opq",
-    "decontaminate_semantic",
-    "neardup_cosine",
-]
-
-#: touched this round (r14 = optimization round 2) — execution-shape
-#: changes re-seated inside the window so the driver re-verifies them
-#: (construction-only expr-ification changes are NOT re-seated: they
-#: are value-pinned by tests/test_expr_parity.py, the r13 precedent).
-NEW_OR_TOUCHED_R14: list[str] = [
-    # touched r14-opt: the bigram stream is tokenized ONCE into a lazy
-    # local checkpoint (was 5 re-derived scan+explode subtrees); the
-    # count/context/probability consumers read the checkpoint
-    "doc_ppl_bigram",
-    # touched r14-opt: connected-components rounds fused to one job
-    # each (lazy checkpoint materialized by the changed-count action);
-    # heaviest registry key, VERDICT r13 #3
-    "dedup_minhash_delta_canonical",
-    # touched r14-opt: the PSL-resolved (doc_id, domain, score)
-    # projection lands in a lazy localCheckpoint so the ~2.6k-rule
-    # domain CASE is evaluated once, not once per domain_quota plan
-    # branch (tranche-3 continuation of the doc_ppl_bigram pattern)
-    "web_domain_quota",
-]
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps({
+        k: {"rows_match": True, "schema_match": True, "hash_match": h,
+            "spark_rows": 1, "oracle_rows": 1, "err": err}
+        for k, (h, err) in checks.items()
+    }))
 
 
-def test_registry_order_puts_unverified_entries_in_driver_window():
-    """The driver hash-checks only the first _DRIVER_WINDOW queries()
-    keys. Pin the ordering contract: the registry follows _KEY_ORDER
-    exactly; the round-13 rotation-ledger entries (22 r10-overflow +
-    the leading 25 r11-green entries) LEAD the round-14 window, every
-    entry touched this round is inside it (at the window tail), and
-    the r11 overflow tail sits FIRST past the boundary with round-15
-    priority. Past the boundary after it: the 47 remaining r12-green
-    entries in r12-window order, then the 48 remaining r13-green
-    entries in r13-window order (web_domain_quota left that block
-    when promoted as touched). Every past-window entry is re-oracled
-    by the local gate every pytest run."""
-    from coltt_spark.registry import _DRIVER_WINDOW, _KEY_ORDER, QUERIES
+def test_driver_order_derives_priority_from_history(tmp_path):
+    """The driver window order comes from the gate's own history:
+    touched keys still unverified since their change, then keys never
+    checked green (registration order), then the rest by last green
+    round, oldest first, ties broken by position in that round's
+    file."""
+    import pytest
 
-    assert list(QUERIES) == _KEY_ORDER
-    # ledger entries lead the window, in ledger order; touched
-    # seats fill the window tail
-    assert _KEY_ORDER[: len(ROTATION_LEDGER_R14)] == ROTATION_LEDGER_R14
-    assert (
-        _KEY_ORDER[len(ROTATION_LEDGER_R14) : _DRIVER_WINDOW]
-        == NEW_OR_TOUCHED_R14
-    )
-    assert len(ROTATION_LEDGER_R14) + len(NEW_OR_TOUCHED_R14) == _DRIVER_WINDOW
-    # the displaced r11 tail sits first past the boundary (r15 queue)
-    assert (
-        _KEY_ORDER[_DRIVER_WINDOW : _DRIVER_WINDOW + len(R15_PRIORITY)]
-        == R15_PRIORITY
-    )
+    from coltt_spark.registry import driver_order
+
+    ok = (True, None)
+    _write_round(tmp_path, 1, {"a": ok, "b": ok, "c": ok, "gone": ok})
+    # d: hash mismatch; f: an error; both stay never-checked
+    _write_round(tmp_path, 2, {"d": (False, None), "c": ok, "f": (True, "x")})
+    _write_round(tmp_path, 10, {"e": ok, "b": ok})
+    keys = ["a", "b", "c", "d", "e", "f", "g"]
+
+    # never-checked first, in registration order; then oldest green
+    # first: a (r1), c (r2), e (r10, pos 0), b (r10, pos 1); the
+    # history-only key "gone" is ignored
+    assert driver_order(keys, tmp_path, {}) == [
+        "d", "f", "g", "a", "c", "e", "b"
+    ]
+    # a failed re-check does not erase an earlier green round
+    _write_round(tmp_path, 11, {"a": (False, None), "c": (True, "boom")})
+    assert driver_order(keys, tmp_path, {}) == [
+        "d", "f", "g", "a", "c", "e", "b"
+    ]
+    # touched keys lead, in touched order, only while their round is
+    # later than their last green check (b was green in r10)
+    touched = {"e": 11, "b": 10, "a": 3, "g": 11}
+    assert driver_order(keys, tmp_path, touched) == [
+        "e", "a", "g", "d", "f", "c", "b"
+    ]
+    # no history: registration order, touched keys still first
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert driver_order(keys, empty, {}) == keys
+    assert driver_order(keys, empty, {"c": 1}) == [
+        "c", "a", "b", "d", "e", "f", "g"
+    ]
+    with pytest.raises(ValueError, match="nope"):
+        driver_order(keys, empty, {"nope": 1})
+
+
+def test_registry_follows_derived_driver_order():
+    """On the real registry and history: QUERIES and ORACLES share one
+    order, every touched key still unverified since its change sits in
+    the hash-checked window, and past the touched prefix the last
+    green round never decreases."""
+    import json
+    from pathlib import Path
+
+    from coltt_spark import registry as r
+
+    keys = list(r.QUERIES)
+    assert list(r.ORACLES) == [k for k in keys if k in r.ORACLES]
+    root = Path(r.__file__).resolve().parents[1]
+    last = {}
+    for p in sorted(root.glob("CORRECTNESS_r*.json")):
+        rnd = int(p.stem.rpartition("_r")[2])
+        for k, c in json.loads(p.read_text()).items():
+            green = c["rows_match"] and c["schema_match"] and c["hash_match"]
+            if green and c["err"] is None:
+                last[k] = max(last.get(k, 0), rnd)
+    active = [k for k, rnd in r._TOUCHED.items() if rnd > last.get(k, 0)]
+    assert keys[: len(active)] == active
+    assert len(active) <= r._DRIVER_WINDOW
+    rounds = [last.get(k, 0) for k in keys[len(active) :]]
+    assert rounds == sorted(rounds)
 
 
 def test_opq_oracle_training_matches_persisted_artifacts(spark):

@@ -91,6 +91,28 @@ def test_session_with_long_tmpdir_runs_python_tasks(tmp_path):
     assert not os.path.exists(out["dir"])
 
 
+def test_socket_dir_fits_sparks_dir_limit(monkeypatch):
+    """Spark rejects a socket dir longer than 61 characters, below what
+    AF_UNIX allows: a temp dir that would put this process's socket dir
+    at 62 characters is passed over."""
+    import shutil
+    import tempfile
+
+    from coltt_spark.session import _socket_dir
+
+    base = tempfile.mkdtemp(dir="/tmp")
+    try:
+        # "<tmp>/coltt-uds-<pid>-<8 chars>" is 62 characters long
+        tmp = os.path.join(base, "t" * (41 - len(str(os.getpid())) - len(base)))
+        os.mkdir(tmp)
+        monkeypatch.setattr(tempfile, "tempdir", tmp)
+        path = _socket_dir.__wrapped__()
+        shutil.rmtree(path)
+        assert len(path) <= 61
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 _SWEEP_SESSION_DIRS = textwrap.dedent(
     """
     import json, os

@@ -628,9 +628,9 @@ def test_hour_state_scope_restores_conf_and_values(spark):
     """r14-opt (VERDICT r13 #8): the hour-keyed replays scope the
     state-store partition count to the keyspace (stream_join's
     production rationale). The scope must restore the session's
-    shuffle partitions afterwards — even on failure — and the scoped
-    replay must produce identical values (mergeable state by
-    construction)."""
+    shuffle partitions afterwards — even on failure or when two
+    threads' scopes overlap — and the scoped replay must produce
+    identical values (mergeable state by construction)."""
     import pytest
 
     from coltt_spark import registry_streaming as rs
@@ -654,4 +654,32 @@ def test_hour_state_scope_restores_conf_and_values(spark):
     with pytest.raises(RuntimeError):
         with rs._hour_state_scope(spark):
             raise RuntimeError("boom")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    # overlapping scopes on two threads: B must not save A's scoped
+    # count and restore it after A has restored the session's
+    import threading
+    import time
+
+    a_in, release_a, a_done = (threading.Event() for _ in range(3))
+
+    def scope_a():
+        with rs._hour_state_scope(spark):
+            a_in.set()
+            release_a.wait(10)
+        a_done.set()
+
+    def scope_b():
+        with rs._hour_state_scope(spark):
+            a_done.wait(10)
+
+    ta = threading.Thread(target=scope_a)
+    ta.start()
+    assert a_in.wait(10)
+    tb = threading.Thread(target=scope_b)
+    tb.start()
+    time.sleep(0.2)
+    release_a.set()
+    ta.join(30)
+    tb.join(30)
+    assert not ta.is_alive() and not tb.is_alive()
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
