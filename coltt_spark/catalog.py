@@ -106,25 +106,23 @@ class Manifest:
     layout: str = "rows"
     block_dtype: str = "float32"
     versioning: bool = False
+    #: Auto-compaction trigger, one rule for every packed layout: a
+    #: flush that finds this many delta flushes already in the current
+    #: version folds the whole collection instead of appending (0
+    #: disables). Each delta flush writes exactly one tombstone part
+    #: and later deltas hardlink it forward, so the count is read off
+    #: the version itself (:meth:`Collection._delta_flushes`). Every
+    #: delta adds index files a scan must open and tombstones it must
+    #: mask; the measured read-amplification curve (SURVEY §8) shows
+    #: IVF probe latency drifting ~25% by ~20 delta flushes and
+    #: compaction restoring it. 10 keeps the drift under ~10% while
+    #: amortizing the rebuild over ~10 deltas — the reference's
+    #: ticker-driven diskv merge (diskv/merge.go:40-181), keyed on the
+    #: delta count instead of wall clock.
+    max_delta_flushes: int = 10
     ivf_centroids: int = 16
     ivf_nprobe: int = 4
     ivf_kmeans_iters: int = 1
-    #: Auto-compaction trigger: when any inverted list has GROWN by
-    #: this many part files since the last full build, the next
-    #: flush() folds the whole collection (0 disables). Growth-based,
-    #: not absolute: a large fresh build legitimately writes many
-    #: parts per list, and an absolute threshold would then force a
-    #: full O(collection) fold on EVERY flush. The measured
-    #: read-amplification curve (SURVEY §8) shows IVF probe latency
-    #: drifting ~25% by ~20 delta flushes and compaction restoring it
-    #: — the same ticker-driven merge discipline as the reference's
-    #: diskv store (diskv/merge.go:40-181,
-    #: pkg/index/optimization.go:27-74), keyed on observed fan-out
-    #: instead of wall clock.
-    ivf_max_list_files: int = 10
-    #: Worst per-list part-file count recorded at the last full IVF
-    #: build — the baseline the growth trigger measures against.
-    ivf_base_list_files: int = 0
     #: layout="ivfpq" knobs: residual product-quantization geometry
     #: (M subspaces × ks codes per subspace — each stored row costs M
     #: bytes instead of dim·4, the billion-scale serving layout) and
@@ -222,63 +220,35 @@ class Collection:
         self, vector_col: str, version: int | None = None, *, strict: bool = True
     ) -> bool:
         """True when the IVF index for ``vector_col`` exists in the
-        current packed-per-centroid layout (a ``blocks/`` subtree
-        beside ``centroids.npy``). An index directory WITHOUT
-        ``blocks/`` is a stale or partially-written format — probing
-        it would list zero files and silently serve EMPTY results, so
+        current layout: the packed lists (``blocks/``) beside
+        ``centroids.npy``, and for ``ivfpq`` also the residual
+        codebooks (``book.npy`` — codes are unreadable without them)
+        and the exact-rerank tree (``vecs/``). An index directory
+        missing any of them is a stale or partially-written format —
+        probing it could silently serve EMPTY or unrefined results, so
         serving gates (``strict=True``) fail loudly instead; flush's
         incremental gate passes ``strict=False`` and treats it as
-        not-ready, which routes into the full rebuild that heals it.
-        An ``ivfpq`` index additionally needs its residual codebooks
-        (``book.npy``) beside the centroids — codes are unreadable
-        without them."""
+        not-ready, which routes into the full rebuild that heals it."""
         d = self._ivf_dir(vector_col, version)
         if not os.path.isdir(d):
             return False
-        if os.path.isdir(os.path.join(d, "blocks")):
-            if self.manifest.layout == "ivfpq" and not os.path.isfile(
-                os.path.join(d, "book.npy")
-            ):
-                if strict:
-                    raise RuntimeError(
-                        f"ivfpq index at {d} has no book.npy — codes "
-                        "cannot be decoded; run flush(compact=True) to rebuild"
-                    )
-                return False
-            if (
-                self.manifest.layout == "ivfpq"
-                and not strict
-                and not os.path.isdir(os.path.join(d, "vecs"))
-            ):
-                # pre-rerank-tree index: SERVING still works (the
-                # refined search falls back to the snapshot join), but
-                # the incremental-flush gate treats it as not-ready so
-                # the next flush full-rebuilds and heals the layout
-                return False
-            return True
-        if strict:
+        need = ["blocks/"] + (["book.npy", "vecs/"] if self.manifest.layout == "ivfpq" else [])
+        missing = [n for n in need if not os.path.exists(os.path.join(d, n))]
+        if missing and strict:
             raise RuntimeError(
-                f"IVF index at {d} has no blocks/ subdirectory — stale or "
-                "partially written layout; run flush(compact=True) to rebuild"
+                f"{self.manifest.layout} index at {d} has no {', '.join(missing)} — "
+                "stale or partially written layout; run flush(compact=True) to rebuild"
             )
-        return False
+        return not missing
 
-    def _ivf_worst_list_fanout(self, vector_col: str, version: int) -> int:
-        """Read amplification of the IVF delta layout: the largest
-        per-inverted-list Parquet part count. Each delta flush appends
-        part files inside every touched ``centroid=`` partition; a
-        probe opens every file of the probed lists, so this number IS
-        the per-list file fan-out compaction exists to bound."""
-        blocks = os.path.join(self._ivf_dir(vector_col, version), "blocks")
-        worst = 0
-        if os.path.isdir(blocks):
-            for entry in os.listdir(blocks):
-                d = os.path.join(blocks, entry)
-                if entry.startswith("centroid=") and os.path.isdir(d):
-                    n = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-                    worst = max(worst, n)
-        return worst
-
+    def _delta_flushes(self, version: int) -> int:
+        """Delta flushes folded into ``version`` since its last full
+        build: each writes exactly one tombstone part, which every
+        later delta hardlinks forward and a full build drops."""
+        d = self._tombstones_dir(version)
+        if not os.path.isdir(d):
+            return 0
+        return sum(f.startswith("part-") and f.endswith(".parquet") for f in os.listdir(d))
 
     def _vector_cols(self) -> list[str]:
         """Named vector fields from the index design (experimental
@@ -314,9 +284,6 @@ class Collection:
             ).parquet(tomb_dir)
             df = df.join(dead, on=_COMMIT, how="left_anti")
         return df
-
-    def _write_manifest(self, manifest: Manifest) -> None:
-        store.commit(self.root, manifest.to_json())
 
     # -- DML ----------------------------------------------------------
 
@@ -628,7 +595,11 @@ class Collection:
         the probed subset (every returned row still genuinely
         satisfies ``dist ≤ radius``). Use it when the ball is known to
         be small relative to the list granularity at very large
-        ``n_centroids``."""
+        ``n_centroids``.
+
+        Rows come back in no defined order, on every path (the packed
+        scan emits them file by file in task order, the row path in
+        scan order): sort them, or compare them as a set, downstream."""
         vc, qvs, src = self._route(vector_field, {0: qv}, nprobe=nprobe, exact=True)
         if src is None:
             scored = self._scored_rows(vc, qvs[0], filter_ast).filter(
@@ -1034,37 +1005,31 @@ class Collection:
         reads nprobe/n_centroids of the vector bytes, never a full
         snapshot scan). Those rows hold the same dequantized values as
         the snapshot, stored as double, so the exact fold — and the
-        SQL oracle's replay — is unchanged to the bit. Indexes flushed
-        before the rerank tree existed fall back to the column-pruned
-        snapshot."""
+        SQL oracle's replay — is unchanged to the bit."""
         if not src.refine:
             if self.manifest.distance != "cosine":
                 return scored
             return scored.withColumn("dist", F.col("dist") * F.col("dist") / F.lit(2.0))
         cand = cut(scored).drop("dist")
-        vecs_root = os.path.join(src.ivf_dir, "vecs")
-        if os.path.isdir(vecs_root):
-            vschema = T.StructType(
-                [
-                    T.StructField(_COMMIT, T.LongType(), False),
-                    T.StructField(vc, T.ArrayType(T.DoubleType()), False),
-                ]
-            )
-            vdirs = [
-                p
-                for p in (
-                    os.path.join(vecs_root, f"centroid={c}")
-                    for c in sorted({c for cs in src.probes.values() for c in cs})
-                )
-                if os.path.isdir(p)
+        vschema = T.StructType(
+            [
+                T.StructField(_COMMIT, T.LongType(), False),
+                T.StructField(vc, T.ArrayType(T.DoubleType()), False),
             ]
-            vecs = (
-                self.spark.read.schema(vschema).parquet(*vdirs)
-                if vdirs
-                else self.spark.createDataFrame([], vschema)
+        )
+        vdirs = [
+            p
+            for p in (
+                os.path.join(src.ivf_dir, "vecs", f"centroid={c}")
+                for c in sorted({c for cs in src.probes.values() for c in cs})
             )
-        else:
-            vecs = self._dequantized().select(_COMMIT, vc)
+            if os.path.isdir(p)
+        ]
+        vecs = (
+            self.spark.read.schema(vschema).parquet(*vdirs)
+            if vdirs
+            else self.spark.createDataFrame([], vschema)
+        )
         rescored = vecs.join(F.broadcast(cand), on=_COMMIT)
         if isinstance(q, dict):
             rescored = rescored.join(F.broadcast(self._query_table(q)), on="query_id")
@@ -1131,34 +1096,37 @@ class Collection:
         and atomically repoint the manifest at it: the durability
         boundary (coltt Flush → MinIO), one operation like the
         reference's store rebuild (``edge/none_vectorstore.go:129-180``).
-        Every flush makes the same writes, in this order:
+        A flush writes version ``v+1`` through :class:`store.Version`,
+        the commit every store shares, in this order:
 
-        1. the snapshot of version ``v+1``: the whole view (a full
-           flush), or, incrementally, only the rows changed since the
-           last flush beside hardlinks to version ``v``'s parts, plus a
-           tombstone table of the commit ids they supersede
-           (:meth:`_write_delta_snapshot`; the Iceberg/Delta manifest
-           shape, realized with hardlinks on a local FS);
+        1. the snapshot: the whole view (a full flush), or,
+           incrementally, only the rows changed since the last flush
+           plus one tombstone part of the commit ids they kill
+           (:meth:`_write_delta_snapshot`);
         2. for a packed layout, the index of the same rows through the
            one index writer (:meth:`_write_index`): a full build trains
            its quantizer, a delta routes the changed rows into version
-           ``v``'s fixed quantizer and hardlinks ``v``'s index files;
-        3. the manifest, last. Nothing before it commits: a flush that
-           fails earlier leaves the handle and the disk at version
-           ``v``, and the next flush first clears whatever the failed
-           one left under ``v+1``.
+           ``v``'s fixed quantizer;
+        3. the commit: a delta first hardlinks every part of version
+           ``v`` (data, tombstones, index trees) beside its own new
+           files — the Iceberg/Delta manifest shape, realized with
+           hardlinks on a local FS — then the manifest is repointed,
+           last, and version ``v`` is dropped unless the collection
+           keeps ``versioning``. Nothing before the repoint commits: a
+           flush that fails earlier leaves the handle and the disk at
+           version ``v``, and the next flush first clears whatever the
+           failed one left under ``v+1``.
 
         Packed collections flush incrementally once a base index
         exists, so flush cost scales with the change, not the
         collection, the way the reference's per-write in-place store
         update amortizes (``edge/none_vectorstore.go:66-103``).
         ``compact=True`` (or :meth:`compact`) forces the full rewrite:
-        deltas fold, tombstones drop, IVF/PQ quantizers retrain. An
-        ivf/ivfpq flush also auto-compacts once any inverted list's
-        part-file fan-out has grown by ``ivf_max_list_files`` since the
-        last full build (manifest knob, default 10, 0 disables), so
-        probe-time read amplification stays bounded without anyone
-        remembering to call :meth:`compact`."""
+        deltas fold, tombstones drop, IVF/PQ quantizers retrain. A
+        flush also compacts once the version already holds
+        ``max_delta_flushes`` delta flushes (manifest knob, default
+        10, 0 disables), so read amplification stays bounded on every
+        layout without anyone remembering to call :meth:`compact`."""
         m = self.manifest
         old_v = m.version
         vcols = self._vector_cols()
@@ -1169,53 +1137,25 @@ class Collection:
         else:
             idx_ready = False
         incremental = (
-            idx_ready and not compact and os.path.isdir(self._data_dir(old_v))
+            idx_ready
+            and not compact
+            and os.path.isdir(self._data_dir(old_v))
+            and not 0 < m.max_delta_flushes <= self._delta_flushes(old_v)
         )
-        if (
-            incremental
-            and m.layout in ("ivf", "ivfpq")
-            and m.ivf_max_list_files > 0
-            and any(
-                self._ivf_worst_list_fanout(vc, old_v) - m.ivf_base_list_files
-                >= m.ivf_max_list_files
-                for vc in vcols
-            )
-        ):
-            # Auto-compaction: the delta layout's per-list file fan-out
-            # grew past the manifest threshold since the last full
-            # build, so this flush folds the whole collection instead
-            # of appending — bounding probe-time read amplification the
-            # way the reference's ticker-driven diskv merge does
-            # (diskv/merge.go:40-181), except keyed on the observed
-            # fan-out rather than wall clock. Threshold rationale: the
-            # measured curve (SURVEY §8) drifts ~25% by ~20 files/list;
-            # 10 keeps the drift under ~10% while amortizing the
-            # rebuild over ~10 delta flushes.
-            incremental = False
-        # a failed flush's leftovers would serve its rows under commit
-        # ids since handed out again
-        new_v = store.begin(self.root, old_v)
+        v = store.Version(self.root, base=old_v if incremental else None)
         if incremental:
-            rows, n_rows = self._write_delta_snapshot(old_v, new_v)
+            rows, n_rows = self._write_delta_snapshot(v)
         else:
-            self._view.write.mode("overwrite").parquet(self._data_dir(new_v))
-            rows, n_rows = self.read_version(new_v), 0
-        nxt = dataclasses.replace(m, version=new_v)
+            self._view.write.mode("overwrite").parquet(v.path(""))
+            rows, n_rows = self.read_version(v.number), 0
         if m.layout != "rows":
-            self._write_index(rows, new_v, old_v if incremental else None, n_rows)
-        if m.layout in ("ivf", "ivfpq") and not incremental:
-            # the fresh layout's fan-out: the baseline the
-            # growth-triggered auto-compaction measures against
-            nxt.ivf_base_list_files = max(
-                (self._ivf_worst_list_fanout(vc, new_v) for vc in vcols), default=0
-            )
-        self._write_manifest(nxt)
+            self._write_index(rows, v.number, v.base, n_rows)
+        nxt = dataclasses.replace(m, version=v.number)
+        v.commit(nxt.to_json())
         self.manifest = nxt
         self._view = self._read_version()
         self._dirty = False
         self._reset_pending()
-        if not m.versioning:
-            store.drop_version(self.root, old_v)
 
     def compact(self) -> None:
         """Full rewrite: fold all delta files and tombstones into one
@@ -1223,55 +1163,57 @@ class Collection:
         a delta-maintained collection runs off the serving path)."""
         self.flush(compact=True)
 
-    def _write_delta_snapshot(self, old_v: int, new_v: int) -> tuple[DataFrame, int]:
-        """Write version ``new_v``'s snapshot as a MANIFEST over
-        immutable files: hardlinks to every base data part
-        (metadata-only ops — on an object store these would be file
-        references in a table manifest) + freshly written delta parts
-        + a cumulative tombstone table (commit ids superseded by
-        upserts or removed by deletes). Readers subtract tombstones;
-        the block scan masks them per file. Returns the delta rows
-        and their count, for the index writer.
+    def _write_delta_snapshot(self, v: store.Version) -> tuple[DataFrame, int]:
+        """Write a delta flush's own snapshot files into version ``v``:
+        the rows changed since the last flush, and ONE tombstone part
+        holding exactly the commit ids this flush kills — the live rows
+        of the base version ``v.base`` (its data minus its tombstones)
+        whose pk was upserted or that a recorded delete predicate
+        matches. The commit hardlinks the base's data and tombstone
+        parts beside them (metadata-only ops — on an object store these
+        would be file references in a table manifest), so nothing
+        re-reads or rewrites an earlier flush's tombstones. Readers
+        subtract every part; the block scan masks them per file.
+        Returns the delta rows and their count, for the index writer.
 
         Cost shape: delta rows come straight from the DML bookkeeping
         (:meth:`_track_upsert` — already checkpointed batches, no
-        collection diff), and tombstones from ONE column-pruned pass
-        over the base files (PK semi-join against the upserted-PK set
-        + the recorded delete predicates; Catalyst prunes the scan to
-        the referenced columns). Nothing re-reads or rewrites the
-        unchanged bulk — the delta analogue of the reference's
-        per-write in-place store update."""
-        schema = self._storage_schema()
+        collection diff), and the killed ids from a column-pruned pass
+        over the live base (PK semi-join against the upserted-PK set,
+        plus the recorded delete predicates) — the delta analogue of
+        the reference's per-write in-place store update."""
         pk = self.manifest.index_design.primary_key
         delta, n_delta = _checkpoint_counted(
             self._pending
             if self._pending is not None
-            else self.spark.createDataFrame([], schema)
+            else self.spark.createDataFrame([], self._storage_schema())
         )
-        base = self.spark.read.schema(schema).parquet(self._data_dir(old_v))
-        tomb_schema = T.StructType([T.StructField(_COMMIT, T.LongType(), False)])
-        dead_parts = []
+        live = self.read_version(v.base)
+        # a live row matching a predicate but whose pk was since
+        # re-upserted dies either way, so evaluating against base
+        # values (not view state) is safe
+        deleted = F.coalesce(
+            reduce(
+                lambda a, b: a | b,
+                [compile_filter(live, ast) for ast in self._delete_asts],
+                F.lit(False),
+            ),
+            F.lit(False),
+        )
+        dead = live.filter(deleted)
         if self._upserted_pks is not None:
-            dead_parts.append(
-                base.join(
+            # disjoint from the deleted rows: no id is written twice
+            dead = dead.unionByName(
+                live.filter(~deleted).join(
                     F.broadcast(self._upserted_pks), on=pk, how="left_semi"
-                ).select(_COMMIT)
+                )
             )
-        for ast in self._delete_asts:
-            # a base row matching the predicate but whose pk was since
-            # re-upserted is dead via the pk semi-join anyway, so
-            # evaluating against base values (not view state) is safe
-            dead_parts.append(base.filter(compile_filter(base, ast)).select(_COMMIT))
-        old_tomb = self._tombstones_dir(old_v)
-        if os.path.isdir(old_tomb):
-            dead_parts.append(self.spark.read.schema(tomb_schema).parquet(old_tomb))
-        if dead_parts:
-            dead = reduce(DataFrame.unionByName, dead_parts).distinct()
-        else:
-            dead = self.spark.createDataFrame([], tomb_schema)
-        delta.write.mode("overwrite").parquet(self._data_dir(new_v))
-        store.link_tree(self._data_dir(old_v), self._data_dir(new_v))
-        dead.write.mode("overwrite").parquet(self._tombstones_dir(new_v))
+        delta.write.mode("overwrite").parquet(v.path(""))
+        # exactly one part per delta flush: their count is the
+        # version's delta-flush count (:meth:`_delta_flushes`)
+        dead.select(_COMMIT).repartition(1).write.mode("overwrite").parquet(
+            v.path("tombstones")
+        )
         return delta, n_delta
 
     def _write_index(
@@ -1282,8 +1224,8 @@ class Collection:
         for every layout. Without ``base``, ``rows`` is the whole
         snapshot and the IVF/PQ quantizer is trained on it; with it,
         ``rows`` are the ``n_rows`` changed rows, the quantizer is
-        ``base``'s (fixed: it only moves on a full build), and
-        ``base``'s index files are hardlinked in beside the new ones;
+        ``base``'s (fixed: it only moves on a full build), and the
+        commit hardlinks ``base``'s index files in beside the new ones;
         tombstones mask the superseded ones.
 
         Rows are dequantized once and keep ``(commit id, payload…)``
@@ -1345,8 +1287,6 @@ class Collection:
             if m.layout == "blocks":
                 out = self._blocks_dir(vc, version)
                 write_block_index(pack_blocks(src, **pack), out, n_files=n_files)
-                if base is not None:
-                    store.link_tree(self._blocks_dir(vc, base), out)
                 continue
             quant = self._quantizer(rows, vc, base)
             routed = ivf_assign(src, quant["centroids"], id_col=_COMMIT, vec_col=vc)
@@ -1371,10 +1311,6 @@ class Collection:
                 tree.write.mode("overwrite").partitionBy("centroid").parquet(
                     os.path.join(out, name)
                 )
-                if base is not None:
-                    store.link_tree(
-                        os.path.join(self._ivf_dir(vc, base), name), os.path.join(out, name)
-                    )
             for name, arr in quant.items():
                 np.save(os.path.join(out, f"{name}.npy"), arr)
 
@@ -1490,7 +1426,7 @@ class Catalog:
         ivf_centroids: int = 16,
         ivf_nprobe: int = 4,
         ivf_kmeans_iters: int = 1,
-        ivf_max_list_files: int = 10,
+        max_delta_flushes: int = 10,
         pq_subspaces: int = 8,
         pq_codes: int = 16,
         ivfpq_refine: int = 50,
@@ -1528,21 +1464,20 @@ class Catalog:
         manifest = Manifest(
             name, dim, distance, quantization, design, version=0,
             layout=layout, block_dtype=block_dtype, versioning=versioning,
+            max_delta_flushes=max_delta_flushes,
             ivf_centroids=ivf_centroids, ivf_nprobe=ivf_nprobe,
             ivf_kmeans_iters=ivf_kmeans_iters,
-            ivf_max_list_files=ivf_max_list_files,
             pq_subspaces=pq_subspaces, pq_codes=pq_codes,
             ivfpq_refine=ivfpq_refine, pq_opq=opq,
         )
-        os.makedirs(root)
         coll = Collection.__new__(Collection)
         coll.spark, coll.root, coll.manifest, coll._cached = self.spark, root, manifest, False
         coll._dirty = False
         coll._reset_pending()
         # seed v0 with an empty snapshot so reads always succeed
-        empty = self.spark.createDataFrame([], coll._storage_schema())
-        empty.write.mode("overwrite").parquet(coll._data_dir(0))
-        coll._write_manifest(manifest)
+        v = store.Version(root)
+        self.spark.createDataFrame([], coll._storage_schema()).write.parquet(v.path(""))
+        v.commit(manifest.to_json())
         coll._view = coll._read_version()
         self._open[name] = coll
         return coll

@@ -285,8 +285,10 @@ def _scan_file(
     id_alias: str = "id",
     **cut,
 ) -> pd.DataFrame:
-    """One file (or block) scored for the queries ``Q`` (ids ``qids``)
-    → each query's local winners as (query_id, id, dist[, payload…]).
+    """One file (or block) scored for the queries ``Q`` (ids ``qids``;
+    float64 query rows, cast to the block dtype for the kernel, or ADC
+    lookup tables) → each query's local winners as (query_id, id,
+    dist[, payload…]).
     ``live`` (row-aligned bool) restricts the winners to its rows: the
     filtered and tombstoned scan. The distance kernel still covers
     the whole file (one contiguous BLAS pass over memory it reads
@@ -295,8 +297,18 @@ def _scan_file(
     ``pa.Table`` row-aligned with ``ids``) contributes only the
     winners' rows, through one ``take``. The id column is emitted
     under ``id_alias`` so a payload column named ``id`` (e.g. a user
-    PK) cannot collide with it."""
-    D = _block_distances(X, norms, Q, distance)
+    PK) cannot collide with it.
+
+    Euclidean winners are re-scored as the direct float64
+    ``‖x − q‖`` — a sequential fold over the dimensions, the row
+    path's arithmetic — after selection: the kernel's
+    ``‖x‖² + q·q − 2x·q`` in the block dtype cancels most of its
+    digits near 0 (~1e-3 on float32 blocks for a query equal to a
+    stored vector), and single and batch reads (gemv vs gemm) would
+    disagree by that much. Selection keeps the kernel's values."""
+    D = _block_distances(
+        X, norms, Q if distance == "adc" else Q.astype(X.dtype, copy=False), distance
+    )
     if live is not None:
         D = np.where(live[:, None], D, np.inf)
     alive = np.flatnonzero(live) if live is not None else np.arange(len(ids))
@@ -306,9 +318,14 @@ def _scan_file(
     sels = [_select(D[:, j], ids, alive, groups=groups, **cut) for j in range(len(qids))]
     sel = np.concatenate(sels)
     col = np.repeat(np.arange(len(qids)), [len(s) for s in sels])
-    out = pd.DataFrame(
-        {"query_id": qids[col], id_alias: ids[sel], "dist": D[sel, col].astype(np.float64)}
-    )
+    dist = D[sel, col].astype(np.float64)
+    if distance == "euclidean":
+        acc = np.zeros(len(sel))
+        for j in range(X.shape[1]):
+            d = X[sel, j].astype(np.float64) - Q[col, j]
+            acc = acc + d * d
+        dist = np.sqrt(acc)
+    out = pd.DataFrame({"query_id": qids[col], id_alias: ids[sel], "dist": dist})
     if payload is not None:
         pw = payload.take(sel).to_pandas()
         for c in pw.columns:
@@ -339,7 +356,7 @@ def block_topk(
     ``ORDER BY dist LIMIT k`` — the same per-shard-PQ-then-merge
     physical shape as the reference's parallel scan."""
     np_dtype = _DTYPES[dtype]
-    Q = np.asarray([[float(x) for x in query]], dtype=np_dtype)
+    Q = np.asarray([[float(x) for x in query]], dtype=np.float64)
     qids = np.zeros(1, dtype=np.int64)
 
     out_schema = T.StructType(
@@ -733,7 +750,7 @@ def block_index_scan(
         qids = sorted({q for q, _ in luts})
     else:
         qids = sorted(int(q) for q in queries)
-        Q = np.asarray([[float(x) for x in queries[q]] for q in qids], dtype=np_dtype)
+        Q = np.asarray([[float(x) for x in queries[q]] for q in qids], dtype=np.float64)
     qid_arr = np.asarray(qids, dtype=np.int64)
     qpos = {q: j for j, q in enumerate(qids)}
     fq = None

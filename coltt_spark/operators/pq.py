@@ -353,18 +353,10 @@ def pq_topk(
     m, ks, dsub = book.shape
     encoded = pq_encode(corpus, book, id_col=id_col, vec_col=vec_col)
 
-    qrows = []
-    for qid, v in queries.items():
-        q = [float(x) for x in v]
-        lut = []
-        for mi in range(m):
-            for c in range(ks):
-                s = 0.0
-                for j in range(dsub):
-                    d = q[mi * dsub + j] - float(book[mi, c, j])
-                    s = s + d * d
-                lut.append(s)
-        qrows.append((int(qid), lut))
+    qids = list(queries)
+    qs = np.array([[float(x) for x in queries[q]] for q in qids], dtype=np.float64)
+    luts = ivfpq_residual_luts(qs.reshape(-1, m * dsub), book)
+    qrows = [(int(qid), luts[i].tolist()) for i, qid in enumerate(qids)]
     qdf = corpus.sparkSession.createDataFrame(
         qrows,
         T.StructType(
@@ -697,7 +689,8 @@ def ivfpq_topk(
     codes, Cn, book = index
     m, ks, dsub = book.shape
 
-    lut_rows = []
+    pairs = []
+    qrs = []
     qv_rows = []
     for qid, v in queries.items():
         q = [float(x) for x in v]
@@ -728,15 +721,10 @@ def ivfpq_topk(
                     float(x)
                     for x in np.asarray(qr, dtype=np.float64) @ opq_rotation
                 ]
-            lut = []
-            for mi in range(m):
-                for code in range(ks):
-                    s = 0.0
-                    for j in range(dsub):
-                        d = qr[mi * dsub + j] - float(book[mi, code, j])
-                        s = s + d * d
-                    lut.append(s)
-            lut_rows.append((int(qid), int(c), lut))
+            pairs.append((int(qid), int(c)))
+            qrs.append(qr)
+    luts = ivfpq_residual_luts(np.array(qrs, dtype=np.float64).reshape(-1, m * dsub), book)
+    lut_rows = [(qid, c, luts[i].tolist()) for i, (qid, c) in enumerate(pairs)]
 
     spark = corpus.sparkSession
     qdf = spark.createDataFrame(

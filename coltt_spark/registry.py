@@ -2191,6 +2191,19 @@ _TOUCHED: dict[str, int] = {
     "collection_hybrid_ivf": 15,
     "knn_block": 15,
     "stream_ingest_ivfpq": 15,
+    # Collection flushes through store.Version (every key reading a
+    # collection; the rest are listed above)
+    "collection_search": 15,
+    "collection_search_grouped": 15,
+    "knn_bf16": 15,
+    "knn_bq": 15,
+    "knn_f16": 15,
+    "knn_f8": 15,
+    "knn_sq8": 15,
+    "stream_ingest": 15,
+    # one LUT builder for PQ and IVF-PQ
+    "ann_pq": 15,
+    "ann_ivfpq": 15,
 }
 
 

@@ -131,12 +131,14 @@ class Version:
     def commit(self, manifest: dict[str, Any]) -> dict[str, Any]:
         """Link the base's parts forward, repoint the manifest at this
         version (with ``manifest``'s properties), drop the prior
-        version; returns the committed manifest."""
+        version unless the store keeps ``versioning`` (a manifest
+        property: prior versions stay readable until dropped); returns
+        the committed manifest."""
         for path, v, part in _version_dirs(self.root):
             if v == self.base:
                 link_tree(path, self.path(part))
         manifest = {**manifest, "version": self.number}
         commit(self.root, manifest)
-        if self.prior is not None:
+        if self.prior is not None and not manifest.get("versioning", False):
             drop_version(self.root, self.prior)
         return manifest

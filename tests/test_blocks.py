@@ -655,3 +655,51 @@ def test_ivf_recall_monotone_in_nprobe(spark, tmp_path):
     assert recalls[0] < 1.0, recalls            # and the dial is real:
     # nprobe=1 on an overlapping corpus must actually miss neighbors,
     # otherwise this test would pass vacuously on a degenerate corpus
+
+
+def test_float32_euclidean_winners_are_exact_near_zero(spark):
+    """On float32 blocks the kernel's ``‖x‖² + q·q − 2x·q`` loses most
+    of its digits near 0, so winners are re-scored as the direct
+    float64 ``‖x − q‖``: a query equal to a stored vector reads ~0
+    (not ~1e-3), every distance equals the row path's fold to the
+    bit, and a batch read equals single reads row for row."""
+    import numpy as np
+
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    dim = 64
+    V = np.random.default_rng(3).normal(0, 10, (300, dim)).astype(np.float32)
+    rows = [{"id": f"r{i}", "vector": [float(x) for x in v]} for i, v in enumerate(V)]
+    wh = tempfile.mkdtemp(prefix="coltt_wh_f32e_")
+    try:
+        cat = Catalog(spark, wh)
+
+        def build(layout):
+            coll = cat.create_collection(
+                f"f32e_{layout}", dim=dim, distance="euclidean",
+                fields=[IndexField("id", "string", primary_key=True)],
+                layout=layout, block_dtype="float32",
+            )
+            coll.upsert(rows)
+            coll.flush()
+            return coll
+
+        blocks, rowlay = build("blocks"), build("rows")
+        qs = {i: rows[i]["vector"] for i in range(8)}
+
+        def key(r):
+            return (r["id"], r["dist"], r["score"])
+
+        batch = blocks.search_batch(qs, limit=5).collect()
+        for qid, vec in qs.items():
+            single = blocks.search(vec, limit=5).collect()
+            assert single[0]["id"] == f"r{qid}" and single[0]["dist"] < 1e-6
+            assert sorted(key(r) for r in single) == sorted(
+                key(r) for r in batch if r["query_id"] == qid
+            )
+            assert [key(r) for r in single] == [
+                key(r) for r in rowlay.search(vec, limit=5).collect()
+            ]
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)

@@ -1096,6 +1096,26 @@ def test_stale_ivf_layout_fails_loudly(catalog):
     coll.flush()
     assert len(coll.search(q, limit=3).collect()) == 3
 
+    # an ivfpq index without its exact-rerank tree (vecs/) must not
+    # serve unrefined or empty results either, and heals the same way
+    pq = catalog.create_collection(
+        "stale_pq", dim=4, distance="cosine", fields=FIELDS, layout="ivfpq",
+        ivf_centroids=2, ivf_nprobe=2, pq_subspaces=2, pq_codes=4,
+    )
+    pq.upsert(_rows(20, dim=4))
+    pq.flush()
+    assert len(pq.search(q, limit=3).collect()) == 3
+    shutil.rmtree(os.path.join(pq._ivf_dir("vector"), "vecs"))
+    with pytest.raises(RuntimeError, match="vecs/"):
+        pq.search(q, limit=3)
+    with pytest.raises(RuntimeError, match="vecs/"):
+        pq.search_batch({0: q}, limit=3, refine=0)
+    pq.upsert(_rows(4, dim=4, seed=9))
+    pq.flush()
+    assert os.path.isdir(os.path.join(pq._ivf_dir("vector"), "vecs"))
+    assert pq._delta_flushes(pq.manifest.version) == 0, "healed by a full rebuild"
+    assert len(pq.search(q, limit=3).collect()) == 3
+
 
 def _index_file_count(coll) -> int:
     """Count the packed index part-files of the CURRENT version (the
@@ -1135,15 +1155,12 @@ def test_delta_flush_accumulation_and_compaction(catalog, layout):
             IndexField("label", "integer"),
         ],
         layout=layout, block_dtype="float64",
-        # ivf_max_list_files=0 disables growth-triggered auto-compaction:
-        # this test deliberately observes RAW delta accumulation over 15
-        # flushes (the trigger itself is pinned by
+        # max_delta_flushes=0 disables auto-compaction: this test
+        # deliberately observes RAW delta accumulation over 15 flushes
+        # (the trigger itself is pinned by
         # test_ivf_auto_compaction_bounds_read_amplification)
-        **(
-            {"ivf_centroids": 4, "ivf_nprobe": 4, "ivf_max_list_files": 0}
-            if layout == "ivf"
-            else {}
-        ),
+        max_delta_flushes=0,
+        **({"ivf_centroids": 4, "ivf_nprobe": 4} if layout == "ivf" else {}),
     )
     state: dict[str, tuple[list[float], int]] = {}
 
@@ -1282,53 +1299,107 @@ def test_grouped_and_radius_nprobe_approximate_variant(catalog):
     } or len(got) < 8  # the approximation must differ from exact here
 
 
-def test_ivf_auto_compaction_bounds_read_amplification(catalog):
-    """Growth-triggered auto-compaction (diskv merge discipline,
-    diskv/merge.go:40-181): once a delta-maintained IVF layout's
-    per-list part-file fan-out has grown by ivf_max_list_files since
-    the last full build, the NEXT flush folds the collection —
-    restoring fresh-build file counts — and search results are
-    identical across the trigger (nprobe=centroids ⇒ exact, so the
-    centroid retrain cannot change answers)."""
+@pytest.mark.parametrize("layout", ["blocks", "ivf", "ivfpq"])
+def test_ivf_auto_compaction_bounds_read_amplification(catalog, layout):
+    """One auto-compaction rule for every packed layout (diskv merge
+    discipline, diskv/merge.go:40-181): once the version holds
+    max_delta_flushes delta flushes — counted from its tombstone
+    parts, one per delta — the NEXT flush folds the collection, with
+    no tombstones left and the index back to a fresh build's file
+    count, and search results are identical across the fold (every
+    list probed and every candidate reranked ⇒ exact, so the
+    quantizer retrain cannot change answers)."""
     import os
 
     coll = catalog.create_collection(
-        "autocompact_ivf", dim=6, distance="cosine", fields=FIELDS,
-        layout="ivf", ivf_centroids=2, ivf_nprobe=2,
-        block_dtype="float64", ivf_max_list_files=2, versioning=True,
+        f"autocompact_{layout}", dim=8, distance="cosine", fields=FIELDS,
+        layout=layout, block_dtype="float64", max_delta_flushes=2,
+        **_PROBE_ALL[layout],
     )
-    coll.upsert(_rows(60, dim=6, seed=11))
-    coll.flush()  # v1: full build — records the fan-out baseline
-    base = coll.manifest.ivf_base_list_files
-    assert base >= 1
-    assert coll._ivf_worst_list_fanout("vector", 1) == base
+    q = _rows(1, dim=8, seed=5)[0]["vector"]
 
-    # two delta flushes: fan-out grows, tombstone manifests appear
+    def served():
+        return sorted(
+            (r["id"], round(r["dist"], 8)) for r in coll.search(q, limit=10).collect()
+        )
+
+    coll.upsert(_rows(60, dim=8, seed=11))
+    coll.flush()  # full build
+    fresh = _index_file_count(coll)
+    assert coll._delta_flushes(coll.manifest.version) == 0
+
+    # two delta flushes: each adds index files and one tombstone part
     for i in range(2):
         coll.upsert(
-            [dict(r, id=f"d{i}-{j}") for j, r in enumerate(_rows(8, dim=6, seed=20 + i))]
+            [dict(r, id=f"d{i}-{j}") for j, r in enumerate(_rows(8, dim=8, seed=20 + i))]
+            + [dict(r, id=f"id-{i}") for r in _rows(1, dim=8, seed=30 + i)]
         )
         coll.flush()
-        assert os.path.isdir(coll._tombstones_dir(coll.manifest.version)), (
-            "delta flush expected before the growth threshold is hit"
-        )
-    grown = coll._ivf_worst_list_fanout("vector", 3)
-    assert grown - base >= 2, (grown, base)
+        assert coll._delta_flushes(coll.manifest.version) == i + 1
+    grown = _index_file_count(coll)
+    assert grown >= fresh + 2, (fresh, grown)
 
-    before = sorted(
-        (r["id"], round(r["dist"], 8))
-        for r in coll.search(_rows(1, dim=6, seed=5)[0]["vector"], limit=10).collect()
-    )
-    coll.flush()  # growth ≥ threshold → auto-compacts (no new DML needed)
+    before = served()
+    coll.flush()  # two deltas held → folds (no new DML needed)
     v = coll.manifest.version
     assert not os.path.isdir(coll._tombstones_dir(v)), "compacted flush folds tombstones"
-    assert coll._ivf_worst_list_fanout("vector", v) <= base + 1
-    assert coll.manifest.ivf_base_list_files == coll._ivf_worst_list_fanout("vector", v)
-    after = sorted(
-        (r["id"], round(r["dist"], 8))
-        for r in coll.search(_rows(1, dim=6, seed=5)[0]["vector"], limit=10).collect()
+    assert coll._delta_flushes(v) == 0
+    # a fresh build's file count (as the churn test bounds it: the
+    # folded snapshot may split into one more input partition)
+    assert _index_file_count(coll) <= fresh + 1, (fresh, _index_file_count(coll))
+    assert served() == before
+
+
+def test_delta_flush_writes_one_tombstone_part_of_its_killed_ids(catalog, spark):
+    """Every delta flush writes exactly one new tombstone part, equal
+    to the set of commit ids that flush killed — the base rows live
+    before it that an upsert superseded or a delete matched — and
+    carries every earlier part forward unchanged by hardlink, so no
+    flush re-reads or rewrites an earlier flush's tombstones."""
+    import os
+
+    coll = catalog.create_collection(
+        "tombparts", dim=8, distance="euclidean", fields=FIELDS,
+        layout="blocks", block_dtype="float64",
     )
-    assert before == after
+    coll.upsert(_rows(40, dim=8, seed=41))
+    coll.flush()
+
+    def live_commits():
+        return {r["id"]: r["_commit_id"] for r in coll._view.select("id", "_commit_id").collect()}
+
+    def parts(version):
+        d = coll._tombstones_dir(version)
+        return {
+            f: os.stat(os.path.join(d, f)).st_ino
+            for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")
+        }
+
+    seen: dict[str, int] = {}
+    for n, (ups, delete_type) in enumerate(
+        [(["id-1", "id-2", "id-3"], None), (["id-2", "new-1"], 4), ([], 7), (["id-5"], 4)],
+        1,
+    ):
+        before = live_commits()
+        if ups:
+            coll.upsert(
+                [dict(r, id=i) for i, r in zip(ups, _rows(len(ups), dim=8, seed=50 + n))]
+            )
+        if delete_type is not None:
+            coll.delete_where({"index_name": "type", "op": "eq", "value": delete_type})
+        coll.flush()
+        v = coll.manifest.version
+        now = parts(v)
+        assert len(now) == n and coll._delta_flushes(v) == n
+        # earlier parts are the same inodes: linked, not rewritten
+        assert {f: now[f] for f in seen} == seen
+        (new,) = set(now) - set(seen)
+        killed = spark.read.parquet(os.path.join(coll._tombstones_dir(v), new)).collect()
+        after = live_commits()
+        want = {c for i, c in before.items() if after.get(i) != c}
+        assert sorted(r[0] for r in killed) == sorted(want)
+        seen = now
+    assert coll.count() == len(live_commits())
 
 
 # -- layout="ivfpq": fused IVFADC serving (coarse lists + residual PQ
@@ -1604,18 +1675,18 @@ class _InjectedFailure(RuntimeError):
 def _fail_next_manifest_write(monkeypatch):
     """Make the next manifest write — a flush's last step, its repoint
     — raise once, as a crash right before the repoint would."""
-    from coltt_spark.catalog import Collection
+    from coltt_spark import store
 
-    real = Collection._write_manifest
+    real = store.commit
     armed = [True]
 
-    def flaky(self, *args, **kwargs):
+    def flaky(*args, **kwargs):
         if armed[0]:
             armed[0] = False
             raise _InjectedFailure("manifest write failed")
-        return real(self, *args, **kwargs)
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(Collection, "_write_manifest", flaky)
+    monkeypatch.setattr(store, "commit", flaky)
 
 
 #: dials that make a search probe every list and rerank every row, so

@@ -1304,6 +1304,43 @@ def test_upsert_and_delta_flush_job_counts(spark, tmp_path):
     assert sorted(r[0] for r in tombs) == want_tombs and len(want_tombs) == 50
 
 
+def test_second_delta_flush_job_count(spark, tmp_path):
+    """A second blocks delta flush, with a delete, writes only its own
+    files: the killed ids come from the live base (its data minus the
+    first delta's tombstone part) as ONE new tombstone part, and the
+    first part is hardlinked forward at commit, never re-read into a
+    rewritten union."""
+    import os
+
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, 1, 2).select(
+            F.concat(F.lit("r"), F.col("id").cast("string")).alias("id"),
+            (F.col("id") % 5).cast("int").alias("grp"),
+            F.array(*[F.sin(F.col("id") + k) for k in range(4)]).alias("vector"),
+        ).localCheckpoint(eager=True)
+
+    coll = Catalog(spark, str(tmp_path / "wh")).create_collection(
+        "jobcount2", dim=4, distance="euclidean",
+        fields=[IndexField("id", "string", primary_key=True), IndexField("grp", "integer")],
+        layout="blocks",
+    )
+    coll.upsert_df(batch(0, 200), dedupe_batch=False)
+    coll.flush()  # v1: full pack
+    coll.upsert_df(batch(150, 250), dedupe_batch=False)
+    coll.flush()  # v2: first delta
+    coll.upsert_df(batch(240, 300), dedupe_batch=False)  # 10 updates, 50 inserts
+    coll.delete_where({"index_name": "grp", "op": "eq", "value": 1})
+    # as measured: the first delta flush's 7 jobs plus the broadcast of
+    # the first tombstone part, which the live base is read against
+    assert _jobs_run(spark, coll.flush) == 8
+    assert coll.manifest.version == 3 and coll.count() == 300 - 60
+    parts = [f for f in os.listdir(coll._tombstones_dir(3)) if f.endswith(".parquet")]
+    assert len(parts) == 2
+
+
 def _stages_and_plans(spark, job_ids) -> tuple[int, list[str]]:
     """The stages the jobs ran and the final physical plans of the SQL
     executions those jobs belong to. A skipped stage (its shuffle

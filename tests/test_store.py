@@ -14,10 +14,14 @@ from coltt_spark import store
 
 def test_only_the_store_module_commits():
     """No module but the store renames files into place, dumps JSON
-    state or appends to a dataset in place: every persisted write
-    goes through one versioned commit."""
+    state, appends to a dataset in place, or drives a version's steps
+    (open, link forward, repoint) by hand: every persisted write goes
+    through one versioned commit, ``store.Version``."""
     pkg = pathlib.Path(coltt_spark.__file__).parent
-    banned = re.compile(r"os\.replace\(|json\.dump\(|\.mode\(\s*['\"]append['\"]\s*\)")
+    banned = re.compile(
+        r"os\.replace\(|json\.dump\(|\.mode\(\s*['\"]append['\"]\s*\)"
+        r"|store\.(begin|link_tree|commit)\("
+    )
     offenders = [
         f"{path.relative_to(pkg)}:{n}"
         for path in sorted(pkg.rglob("*.py"))
@@ -45,8 +49,9 @@ def test_version_dirs_name_drop_and_clear_leftovers(tmp_path):
 
 def test_version_commit_links_base_and_refuses_a_moved_store(tmp_path):
     """A delta version carries its base's parts forward by hardlink
-    and drops the base after the commit; a handle whose base is no
-    longer the committed version cannot commit over it."""
+    and drops the base after the commit (unless the manifest keeps
+    ``versioning``); a handle whose base is no longer the committed
+    version cannot commit over it."""
     root = str(tmp_path / "s")
     v = store.Version(root)
     pathlib.Path(v.path("a")).mkdir()
@@ -59,6 +64,9 @@ def test_version_commit_links_base_and_refuses_a_moved_store(tmp_path):
     assert (pathlib.Path(root) / "v1_a" / "part-0.parquet").read_bytes() == b"x"
     with pytest.raises(RuntimeError, match="reopen"):
         store.Version(root, base=0)
+    # a store whose manifest keeps ``versioning`` retains the prior version
+    store.Version(root, base=1).commit({"versioning": True})
+    assert store.versions(root) == [1, 2]
 
 
 def test_manifest_json_is_derived_from_the_fields():
@@ -73,9 +81,9 @@ def test_manifest_json_is_derived_from_the_fields():
     d = m.to_json()
     assert list(d) == [
         "name", "dim", "distance", "quantization", "index_design", "version",
-        "next_commit", "layout", "block_dtype", "versioning", "ivf_centroids",
-        "ivf_nprobe", "ivf_kmeans_iters", "ivf_max_list_files",
-        "ivf_base_list_files", "pq_subspaces", "pq_codes", "ivfpq_refine", "pq_opq",
+        "next_commit", "layout", "block_dtype", "versioning", "max_delta_flushes",
+        "ivf_centroids", "ivf_nprobe", "ivf_kmeans_iters",
+        "pq_subspaces", "pq_codes", "ivfpq_refine", "pq_opq",
     ]
     assert d["index_design"] == design.to_json()
     assert Manifest.from_json({**d, "unknown": 1}) == m
