@@ -42,7 +42,7 @@ import numpy as np
 
 from coltt_spark import store
 from coltt_spark.filters import compile_filter, validate_delete_key
-from coltt_spark.functions.memo import memo_columns
+from coltt_spark.functions.memo import memo_columns, select_memo
 from coltt_spark.functions.quantization import dequantize, quantize, quantize_np
 from coltt_spark.functions.vector import score as score_expr, vector_distance
 from coltt_spark.operators.search import _paginate_topk, multi_vector_search
@@ -90,8 +90,13 @@ def _top_per(df: DataFrame, key: str, n: int, pk: str) -> DataFrame:
     """Each ``key`` value's ``n`` nearest rows by (dist, pk) — ONE
     window partitioned by ``key`` (a query id or a group value): a
     keyed shuffle of few rows, never a global sort."""
-    w = Window.partitionBy(key).orderBy(F.col("dist").asc(), F.col(pk).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")
+    rn = memo_columns(
+        f"catalog.top_per{(key, pk)!r}",
+        lambda: F.row_number().over(
+            Window.partitionBy(key).orderBy(F.col("dist").asc(), F.col(pk).asc())
+        ),
+    )
+    return df.withColumn("_rn", rn).filter(f"_rn <= {int(n)}").drop("_rn")
 
 
 @dataclass
@@ -352,16 +357,77 @@ class Collection:
         vcols = self._vector_cols()
         meta_fields = [f for f in design.fields if f.type != "vector"]
         known = {f.name for f in meta_fields} | set(vcols)
-        unknown = set(df.columns) - known
+        given = set(df.columns)
+        unknown = given - known
         if unknown:
             raise ValueError(f"unknown metadata keys: {sorted(unknown)}")
 
+        # the coercion, guard, normalize and cast trees depend only on
+        # the manifest and on which fields the input carries: build
+        # them once per session, not on every batch (each Column costs
+        # gateway round-trips — hundreds per call before)
+        present = tuple(f.name for f in meta_fields if f.name in given)
+        for f in meta_fields:
+            if f.name not in present and (f.primary_key or not f.enable_null):
+                raise ValueError(f"field {f.name!r} is required")
+        shape = (
+            tuple((f.name, f.type, f.primary_key, f.enable_null) for f in meta_fields),
+            present, tuple(vcols), m.dim, m.distance, m.quantization,
+        )
+        prepared = select_memo(
+            df, f"catalog.upsert_cols{shape!r}",
+            lambda: self._upsert_cols(meta_fields, present, vcols),
+        )
+        for vc in vcols:
+            guarded, norm, normalized, stored = memo_columns(
+                f"catalog.upsert_vector{(vc, shape)!r}", lambda: self._upsert_vector(vc)
+            )
+            prepared = prepared.withColumn(vc, guarded)
+            if m.distance == "cosine":
+                # normalize-at-write so cosine ≡ |1-dot| at query time
+                # (edge/none_vectorstore.go:95-97); quantize AFTER
+                # normalizing, like the reference
+                prepared = prepared.withColumn("_nrm", norm).withColumn(
+                    vc, normalized
+                ).drop("_nrm")
+            prepared = prepared.withColumn(vc, stored)
+
+        prepared = prepared.withColumn(
+            _COMMIT, F.lit(m.next_commit) + F.monotonically_increasing_id()
+        )
+        m.next_commit += 1 << 45  # block above any partitionId<<33 offset
+        pk = design.primary_key
+        if dedupe_batch:
+            rn = memo_columns(
+                f"catalog.upsert_dedupe{pk!r}",
+                lambda: F.row_number().over(
+                    Window.partitionBy(pk).orderBy(F.col(_COMMIT).desc())
+                ),
+            )
+            prepared = prepared.withColumn("_rn", rn).filter("_rn = 1").drop("_rn")
+        order = [f.name for f in design.fields] + (
+            [] if any(f.type == "vector" for f in design.fields) else [_VEC]
+        )
+        new, n = _checkpoint_counted(select_memo(
+            prepared, f"catalog.upsert_order{tuple(order)!r}",
+            lambda: [F.col(c) for c in (*order, _COMMIT)],
+        ))
+        # no broadcast hint: the batch may be any size — AQE picks the
+        # join strategy from the materialized checkpoint stats
+        survivors = self._view.join(new.select(pk), on=pk, how="left_anti")
+        self._view = survivors.unionByName(new.select(survivors.columns))
+        self._track_upsert(new)
+        self._dirty = True
+        return n
+
+    def _upsert_cols(self, meta_fields, present: tuple[str, ...], vcols: list[str]) -> list:
+        """:meth:`upsert_df`'s coerced metadata columns (type default
+        for an absent nullable field, ``raise_error`` for a null where
+        none is allowed) and its vector columns cast to double."""
         cols: list = []
         for f in meta_fields:
             t = _SPARK_META[f.type]
-            if f.name not in df.columns:
-                if f.primary_key or not f.enable_null:
-                    raise ValueError(f"field {f.name!r} is required")
+            if f.name not in present:
                 cols.append(F.lit(_NULL_DEFAULT[f.type]).cast(t).alias(f.name))
                 continue
             c = F.col(f.name).cast(t)
@@ -372,64 +438,30 @@ class Collection:
             else:
                 c = F.coalesce(c, F.lit(_NULL_DEFAULT[f.type]).cast(t))
             cols.append(c.alias(f.name))
+        return cols + [F.col(vc).cast(T.ArrayType(T.DoubleType())).alias(vc) for vc in vcols]
 
-        prepared = df.select(
-            *cols, *[F.col(vc).cast(T.ArrayType(T.DoubleType())).alias(vc) for vc in vcols]
+    def _upsert_vector(self, vc: str) -> tuple:
+        """:meth:`upsert_df`'s trees for one vector column: the dim and
+        NaN/Inf guard, the L2 norm and the normalized vector (cosine
+        collections), and the stored float32 (or quantized) form."""
+        m = self.manifest
+        vd = F.col(vc)
+        ok = (F.size(vd) == m.dim) & ~F.exists(
+            vd, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
         )
-        for vc in vcols:
-            vd = F.col(vc)
-            ok = (F.size(vd) == m.dim) & ~F.exists(
-                vd, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-            )
-            guarded = F.coalesce(
-                F.when(ok, vd),
-                F.raise_error(f"vector {vc!r}: missing, wrong dim, or NaN/Inf").cast(
-                    T.ArrayType(T.DoubleType())
-                ),
-            )
-            prepared = prepared.withColumn(vc, guarded)
-            if m.distance == "cosine":
-                # normalize-at-write so cosine ≡ |1-dot| at query time
-                # (edge/none_vectorstore.go:95-97); quantize AFTER
-                # normalizing, like the reference
-                norm = F.sqrt(
-                    F.aggregate(F.col(vc), F.lit(0.0), lambda a, x: a + x * x)
-                )
-                prepared = prepared.withColumn("_nrm", norm).withColumn(
-                    vc,
-                    F.when(
-                        F.col("_nrm") > 0,
-                        F.transform(F.col(vc), lambda x: x / F.col("_nrm")),
-                    ).otherwise(F.col(vc)),
-                ).drop("_nrm")
-            vf = F.transform(F.col(vc), lambda x: x.cast("float"))
-            prepared = prepared.withColumn(
-                vc, quantize(m.quantization, vf) if m.quantization != "none" else vf
-            )
-
-        prepared = prepared.withColumn(
-            _COMMIT, F.lit(m.next_commit) + F.monotonically_increasing_id()
+        guarded = F.coalesce(
+            F.when(ok, vd),
+            F.raise_error(f"vector {vc!r}: missing, wrong dim, or NaN/Inf").cast(
+                T.ArrayType(T.DoubleType())
+            ),
         )
-        m.next_commit += 1 << 45  # block above any partitionId<<33 offset
-        pk = design.primary_key
-        if dedupe_batch:
-            w = Window.partitionBy(pk).orderBy(F.col(_COMMIT).desc())
-            prepared = (
-                prepared.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        order = [f.name for f in design.fields] + (
-            [] if any(f.type == "vector" for f in design.fields) else [_VEC]
-        )
-        new, n = _checkpoint_counted(prepared.select(*order, _COMMIT))
-        # no broadcast hint: the batch may be any size — AQE picks the
-        # join strategy from the materialized checkpoint stats
-        survivors = self._view.join(new.select(pk), on=pk, how="left_anti")
-        self._view = survivors.unionByName(new.select(survivors.columns))
-        self._track_upsert(new)
-        self._dirty = True
-        return n
+        norm = F.sqrt(F.aggregate(F.col(vc), F.lit(0.0), lambda a, x: a + x * x))
+        normalized = F.when(
+            F.col("_nrm") > 0, F.transform(F.col(vc), lambda x: x / F.col("_nrm"))
+        ).otherwise(F.col(vc))
+        vf = F.transform(F.col(vc), lambda x: x.cast("float"))
+        stored = quantize(m.quantization, vf) if m.quantization != "none" else vf
+        return guarded, norm, normalized, stored
 
     def delete_where(self, filter_ast: dict[str, Any]) -> None:
         """Equality/range-filter delete (edge Index(DELETE)). The
@@ -935,15 +967,9 @@ class Collection:
         payload, evaluated before the distance kernel; rows superseded
         by a delta flush are masked by the version's commit-id
         tombstones."""
-        from coltt_spark import filters
         from coltt_spark.operators import blocks
 
         m = self.manifest
-        payload_schema = self._payload_schema()
-        payload_filter = (
-            None if filter_ast is None
-            else filters.compile_filter_mask(payload_schema, filter_ast)
-        )
         tomb = self._tombstones_dir()
         if src.adc:
             kernel: dict[str, Any] = {
@@ -956,9 +982,9 @@ class Collection:
             kernel = {"dim": m.dim, "distance": self._kind, "dtype": m.block_dtype}
         return blocks.block_index_scan(
             self.spark, src.path, qvs,
-            payload_schema=payload_schema, id_alias=_COMMIT,
+            payload_schema=self._payload_schema(), id_alias=_COMMIT,
             tombstones=tomb if os.path.isdir(tomb) else None,
-            payload_filter=payload_filter, files=src.files,
+            filter_ast=filter_ast, files=src.files,
             file_query_ids=src.file_query_ids, **kernel, **mode,
         )
 
@@ -1052,11 +1078,11 @@ class Collection:
         # the projection is the same tree on every read of this shape:
         # build it once per session (a Column per name costs py4j
         # round-trips on every construction)
-        return scored.select(*memo_columns(
-            f"catalog.finish{(m.distance, tuple(names))!r}",
+        return select_memo(
+            scored, f"catalog.finish{(m.distance, tuple(names))!r}",
             lambda: [F.col(n) for n in names]
             + [score_expr(m.distance, F.col("dist")).alias("score")],
-        ))
+        )
 
     def multi_search(
         self,

@@ -23,7 +23,9 @@ deterministic task locality they mostly hit the same executors).
 
 from __future__ import annotations
 
+import json
 import os
+import struct
 import tempfile
 from collections.abc import Iterator, Sequence
 
@@ -629,31 +631,195 @@ def ivf_files(path: str, centroids: Sequence[int]) -> list[str]:
     return out
 
 
-def default_max_tasks(spark: SparkSession) -> int:
-    """Default task-group count for block-index scans. Each Python task
-    carries a fixed set-up cost on top of its scan: a 2-task identity
-    ``mapInPandas`` job costs ~120 ms against ~60 ms for a pure-JVM
-    one on 4 local cores (``tools/worker_floor.py``; ~400 ms before the
-    session's worker daemon stopped re-reading zip archives per task,
-    ~160 ms before workers moved from loopback TCP to Unix domain
-    sockets). So fewer, fatter tasks win locally; a real cluster wants
-    one task per file. Heuristic: a quarter of the parallelism, floor 8."""
-    return max(8, spark.sparkContext.defaultParallelism // 4)
+#: Index-file bytes one scan task takes before a read splits into
+#: another task. A warm scan scores ~0.1 ms per MB of page-cached
+#: float32 blocks, against a fixed cost per Python task, so a split
+#: only pays past ~100 MB. Measured on 4 local cores, exact euclidean
+#: top-10 over 128-dim float32 indexes of 8 files, median of 12
+#: interleaved runs with 1 / 2 / 4 tasks: 16 MB 131 / 131 / 160 ms,
+#: 65 MB 140 / 138 / 160, 130 MB 135 / 117 / 142, 260 MB 147 / 129 /
+#: 133 — so 128 MB per task.
+SCAN_TASK_BYTES = 128 << 20
 
 
-def _file_group_df(spark: SparkSession, files: list[str], max_tasks: int | None):
-    """One row per task, each carrying a ';'-joined group of file
-    paths — a JVM ``range(0, n, 1, n)`` picking its group from a
-    literal array, so the per-query plan has NO shuffle and ONE Python
-    hop per task (the scan's ``mapInPandas``; a ``parallelize`` source
-    would add a second Python pass to convert its rows). ``max_tasks``
-    trades the fixed per-task set-up (see :func:`default_max_tasks`)
-    against per-task scan size; at cluster scale pass len(files)."""
-    n_tasks = min(len(files), max_tasks or default_max_tasks(spark))
-    groups = F.array(*[F.lit(";".join(files[i::n_tasks])) for i in range(n_tasks)])
-    return spark.range(0, n_tasks, 1, n_tasks).select(
-        F.element_at(groups, F.col("id").cast("int") + 1).alias("paths")
+def _parallelism(spark: SparkSession) -> int:
+    """The session's core count, read over the gateway once per
+    session instead of on every scan."""
+    from coltt_spark.functions.memo import memo_columns
+
+    return memo_columns(
+        "blocks.parallelism", lambda: spark.sparkContext.defaultParallelism
     )
+
+
+def scan_tasks(
+    spark: SparkSession,
+    files: Sequence[str],
+    sizes: Sequence[int],
+    max_tasks: int | None = None,
+) -> list[list[str]]:
+    """Deal a scan's files to its tasks: ``min(cores, ceil(bytes /
+    SCAN_TASK_BYTES))`` tasks (``max_tasks`` overrides the count), never
+    more than one per file. Files go largest first to the task with the
+    fewest bytes so far (ties to the lowest task), and each task keeps
+    its files in input order."""
+    n = max_tasks or min(_parallelism(spark), -(-sum(sizes) // SCAN_TASK_BYTES))
+    n = max(1, min(n, len(files)))
+    load = [0] * n
+    dealt: list[list[int]] = [[] for _ in range(n)]
+    for i in sorted(range(len(files)), key=lambda i: (-sizes[i], i)):
+        t = min(range(n), key=lambda t: (load[t], t))
+        load[t] += sizes[i]
+        dealt[t].append(i)
+    return [[files[i] for i in sorted(ix)] for ix in dealt]
+
+
+def _json_scalar(v):
+    """``json.dumps`` fallback for numpy scalars in a filter AST."""
+    if isinstance(v, np.generic):
+        return v.item()
+    raise TypeError(f"filter value {v!r} ({type(v).__name__}) is not a JSON scalar")
+
+
+def _task_blob(header: dict, rows: np.ndarray) -> bytes:
+    """One scan task's read, as plan data: a length-prefixed JSON
+    header padded to 8 bytes, then ``rows`` (the query matrix or the
+    ADC lookup tables) as little-endian float64 — exact, no pickle."""
+    head = json.dumps(header, separators=(",", ":"), default=_json_scalar).encode()
+    head += b" " * (-(4 + len(head)) % 8)
+    body = np.ascontiguousarray(rows, dtype="<f8")
+    return struct.pack("<I", len(head)) + head + body.tobytes()
+
+
+def _read_task(blob: bytes) -> tuple[dict, np.ndarray]:
+    (n,) = struct.unpack_from("<I", blob)
+    header = json.loads(blob[4:4 + n])
+    rows = np.frombuffer(blob, dtype="<f8", offset=4 + n)
+    return header, rows.reshape(-1, header["width"]).astype(np.float64, copy=False)
+
+
+#: per-process cache of compiled payload filter masks, keyed by the
+#: payload schema and the filter AST text a task carries
+_MASKS: dict[tuple[str, str], object] = {}
+
+
+def _filter_mask(payload_schema: T.StructType, schema_key: str, ast_text: str):
+    fn = _MASKS.get((schema_key, ast_text))
+    if fn is None:
+        from coltt_spark.filters import compile_filter_mask
+
+        fn = compile_filter_mask(payload_schema, json.loads(ast_text))
+        if len(_MASKS) >= 64:
+            _MASKS.pop(next(iter(_MASKS)))
+        _MASKS[(schema_key, ast_text)] = fn
+    return fn
+
+
+def _scan_task(
+    blob: bytes,
+    *,
+    dim: int,
+    np_dtype,
+    distance: str,
+    payload_schema: T.StructType | None,
+    schema_key: str | None,
+    id_alias: str,
+    group_col: str | None,
+) -> Iterator[pd.DataFrame]:
+    """Run one task of a packed read (:func:`block_index_scan`): its
+    files scored for the queries its blob carries, each file's local
+    winners as one DataFrame."""
+    head, rows = _read_task(blob)
+    qids = np.asarray(head["qids"], dtype=np.int64)
+    live_of = None
+    if head["filter"] is not None:
+        live_of = _filter_mask(payload_schema, schema_key, head["filter"])
+    dead = _load_tombstones(head["tomb"]) if head["tomb"] else None
+    lut_row = {(q, c): i for i, (q, c) in enumerate(head.get("luts", ()))}
+    cut = {"k": head["k"], "radius": head["radius"], "per_group": head["per_group"]}
+    for p, sub in zip(head["files"], head["fq"]):
+        ids, X, norms, payload = _spool_file(p, dim, np_dtype)
+        if not len(ids):
+            continue
+        qf = qids if sub is None else qids[sub]
+        if distance == "adc":
+            c = _centroid_of(p)
+            Qf = rows[[lut_row[(int(q), c)] for q in qf]]
+        else:
+            Qf = rows if sub is None else rows[sub]
+        if (live_of is not None or group_col is not None) and payload is None:
+            raise ValueError(
+                f"index file {p} carries no payload; filtered "
+                "and grouped block search need packed metadata"
+            )
+        live = None if live_of is None else live_of(payload)
+        if dead is not None and len(dead):
+            unseen = ~np.isin(ids, dead)
+            live = unseen if live is None else (live & unseen)
+        yield _scan_file(
+            ids, X, norms, Qf, qf, distance=distance, live=live,
+            payload=payload if payload_schema is not None else None,
+            group_col=group_col, id_alias=id_alias, **cut,
+        )
+
+
+def _scan_udf(
+    out_schema: T.StructType,
+    *,
+    dim: int,
+    dtype: str,
+    distance: str,
+    payload_schema: T.StructType | None,
+    id_alias: str,
+    group_col: str | None,
+):
+    """The scan function of every packed read with these kernel
+    constants, as a ``mapInPandas`` UDF Column over a ``task`` column:
+    built (pickled, and its JVM ``PythonFunction`` created) once per
+    session, not per read. Everything that varies between reads rides
+    in the ``task`` rows (:func:`_task_blob`)."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.util import PythonEvalType
+
+    from coltt_spark.functions.memo import memo_columns
+
+    schema_key = None if payload_schema is None else payload_schema.json()
+    consts = (dim, dtype, distance, schema_key, id_alias, group_col)
+
+    def build():
+        kernel = {
+            "dim": dim, "np_dtype": _DTYPES[dtype], "distance": distance,
+            "payload_schema": payload_schema, "schema_key": schema_key,
+            "id_alias": id_alias, "group_col": group_col,
+        }
+
+        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for blob in pdf["task"]:
+                    yield from _scan_task(blob, **kernel)
+
+        udf = pandas_udf(
+            scan, returnType=out_schema,
+            functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
+        )
+        return udf(F.col("task"))
+
+    return memo_columns(f"blocks.scan_udf{consts!r}", build)
+
+
+def _task_source(spark: SparkSession, blobs: list[bytes]) -> DataFrame:
+    """One row per task, each holding its blob — a JVM ``range(0, n, 1,
+    n)`` picking its blob from literals, parsed as ONE SQL text, so the
+    per-read plan has NO shuffle and ONE Python hop per task (the
+    scan's ``mapInPandas``; a ``parallelize`` source would add a second
+    Python pass to convert its rows)."""
+    n = len(blobs)
+    lits = [f"X'{b.hex()}'" for b in blobs]
+    pick = lits[0] if n == 1 else f"element_at(array({', '.join(lits)}), CAST(id AS INT) + 1)"
+    text = f"SELECT {pick} AS task FROM range(0, {n}, 1, {n})"
+    # the session's own sql(): pyspark's wrapper spends gateway calls
+    # converting an (empty) argument list on every call
+    return DataFrame(spark._jsparkSession.sql(text), spark)
 
 
 def _centroid_of(path: str) -> int:
@@ -681,7 +847,7 @@ def block_index_scan(
     max_tasks: int | None = None,
     payload_schema: T.StructType | None = None,
     id_alias: str = "id",
-    payload_filter=None,
+    filter_ast: dict | None = None,
     tombstones: str | None = None,
     group_col: str | None = None,
     per_group: int = 1,
@@ -711,11 +877,13 @@ def block_index_scan(
     With ``payload_schema``, each winner row carries its packed
     payload columns, so a caller gets id+dist+metadata in ONE job,
     batches included; pass ``id_alias`` when a payload column is
-    itself named ``id``. ``payload_filter`` (``fn(pa.Table) -> bool
-    ndarray``, e.g. from :func:`coltt_spark.filters.compile_filter_mask`)
-    makes this the FILTERED fast path: the mask is evaluated per file
-    against the packed payload — which carries every metadata column —
-    and the local winners are taken over survivors only.
+    itself named ``id``. ``filter_ast`` (a :mod:`coltt_spark.filters`
+    AST) makes this the FILTERED fast path: it compiles to a vectorized
+    mask (:func:`coltt_spark.filters.compile_filter_mask`) evaluated per
+    file against the packed payload — which carries every metadata
+    column — and the local winners are taken over survivors only. It is
+    compiled here once, so an unknown column raises at call time, and
+    again in each worker process, cached by its AST text.
     ``tombstones`` points at a directory of parquet files listing
     commit ids superseded since the last compact (the delta-flush
     design): those rows are masked out of every file too, so a base
@@ -736,8 +904,18 @@ def block_index_scan(
     residual lookup table for THAT list (the query residual differs
     per coarse centroid — the defining IVFADC detail). Each file's
     LUTs are picked by its partition path; the query ids come from
-    the LUT keys and ``queries`` is ignored."""
-    np_dtype = _DTYPES[dtype]
+    the LUT keys and ``queries`` is ignored.
+
+    The read is a *prepared scan*: ONE ``mapInPandas`` whose UDF holds
+    only the kernel constants (:func:`_scan_udf`, built once per
+    session), over a ``range`` source whose rows carry everything the
+    read varies — files, queries or LUTs, cut, filter, tombstones — as
+    plan data (:func:`_task_blob`). Files are dealt to tasks by bytes
+    (:func:`scan_tasks`); ``max_tasks`` overrides the task count."""
+    from coltt_spark import filters
+
+    if dtype not in _DTYPES:
+        raise ValueError(f"unknown block dtype {dtype!r}")
     if radius is not None and group_col is not None:
         raise ValueError("radius and group_col modes are mutually exclusive")
     if (distance == "adc") != (adc_luts is not None):
@@ -751,16 +929,16 @@ def block_index_scan(
     else:
         qids = sorted(int(q) for q in queries)
         Q = np.asarray([[float(x) for x in queries[q]] for q in qids], dtype=np.float64)
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    qpos = {q: j for j, q in enumerate(qids)}
-    fq = None
-    if file_query_ids is not None:
-        fq = {
-            p: np.asarray(sorted(qpos[int(q)] for q in qs), dtype=np.int64)
-            for p, qs in file_query_ids.items()
-        }
     if files is None:
         files = _index_files(path)
+    # file -> positions of the queries that score it (None: every
+    # query); a file no query probes is never scanned
+    subs: dict[str, list[int] | None] = dict.fromkeys(files)
+    if file_query_ids is not None:
+        qpos = {q: j for j, q in enumerate(qids)}
+        for p in files:
+            subs[p] = sorted(qpos[int(q)] for q in file_query_ids.get(p, ()))
+        files = [p for p in files if subs[p]]
     out_fields = [
         T.StructField("query_id", T.LongType(), False),
         T.StructField(id_alias, T.LongType(), False),
@@ -775,50 +953,41 @@ def block_index_scan(
             )
         out_fields += list(payload_schema)
     out_schema = T.StructType(out_fields)
-    want_payload = payload_schema is not None
     if group_col is not None and (
-        not want_payload or group_col not in {f.name for f in payload_schema}
+        payload_schema is None or group_col not in {f.name for f in payload_schema}
     ):
         raise ValueError("group_col must name a packed payload column")
+    filter_text = None
+    if filter_ast is not None:
+        if payload_schema is None:
+            raise ValueError("filter_ast needs the payload_schema it filters")
+        filters.compile_filter_mask(payload_schema, filter_ast)
+        filter_text = json.dumps(filter_ast, separators=(",", ":"), default=_json_scalar)
     # an explicitly-passed empty list (every probed inverted list was
     # empty) is a valid, empty scan
     if not files:
         return spark.createDataFrame([], out_schema)
-    cut = {"k": k, "radius": radius, "per_group": per_group}
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dead = _load_tombstones(tombstones) if tombstones else None
-        for pdf in batches:
-            for paths in pdf["paths"]:
-                for p in paths.split(";"):
-                    sub = None if fq is None else fq.get(p, ())
-                    if sub is not None and not len(sub):
-                        continue
-                    ids, X, norms, payload = _spool_file(p, dim, np_dtype)
-                    if not len(ids):
-                        continue
-                    qf = qid_arr if sub is None else qid_arr[sub]
-                    if distance == "adc":
-                        c = _centroid_of(p)
-                        Qf = np.stack([luts[(int(q), c)] for q in qf])
-                    else:
-                        Qf = Q if sub is None else Q[sub]
-                    if (payload_filter is not None or group_col is not None) and payload is None:
-                        raise ValueError(
-                            f"index file {p} carries no payload; filtered "
-                            "and grouped block search need packed metadata"
-                        )
-                    live = None if payload_filter is None else payload_filter(payload)
-                    if dead is not None and len(dead):
-                        unseen = ~np.isin(ids, dead)
-                        live = unseen if live is None else (live & unseen)
-                    yield _scan_file(
-                        ids, X, norms, Qf, qf, distance=distance, live=live,
-                        payload=payload if want_payload else None,
-                        group_col=group_col, id_alias=id_alias, **cut,
-                    )
-
-    return _file_group_df(spark, files, max_tasks).mapInPandas(scan, out_schema)
+    read = {
+        "qids": qids, "k": k, "radius": radius, "per_group": per_group,
+        "filter": filter_text, "tomb": tombstones,
+    }
+    blobs = []
+    for group in scan_tasks(spark, files, [os.stat(p).st_size for p in files], max_tasks):
+        head = dict(read, files=group, fq=[subs[p] for p in group])
+        if distance == "adc":
+            lists = {_centroid_of(p) for p in group}
+            head["luts"] = sorted(pair for pair in luts if pair[1] in lists)
+            rows = np.stack([luts[pair] for pair in head["luts"]])
+        else:
+            rows = Q
+        head["width"] = rows.shape[1]
+        blobs.append(_task_blob(head, rows))
+    udf = _scan_udf(
+        out_schema, dim=dim, dtype=dtype, distance=distance,
+        payload_schema=payload_schema, id_alias=id_alias, group_col=group_col,
+    )
+    src = _task_source(spark, blobs)
+    return DataFrame(src._jdf.mapInPandas(udf._jc, False, None), spark)
 
 
 def block_index_topk(
@@ -861,7 +1030,6 @@ def block_index_topk_batch(
     dtype: str = "float32",
     max_tasks: int | None = None,
     tombstones: str | None = None,
-    payload_filter=None,
     files: list[str] | None = None,
     file_query_ids: dict[str, Sequence[int]] | None = None,
     adc_luts: dict[tuple[int, int], Sequence[float]] | None = None,
@@ -881,8 +1049,8 @@ def block_index_topk_batch(
 
     local = block_index_scan(
         spark, path, queries, dim=dim, k=k, distance=distance, dtype=dtype,
-        max_tasks=max_tasks, tombstones=tombstones, payload_filter=payload_filter,
-        files=files, file_query_ids=file_query_ids, adc_luts=adc_luts,
+        max_tasks=max_tasks, tombstones=tombstones, files=files,
+        file_query_ids=file_query_ids, adc_luts=adc_luts,
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc())
     return (

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from coltt_spark.filters import compile_filter
+from coltt_spark.functions.memo import sort_memo
 from coltt_spark.functions.vector import score as score_expr
 from coltt_spark.functions.vector import sql_double, vector_distance
 
@@ -46,7 +47,10 @@ def _paginate_topk(scored: DataFrame, limit: int, offset: int, tie_break: str) -
     TakeOrderedAndProject (per-partition top-K + driver merge); the
     offset is applied on the ≤ offset+limit collected rows, never on
     the full scan."""
-    ordered = scored.orderBy(F.col("dist").asc(), F.col(tie_break).asc())
+    ordered = sort_memo(
+        scored, f"search.topk_order{tie_break!r}",
+        lambda: [F.col("dist").asc(), F.col(tie_break).asc()],
+    )
     if offset:
         return ordered.offset(offset).limit(limit)
     return ordered.limit(limit)

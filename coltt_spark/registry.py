@@ -2201,6 +2201,12 @@ _TOUCHED: dict[str, int] = {
     "knn_f8": 15,
     "knn_sq8": 15,
     "stream_ingest": 15,
+    # the top-k sort order is a memoized Seq (prepared packed scan)
+    "knn_cosine": 15,
+    "knn_euclidean": 15,
+    "knn_filtered": 15,
+    "knn_manhattan": 15,
+    "knn_pagination": 15,
     # one LUT builder for PQ and IVF-PQ
     "ann_pq": 15,
     "ann_ivfpq": 15,

@@ -703,3 +703,158 @@ def test_float32_euclidean_winners_are_exact_near_zero(spark):
             ]
     finally:
         shutil.rmtree(wh, ignore_errors=True)
+
+
+def _prepared_collections(spark, root, layouts=("blocks", "ivf", "ivfpq")):
+    """Small clean collections of every packed layout over one seeded
+    corpus, for the prepared-scan tests."""
+    import random
+
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    rng = random.Random(23)
+    rows = [
+        {"id": f"r{i:03d}", "grp": i % 4, "vector": [rng.gauss(0, 1) for _ in range(8)]}
+        for i in range(240)
+    ]
+    cat = Catalog(spark, root)
+    out = {}
+    for layout in layouts:
+        kw = {"ivf_centroids": 4, "ivf_nprobe": 2} if layout != "blocks" else {}
+        if layout == "ivfpq":
+            kw.update(pq_subspaces=4, pq_codes=16)
+        coll = cat.create_collection(
+            f"prep_{layout}", dim=8, distance="euclidean",
+            fields=[IndexField("id", "string", primary_key=True), IndexField("grp", "integer")],
+            layout=layout, **kw,
+        )
+        coll.upsert(rows)
+        coll.flush()
+        out[layout] = coll
+    return out, rng
+
+
+def test_prepared_scan_construction_py4j_calls(spark, tmp_path):
+    """Building a clean blocks search is a handful of gateway
+    round-trips: the scan UDF and every tail Column are memoized per
+    session and the read's data rides in ONE SQL text, so a warm
+    construction stays far under the ~170 calls a per-query UDF,
+    per-group literal source and fresh Columns cost. Counted at the
+    one choke point every gateway message passes (as
+    ``tools/count_py4j.py`` does)."""
+    from py4j.clientserver import ClientServerConnection
+
+    colls, rng = _prepared_collections(spark, str(tmp_path / "wh"), ("blocks",))
+    coll = colls["blocks"]
+    ast = {"index_name": "grp", "op": "eq", "value": 1}
+    coll.search([rng.gauss(0, 1) for _ in range(8)], limit=5, filter_ast=ast)  # warm
+    calls = [0]
+    orig = ClientServerConnection.send_command
+
+    def counted(self, *a, **k):
+        calls[0] += 1
+        return orig(self, *a, **k)
+
+    ClientServerConnection.send_command = counted
+    try:
+        coll.search([rng.gauss(0, 1) for _ in range(8)], limit=5)
+        coll.search([rng.gauss(0, 1) for _ in range(8)], limit=5, offset=2, filter_ast=ast)
+    finally:
+        ClientServerConnection.send_command = orig
+    assert calls[0] <= 2 * 40, calls[0]
+
+
+def test_searches_share_one_scan_udf(spark, tmp_path, monkeypatch):
+    """Two searches of one collection reuse ONE scan UDF: the function
+    is pickled (and its JVM PythonFunction made) once per session, not
+    per query — the read's data travels in the plan."""
+    import pyspark.sql.functions as PF
+
+    from coltt_spark.functions.memo import clear_column_memo
+    from coltt_spark.operators import blocks
+
+    colls, rng = _prepared_collections(spark, str(tmp_path / "wh"), ("blocks",))
+    coll = colls["blocks"]
+    made, used = [], []
+    real_udf, real_scan_udf = PF.pandas_udf, blocks._scan_udf
+
+    def counting_udf(*a, **k):
+        made.append(1)
+        return real_udf(*a, **k)
+
+    def spy(*a, **k):
+        col = real_scan_udf(*a, **k)
+        used.append(col)
+        return col
+
+    monkeypatch.setattr(PF, "pandas_udf", counting_udf)
+    monkeypatch.setattr(blocks, "_scan_udf", spy)
+    clear_column_memo()
+    try:
+        r1 = coll.search([rng.gauss(0, 1) for _ in range(8)], limit=5).collect()
+        r2 = coll.search([rng.gauss(0, 1) for _ in range(8)], limit=5).collect()
+    finally:
+        clear_column_memo()
+    assert len(made) == 1 and len(used) == 2 and used[0] is used[1]
+    assert r1 != r2
+
+
+def test_prepared_scans_are_lazy_and_independent(spark, tmp_path):
+    """Each read's DataFrame carries its own query: build two reads
+    first, collect them in reverse order, and each returns exactly
+    what it returns when built and collected alone — on blocks, ivf
+    and ivfpq (refined), single and batched. Nothing about a read
+    lives outside its plan."""
+    colls, rng = _prepared_collections(spark, str(tmp_path / "wh"))
+    q1, q2 = ([rng.gauss(0, 1) for _ in range(8)] for _ in range(2))
+    b1 = {i: [rng.gauss(0, 1) for _ in range(8)] for i in range(3)}
+    b2 = {i: [rng.gauss(0, 1) for _ in range(8)] for i in range(3)}
+    reads = []
+    for layout, coll in colls.items():
+        kw = {"refine": 20} if layout == "ivfpq" else {}
+        reads.append((lambda c=coll, kw=kw: c.search(q1, limit=5, **kw),
+                      lambda c=coll, kw=kw: c.search(q2, limit=5, **kw)))
+        reads.append((lambda c=coll, kw=kw: c.search_batch(b1, limit=4, **kw),
+                      lambda c=coll, kw=kw: c.search_batch(b2, limit=4, **kw)))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for first, second in reads:
+        want1, want2 = rows(first()), rows(second())
+        d1, d2 = first(), second()
+        got2, got1 = rows(d2), rows(d1)
+        assert got1 == want1 and got2 == want2 and got1 != got2
+
+
+def test_scan_tasks_sized_by_index_bytes(spark, tmp_path, monkeypatch):
+    """Scan tasks follow the index bytes, not the core count: a small
+    index scans in ONE task, an index of several ``SCAN_TASK_BYTES``
+    budgets in ``ceil(bytes / budget)`` tasks capped at the cores, and
+    an explicit ``max_tasks`` wins."""
+    import os
+
+    from coltt_spark.operators import blocks
+
+    colls, rng = _prepared_collections(spark, str(tmp_path / "wh"), ("blocks",))
+    coll = colls["blocks"]
+    files = blocks._index_files(coll._blocks_dir("vector"))
+    total = sum(os.stat(f).st_size for f in files)
+    q = [rng.gauss(0, 1) for _ in range(8)]
+
+    def tasks(**kw):
+        return blocks.block_index_scan(
+            spark, coll._blocks_dir("vector"), {0: q}, dim=8, distance="euclidean", **kw
+        ).rdd.getNumPartitions()
+
+    assert len(files) >= 3
+    assert tasks() == 1
+    assert tasks(max_tasks=2) == 2
+    monkeypatch.setattr(blocks, "SCAN_TASK_BYTES", -(-total // 2) - 1)
+    assert tasks() == 3
+    cores = spark.sparkContext.defaultParallelism
+    many = [f"/idx/part-{i:05d}.parquet" for i in range(cores + 5)]
+    groups = blocks.scan_tasks(spark, many, [blocks.SCAN_TASK_BYTES] * len(many))
+    assert len(groups) == cores
+    assert len(blocks.scan_tasks(spark, many, [1] * len(many), max_tasks=3)) == 3

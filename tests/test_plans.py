@@ -1203,28 +1203,41 @@ def test_av_dedup_plan_banded_no_allpairs(spark):
 
 
 def test_block_scan_source_is_jvm_range_one_python_hop(spark, tmp_path):
-    """The block scan's file-group source must be JVM-native (a Range),
+    """The block scan's task source must be JVM-native (a Range),
     not a Python RDD: ``Scan ExistingRDD`` would convert its rows in a
     second Python worker pass inside every scan task. The scan's
     ``mapInPandas`` is the only Python operator, with one task per
-    file group, groups dealt round-robin in partition order."""
+    file group, groups dealt by bytes, largest file first to the
+    lightest task."""
     import random
 
     from coltt_spark.catalog import Catalog
-    from coltt_spark.operators.blocks import _file_group_df
+    from coltt_spark.operators.blocks import _task_source, scan_tasks
     from coltt_spark.plans import executed_plan
     from coltt_spark.schema import IndexField
 
     files = [f"/blocks/part-{i:05d}.parquet" for i in range(11)]
+    sizes = [100 + i for i in range(11)]
     for max_tasks in (4, 32):
-        fdf = _file_group_df(spark, files, max_tasks)
+        groups = scan_tasks(spark, files, sizes, max_tasks)
         n = min(len(files), max_tasks)
+        assert len(groups) == n
+        assert sorted(f for g in groups for f in g) == files
+        if n == 4:
+            # sizes 110..107 open the four tasks, 106..103 each join
+            # the lightest, then 102..100 fill tasks 0..2 (a tie goes
+            # to the lowest task); a task keeps input order
+            assert groups == [
+                [files[2], files[3], files[10]],
+                [files[1], files[4], files[9]],
+                [files[0], files[5], files[8]],
+                [files[6], files[7]],
+            ]
+        fdf = _task_source(spark, [";".join(g).encode() for g in groups])
         assert fdf.rdd.getNumPartitions() == n
         assert "Scan ExistingRDD" not in executed_plan(fdf)
-        got = fdf.rdd.glom().map(lambda rows: [r.paths for r in rows]).collect()
-        assert [p for part in got for p in part] == [
-            ";".join(files[i::n]) for i in range(n)
-        ]
+        got = fdf.rdd.glom().map(lambda rows: [bytes(r.task) for r in rows]).collect()
+        assert [p for part in got for p in part] == [";".join(g).encode() for g in groups]
         assert all(len(part) == 1 for part in got)
 
     rng = random.Random(5)
@@ -1415,8 +1428,10 @@ def test_blocks_search_batch_is_one_scan_no_join_back(spark, tmp_path):
     packed scan as ``search``: the winners carry their metadata from
     the packed payload and one window keyed by query_id cuts them, so
     the plan has ONE ``MapInPandas``, no join, and no read of the
-    snapshot's data dir. Job count pinned as measured: the scan with
-    the window's shuffle write, then the window."""
+    snapshot's data dir. Job count pinned as measured: ONE job — an
+    index this small scans in one task (``SCAN_TASK_BYTES``), and a
+    single partition already satisfies the window's distribution, so
+    no exchange splits the job."""
     import random
     import re
 
@@ -1443,7 +1458,7 @@ def test_blocks_search_batch_is_one_scan_no_join_back(spark, tmp_path):
     got = []
     jobs = _run_in_group(spark, lambda: got.extend(df.collect()))
     assert len(got) == 4 * 5 and {r["grp"] for r in got} <= {0, 1, 2}
-    assert len(jobs) == 2
+    assert len(jobs) == 1
     assert plan.count("MapInPandas") == 1, plan[:1500]
     assert "Join" not in plan, plan[:1500]
     assert not re.search(re.escape(coll._data_dir(1)) + r"(?![\w])", plan), plan[:1500]

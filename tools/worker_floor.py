@@ -8,7 +8,12 @@ session it reports the median of 20 warm runs of:
 
 - ``jvm_job_ms``: a pure-JVM 2-task job (``range(0, 2, 1, 2).collect()``);
 - ``python_job_ms``: the same job through a 2-task identity
-  ``mapInPandas``;
+  ``mapInPandas``, built once before the clock starts, like the JVM
+  job, so the two figures differ only in what runs;
+- ``python_build_ms``: building that ``mapInPandas`` DataFrame alone
+  (pickling the function, creating its JVM ``PythonFunction``, one
+  analysis) — a cost a query pays per construction unless it reuses a
+  built UDF;
 - ``worker_invalidate_caches_ms``: ``importlib.invalidate_caches()``
   timed inside a worker (the slower of the two tasks), the call
   pyspark makes at the start of every Python task;
@@ -70,7 +75,9 @@ def main() -> None:
     spark = get_spark(app_name="worker_floor")
     src = spark.range(0, 2, 1, 2)
     jvm = _median_ms(lambda: src.collect())
-    py = _median_ms(lambda: src.mapInPandas(_identity, "id long").collect())
+    py_df = src.mapInPandas(_identity, "id long")
+    py = _median_ms(lambda: py_df.collect())
+    build = _median_ms(lambda: src.mapInPandas(_identity, "id long"))
     timed = src.mapInPandas(_time_invalidate_caches, "ms double")
     for _ in range(WARMUP):
         timed.collect()
@@ -86,6 +93,7 @@ def main() -> None:
                 "runs": RUNS,
                 "jvm_job_ms": round(jvm, 1),
                 "python_job_ms": round(py, 1),
+                "python_build_ms": round(build, 1),
                 "worker_invalidate_caches_ms": round(inval, 1),
             }
         )
